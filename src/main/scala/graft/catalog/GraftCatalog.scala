@@ -253,16 +253,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                       .map(_.stripPrefix("branch-")).sorted.mkString(", ")})")
           }
       }
-    if (!meta.storage.contains("mor"))
-      throw new IllegalStateException(
-        s"$ident is copy-on-write — superseded versions are rewritten away; " +
-          "VERSION AS OF needs the mor layout")
-    val floor = math.max(meta.horizon, meta.collapsed.getOrElse(Long.MinValue))
-    if (pos < floor)
-      throw new IllegalArgumentException(
-        s"VERSION AS OF $pos predates the retained history (floor $floor) — " +
-          "those versions have been collapsed; size the compaction cadence " +
-          "to the audit horizon")
+    CdcApplier.requireHistory(meta, ident.toString, pos, "VERSION AS OF")
     new GraftTable(dir.toString,
       GraftTable.tableSchema(spark, dir.toString), asOf = Some(pos),
       spjCapable = true)

@@ -150,7 +150,7 @@ class GraftProcedure(root: Path, op: String) extends UnboundProcedure with Bound
         throw new IllegalStateException(s"no graft table state at $dir"))
       require(meta.storage.contains("mor"),
         "history needs the mor layout — copy-on-write rewrites supersede history")
-      val floorRaw = math.max(meta.horizon, meta.collapsed.getOrElse(Long.MinValue))
+      val floorRaw = meta.asOfFloor
       val posCounts = CdcApplier.readStored(spark, Some(meta), Seq(dir))
         .groupBy(org.apache.spark.sql.functions.col(CdcApplier.POS))
         .count().collect()
@@ -187,7 +187,7 @@ class GraftProcedure(root: Path, op: String) extends UnboundProcedure with Bound
       val meta = TargetMeta.read(hconf, target).getOrElse(
         throw new IllegalStateException(s"no graft table state at $dir"))
       val fs = target.getFileSystem(hconf)
-      val floorD = math.max(meta.horizon, meta.collapsed.getOrElse(Long.MinValue))
+      val floorD = meta.asOfFloor
       val buckets = CdcApplier.bucketIds(fs, target)
       val files = buckets.flatMap { b =>
         fs.listStatus(new Path(target, s"${CdcApplier.BUCKET}=$b"))
@@ -546,7 +546,7 @@ class GraftProcedure(root: Path, op: String) extends UnboundProcedure with Bound
         CdcApplier.dropTag(spark, dir, input.getUTF8String(1).toString)
       val meta = TargetMeta.read(hconf, new Path(dir)).getOrElse(
         throw new IllegalStateException(s"no graft table state at $dir"))
-      val floorT = math.max(meta.horizon, meta.collapsed.getOrElse(Long.MinValue))
+      val floorT = meta.asOfFloor
       val schema = StructType(Seq(
         StructField("tag", StringType, nullable = false),
         StructField("position", LongType, nullable = false),

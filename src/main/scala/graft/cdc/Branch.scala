@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import CdcApplier.{BUCKET, DEL, POS, TargetMeta}
+import CdcApplier.{BUCKET, POS, TargetMeta}
 
 /** BRANCHES + write-audit-publish (q264; public design points: Iceberg
   * branching and the WAP pattern, Delta's staging-table idiom). A tag
@@ -79,14 +79,19 @@ object Branch {
       new Path(mainDir))
       .exists(_.tags.getOrElse(Map.empty).contains(pinTag(name)))
 
-  /** The branch point: main's published high-water position at create time. */
-  private def branchFrom(spark: SparkSession, mainDir: String, name: String): Long = {
+  /** Main's meta, with a typed error unless it pins branch `name`. */
+  private[graft] def mainMeta(spark: SparkSession, mainDir: String, name: String): TargetMeta = {
     val meta = TargetMeta.read(spark.sparkContext.hadoopConfiguration,
       new Path(mainDir)).getOrElse(
       throw new IllegalStateException(s"no graft table state at $mainDir"))
-    meta.tags.getOrElse(Map.empty).getOrElse(pinTag(name),
-      throw new IllegalArgumentException(s"no branch '$name' of $mainDir"))
+    if (!meta.tags.exists(_.contains(pinTag(name))))
+      throw new IllegalArgumentException(s"no branch '$name' of $mainDir")
+    meta
   }
+
+  /** The branch point: main's published high-water position at create time. */
+  private def branchFrom(spark: SparkSession, mainDir: String, name: String): Long =
+    mainMeta(spark, mainDir, name).tags.get(pinTag(name))
 
   /** Open a branch at main's current published high-water mark. Mor-only
     * (a branch read pins main AS OF the branch point — only mor retains
@@ -139,26 +144,30 @@ object Branch {
         bucketCols = meta.bucketCols, rangeBounds = meta.rangeBounds))
   }
 
-  /** The branch lineage's state: main AS OF the branch point, overlaid
-    * with the branch's deltas, resolved latest-per-key. Main's files are
-    * read in place — zero copies at any size. */
-  def snapshot(spark: SparkSession, mainDir: String, name: String): DataFrame = {
-    val from = branchFrom(spark, mainDir, name)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val meta = TargetMeta.read(hconf, new Path(mainDir)).get
-    val pk = meta.pkCols.getOrElse(
-      throw new IllegalStateException(s"mor layout at $mainDir has no persisted PK"))
-    val base = CdcApplier.readStored(spark, Some(meta), Seq(mainDir))
-      .filter(col(POS) <= from)
-    val dir = branchDir(mainDir, name)
-    val fs = fsOf(spark, dir)
+  /** The branch lineage's live rows: main AS OF the branch point ∪ the
+    * branch's deltas, resolved by [[CdcApplier.live]] (`below` as there).
+    * `meta` is main's ([[mainMeta]]); each side's paths are its whole dir,
+    * bucket dirs, or none. Main's files are read in place and serve the
+    * persisted schema; the branch dir has no meta of its own and may stage
+    * columns main does not have yet, so it keeps mergeSchema inference. */
+  private[graft] def lineage(spark: SparkSession, mainDir: String, name: String,
+      meta: TargetMeta, mainPaths: Seq[String], branchPaths: Seq[String],
+      below: DataFrame => DataFrame = identity): DataFrame = {
+    val base = CdcApplier.storedSlice(spark, Some(meta), mainDir, mainPaths)
+      .filter(col(POS) <= meta.tags.get(pinTag(name)))
     val merged =
-      if (CdcApplier.bucketIds(fs, new Path(dir)).isEmpty) base
-      else base.unionByName(
-        spark.read.option("mergeSchema", true).parquet(dir), allowMissingColumns = true)
-    CdcApplier.logicalize(
-      CdcApplier.resolveOnRead(merged, pk).filter(!col(DEL)).drop(DEL, BUCKET),
-      Some(meta))
+      if (branchPaths.isEmpty) base
+      else base.unionByName(CdcApplier.storedSlice(spark, None,
+        branchDir(mainDir, name), branchPaths), allowMissingColumns = true)
+    CdcApplier.live(merged, Some(meta), below)
+  }
+
+  /** The branch lineage's state ([[lineage]] over both whole dirs). Main's
+    * files are read in place — zero copies at any size. */
+  def snapshot(spark: SparkSession, mainDir: String, name: String): DataFrame = {
+    val dir = branchDir(mainDir, name)
+    lineage(spark, mainDir, name, mainMeta(spark, mainDir, name), Seq(mainDir),
+      if (CdcApplier.bucketIds(fsOf(spark, dir), new Path(dir)).isEmpty) Nil else Seq(dir))
   }
 
   /** Bucket-pruned point lookup against the branch lineage — the audit
@@ -169,9 +178,7 @@ object Branch {
     * carried onto branches). */
   def pointLookup(spark: SparkSession, mainDir: String, name: String,
       keys: DataFrame): DataFrame = {
-    val from = branchFrom(spark, mainDir, name)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val meta = TargetMeta.read(hconf, new Path(mainDir)).get
+    val meta = mainMeta(spark, mainDir, name)
     val pk = meta.pkCols.getOrElse(
       throw new IllegalStateException(s"mor layout at $mainDir has no persisted PK"))
     val bucketCols = meta.bucketCols.getOrElse(pk)
@@ -181,32 +188,15 @@ object Branch {
       .select(CdcApplier.bucketExprCols(bucketCols.map(col), meta.numBuckets,
         meta.rangeBounds).as(BUCKET))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    // main reads serve the persisted schema (readStored); branch delta
-    // dirs keep mergeSchema inference — they carry no meta of their own
-    // and may stage columns main does not have yet
-    def pruned(dir: String, fs: FileSystem,
-        m: Option[CdcApplier.TargetMeta]): Option[DataFrame] = {
-      val present = CdcApplier.bucketIds(fs, new Path(dir)).toSet
-      val read = buckets.filter(present)
-      if (read.isEmpty) None
-      else Some(CdcApplier.readStored(spark, m,
-        read.map(b => s"$dir/$BUCKET=$b"), Some(dir)))
+    def pruned(dir: String): Seq[String] = {
+      val present = CdcApplier.bucketIds(fsOf(spark, dir), new Path(dir)).toSet
+      buckets.filter(present).map(b => s"$dir/$BUCKET=$b")
     }
-    val mainSlice = pruned(mainDir, fsOf(spark, mainDir), Some(meta))
-      .map(_.filter(col(POS) <= from))
-    val dir = branchDir(mainDir, name)
-    val branchSlice = pruned(dir, fsOf(spark, dir), None)
-    val merged = (mainSlice, branchSlice) match {
-      case (Some(m), Some(b)) => m.unionByName(b, allowMissingColumns = true)
-      case (Some(m), None)    => m
-      case (None, Some(b))    => b
-      case (None, None)       => return snapshot(spark, mainDir, name).limit(0)
-    }
-    CdcApplier.logicalize(
-      CdcApplier.resolveOnRead(merged, pk)
-        .join(broadcast(keys), keys.columns.toSeq, "left_semi")
-        .filter(!col(DEL)).drop(DEL, BUCKET),
-      Some(meta))
+    // the keys are the PK or its prefix, so the semi-join may run below
+    // the resolve (a key's versions agree on its PK)
+    lineage(spark, mainDir, name, meta, pruned(mainDir),
+      pruned(branchDir(mainDir, name)),
+      below = _.join(broadcast(keys), keys.columns.toSeq, "left_semi"))
   }
 
   /** Publish the branch into main atomically — the WAP "publish" step.
@@ -232,44 +222,43 @@ object Branch {
       val branchMeta = TargetMeta.read(hconf, new Path(dir))
       // q283×q287: registered secondary indexes must see the published
       // branch rows — but fast-forward is file RENAMES, no apply, so the
-      // maintenance envelope is reconstructed from state: the branch's
-      // resolved deltas (after images at their own positions) joined with
-      // main's CURRENT rows for those keys (before images — main cannot
-      // have advanced past the branch point, checked above; the lookup is
-      // bucket-pruned). MATERIALIZED before the renames (it reads the very
-      // files about to move), applied after the publish — the store-then-
-      // index order every apply uses. A key born and deleted entirely on
-      // the branch has nothing to retire and drops out. Cost ∝ the staged
-      // delta, never either table.
+      // maintenance envelope is reconstructed from state: each staged key
+      // at its newest staged position, its lineage row (after image, absent
+      // when the branch deleted it) and main's CURRENT row (before image —
+      // main cannot have advanced past the branch point, checked above).
+      // Both lookups are bucket-pruned. MATERIALIZED before the renames (it
+      // reads the very files about to move), applied after the publish —
+      // the store-then-index order every apply uses. A key born and
+      // deleted entirely on the branch has nothing to retire and drops
+      // out. Cost ∝ the staged delta, never either table.
       val ffIdxEnv: Option[org.apache.spark.sql.DataFrame] =
         if (meta.indexes.exists(_.nonEmpty) &&
             CdcApplier.bucketIds(fs, new Path(dir)).nonEmpty) {
           val pk = meta.pkCols.getOrElse(throw new IllegalStateException(
             s"indexed table at $mainDir has no persisted PK"))
-          val lpk = pk.map(CdcApplier.logicalName(Some(meta), _))
-          val deltas = CdcApplier.logicalize(
-            spark.read.option("mergeSchema", true).parquet(dir), Some(meta))
-          val after = CdcApplier.resolveOnRead(deltas, lpk).as("a")
-          val dataCols = after.columns.toSeq
-            .filterNot(c => c == POS || c == DEL || c == BUCKET)
-          val keys = CdcApplier.resolveOnRead(deltas, lpk)
-            .select(lpk.map(col): _*)
+          val staged = spark.read.option("mergeSchema", true).parquet(dir)
+            .groupBy(pk.map(col): _*).agg(max(col(POS)).as(POS))
+          val keys = staged.select(pk.map(col): _*)
+          val after = pointLookup(spark, mainDir, name, keys).as("a")
           val before = CdcApplier.pointLookup(spark, mainDir, keys)
             .drop(POS).as("b")
-          val joinCond = lpk.map(k => col(s"a.$k") <=> col(s"b.$k")).reduce(_ && _)
-          val bExists = col(s"b.${lpk.head}").isNotNull
+          val dataCols = after.columns.toSeq.filterNot(_ == POS)
+          def on(side: String) =
+            pk.map(k => col(s"k.$k") <=> col(s"$side.$k")).reduce(_ && _)
+          val aExists = col(s"a.${pk.head}").isNotNull
+          val bExists = col(s"b.${pk.head}").isNotNull
           def img(side: String) =
             struct(dataCols.map(c => col(s"$side.$c").as(c)): _*)
-          val env = after.join(before, joinCond, "left_outer")
+          val env = staged.as("k")
+            .join(after, on("a"), "left_outer")
+            .join(before, on("b"), "left_outer")
             .withColumn("op",
-              when(col(s"a.$DEL"), lit("delete"))
-                .when(bExists, lit("update")).otherwise(lit("insert")))
-            // branch-born-and-deleted keys: nothing in main, nothing in
-            // the index — drop (a delete with no before image has no key)
-            .filter(!(col("op") === "delete" && !bExists))
-            .select(col("op"), col(s"a.$POS").as("next_position"),
+              when(aExists, when(bExists, lit("update")).otherwise(lit("insert")))
+                .when(bExists, lit("delete")))
+            .filter(col("op").isNotNull)
+            .select(col("op"), col(s"k.$POS").as("next_position"),
               when(bExists, img("b")).as("before"),
-              when(col("op") =!= "delete", img("a")).as("after"))
+              when(aExists, img("a")).as("after"))
             .localCheckpoint()
           Some(env)
         } else None

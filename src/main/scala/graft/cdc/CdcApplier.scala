@@ -192,7 +192,27 @@ object CdcApplier {
         * [[graft.cdc.IndexLifecycle.indexDir]] sibling; its layout/schema
         * are ITS meta — this entry is only the store-side registration
         * every apply consults for automatic maintenance. */
-      indexes: Option[Map[String, String]] = None)
+      indexes: Option[Map[String, String]] = None) {
+
+    /** The as-of floor: the lowest position whose history is still
+      * retained — above both the replay horizon and every collapse. */
+    def asOfFloor: Long = math.max(horizon, collapsed.getOrElse(Long.MinValue))
+  }
+
+  /** The as-of guard every history read shares: mor only (copy-on-write
+    * rewrites superseded versions away), and `pos` at or above the as-of
+    * floor — below it the collapsed (wrong) history would answer. */
+  private[graft] def requireHistory(
+      meta: TargetMeta, where: String, pos: Long, what: String): Unit = {
+    if (!meta.storage.contains("mor"))
+      throw new IllegalStateException(
+        s"$where is copy-on-write — superseded versions are rewritten away; " +
+          s"$what needs the mor layout")
+    if (pos < meta.asOfFloor)
+      throw new IllegalArgumentException(
+        s"$what at $pos predates the retained history (floor ${meta.asOfFloor}) — " +
+          "those versions have been collapsed")
+  }
 
   object TargetMeta {
     private def metaPath(target: Path) = new Path(target, ".graft_meta")
@@ -626,18 +646,12 @@ object CdcApplier {
       org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType]
         .fields.map(_.copy(nullable = true))))
 
-  /** Stored-table read WITHOUT per-read schema inference (optimization
-    * round 15, guide §6): `mergeSchema=true` plans a distributed footer
-    * read of EVERY data file on EVERY call — at 100 TB that is millions of
-    * footer reads per query, and locally it is one extra Spark job per
-    * read site. The applier maintains `.graft_meta.schemaJson` as the
-    * table-wide truth (creation, additive evolution and widening all
-    * refresh it in the same batch, MOR appends union it in
-    * [[applyBatchMor]] before the delta lands), so the persisted schema
-    * serves directly; targets without one (pre-upgrade) keep the
-    * inference path. Robustness across an additive publish interrupted
-    * mid-swap is unchanged: buckets not yet rewritten read the new column
-    * as NULL — exactly what the merged inference served. */
+  /** Stored-table read against the persisted schema
+    * (`.graft_meta.schemaJson`, which creation, additive evolution,
+    * widening and MOR appends keep current), so no read plans a footer
+    * pass over every data file. Targets without one (pre-upgrade) infer
+    * with `mergeSchema`. Files written before an additive evolution
+    * surface the new columns as NULL. */
   private[graft] def readStored(
       spark: SparkSession, meta: Option[TargetMeta], paths: Seq[String],
       basePath: Option[String] = None): DataFrame = {
@@ -649,46 +663,65 @@ object CdcApplier {
     }
   }
 
+  /** The stored rows at `paths` under `dir`: the whole table
+    * (`Seq(dir)`), bucket dirs or data files; no paths is an empty frame
+    * typed from the persisted schema. */
+  private[graft] def storedSlice(spark: SparkSession, meta: Option[TargetMeta],
+      dir: String, paths: Seq[String]): DataFrame =
+    if (paths.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        storedSchema(meta).getOrElse(
+          throw new IllegalStateException(s"no graft table state at $dir")))
+    else readStored(spark, meta, paths, if (paths == Seq(dir)) None else Some(dir))
+
+  /** The one live read every serving path shares (snapshot, as-of, point
+    * and range lookups, the connector, the index seed, the coercing sink):
+    * the stored rows at `paths` ([[storedSlice]]), cut at `asOf` if given,
+    * resolved to their live rows by [[live]]. */
+  private[graft] def liveRead(
+      spark: SparkSession, meta: Option[TargetMeta], targetDir: String,
+      paths: Seq[String], asOf: Option[Long] = None,
+      below: DataFrame => DataFrame = identity,
+      keepBucket: Boolean = false): DataFrame = {
+    val stored = storedSlice(spark, meta, targetDir, paths)
+    live(asOf.fold(stored)(p => stored.filter(col(POS) <= p)), meta, below, keepBucket)
+  }
+
+  /** Stored versions → live rows: logicalize (so `below` and the result
+    * speak LOGICAL names), apply `below`, resolve latest-per-key when the
+    * layout holds versions ([[needsResolve]]), drop tombstones and
+    * `_graft_deleted`. `_graft_pos` stays; `graft_bucket` stays only with
+    * `keepBucket`. `below` must not change a key's latest version — on a
+    * version-bearing layout only PK-referencing filters qualify (a key's
+    * versions agree on its PK). Key columns never rename, so the physical
+    * PK partitions the resolve. */
+  private[graft] def live(versions: DataFrame, meta: Option[TargetMeta],
+      below: DataFrame => DataFrame = identity,
+      keepBucket: Boolean = false): DataFrame = {
+    val filtered = below(logicalize(versions, meta))
+    val resolved =
+      if (needsResolve(meta))
+        resolveOnRead(filtered, meta.flatMap(_.pkCols).getOrElse(
+          throw new IllegalStateException("version-bearing layout has no persisted PK")))
+      else filtered
+    val rows = resolved.filter(!col(DEL))
+    if (keepBucket) rows.drop(DEL) else rows.drop(DEL, BUCKET)
+  }
+
   /** Read the live table state: tombstones filtered, layout columns dropped
-    * (`_graft_pos` retained for offset introspection). The persisted schema
-    * (or, pre-upgrade, mergeSchema inference) keeps the read robust across
-    * an additive-evolution publish interrupted mid-swap (some buckets
-    * already carry the new column, some not yet).
-    * A target whose every row has been deleted AND compacted away has no
-    * bucket dirs left — that is a valid empty table, typed from the schema
-    * persisted in `.graft_meta`, not a read error. */
+    * (`_graft_pos` retained for offset introspection). A target whose every
+    * row has been deleted AND compacted away has no bucket dirs left — that
+    * is a valid empty table, typed from the schema persisted in
+    * `.graft_meta`, not a read error. */
   def snapshot(spark: SparkSession, targetDir: String): DataFrame = {
     val target = new Path(targetDir)
     val hconf = spark.sparkContext.hadoopConfiguration
     val fs = target.getFileSystem(hconf)
     openTarget(fs, target) // a crashed rebucket's .bak may hold the data
-    if (bucketIds(fs, target).nonEmpty) {
-      val meta = TargetMeta.read(hconf, target)
-      val raw = readStored(spark, meta, Seq(targetDir))
-      val resolved =
-        if (needsResolve(meta))
-          resolveOnRead(raw, meta.flatMap(_.pkCols).getOrElse(
-            throw new IllegalStateException(
-              s"version-bearing layout at $targetDir has no persisted PK")))
-        else raw
-      logicalize(resolved.filter(!col(DEL)).drop(DEL, BUCKET), meta)
-    } else {
-      val meta = TargetMeta.read(spark.sparkContext.hadoopConfiguration, target)
-      val schema = meta
-        .flatMap(_.schemaJson)
-        .map(j => org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType])
-        .getOrElse(throw new IllegalStateException(s"no graft table state at $targetDir"))
-      logicalize(
-        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-          .drop(DEL, BUCKET), meta)
-    }
+    liveRead(spark, TargetMeta.read(hconf, target), targetDir,
+      if (bucketIds(fs, target).nonEmpty) Seq(targetDir) else Nil)
   }
 
-  /** Latest-per-key resolution for merge-on-read layouts: within each PK,
-    * the newest `_graft_pos` wins. Replayed batches append value-identical
-    * (key, pos) duplicates; any of them is the same winner, so the
-    * row_number tie is harmless. Runs AFTER bucket pruning on lookups, so
-    * the window only sorts the touched buckets' rows. */
   /** The layout's bucket-assignment expression: hash (default) or the
     * range-split count-of-bounds-below (a codegen'd sum of comparisons —
     * monotone in the key, so bucket ids follow key order and a range scan
@@ -799,13 +832,16 @@ object CdcApplier {
       x += 1
     }
     // bucket buckets(i) → partition i (mod parts): 1 bucket per task when
-    // parts == buckets.size. Lookup is one O(1) array index per row;
-    // element_at is 1-based; ids absent from `buckets` carry no rows.
-    val arr = new Array[Int](buckets.max + 1)
+    // parts == buckets.size. Lookup is one O(1) array index per row; an id
+    // outside `buckets` (a gap, negative, or above the max) reads a null
+    // slot and fails loudly — only those rows pay the check.
+    val arr = new Array[Integer](buckets.max + 1)
     buckets.zipWithIndex.foreach { case (b, i) =>
-      arr(b) = slotOfPartition(i % parts).intValue
+      arr(b) = slotOfPartition(i % parts)
     }
-    element_at(typedLit(arr.toSeq), col(BUCKET) + 1)
+    coalesce(get(typedLit(arr.toSeq), col(BUCKET)),
+      raise_error(concat(lit("bucket id "), col(BUCKET).cast("string"),
+        lit(s" is not one of the ${buckets.size} buckets this write covers"))))
   }
 
   /** Sorted bucket write (q262): all of a bucket's rows land in ONE task
@@ -827,6 +863,11 @@ object CdcApplier {
       .write.partitionBy(BUCKET).mode("overwrite").parquet(dest)
   }
 
+  /** Latest-per-key resolution for merge-on-read layouts: within each PK,
+    * the newest `_graft_pos` wins. Replayed batches append value-identical
+    * (key, pos) duplicates; any of them is the same winner, so the
+    * row_number tie is harmless. Runs AFTER bucket pruning on lookups, so
+    * the window only sorts the touched buckets' rows. */
   private[graft] def resolveOnRead(df: DataFrame, pkCols: Seq[String]): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(pkCols.map(col): _*).orderBy(col(POS).desc)
@@ -1143,24 +1184,8 @@ object CdcApplier {
     openTarget(target.getFileSystem(hconf), target)
     val meta = TargetMeta.read(hconf, target).getOrElse(
       throw new IllegalStateException(s"no graft table state at $targetDir"))
-    if (!meta.storage.contains("mor"))
-      throw new IllegalStateException(
-        s"$targetDir is copy-on-write — superseded versions are rewritten away; " +
-          "time travel needs the mor layout (or a lake format's version log)")
-    val floor = math.max(meta.horizon, meta.collapsed.getOrElse(Long.MinValue))
-    if (pos < floor)
-      throw new IllegalArgumentException(
-        s"as-of position $pos predates the retained history (floor $floor) — " +
-          "those versions have been collapsed; size the compaction cadence " +
-          "to the audit horizon")
-    val pkCols = meta.pkCols.getOrElse(
-      throw new IllegalStateException(s"mor layout at $targetDir has no persisted PK"))
-    logicalize(
-      resolveOnRead(
-        readStored(spark, Some(meta), Seq(targetDir)).filter(col(POS) <= pos),
-        pkCols)
-        .filter(!col(DEL)).drop(DEL, BUCKET),
-      Some(meta))
+    requireHistory(meta, targetDir, pos, "time travel")
+    liveRead(spark, Some(meta), targetDir, Seq(targetDir), asOf = Some(pos))
   }
 
   // ---- column mapping (q258) ----------------------------------------------
@@ -1350,18 +1375,11 @@ object CdcApplier {
     val target = new Path(targetDir)
     val meta = TargetMeta.read(hconf, target).getOrElse(
       throw new IllegalStateException(s"no graft table state at $targetDir"))
-    if (!meta.storage.contains("mor"))
-      throw new IllegalStateException(
-        s"$targetDir is copy-on-write — superseded versions are rewritten away; " +
-          "tags need the mor layout")
     require(name.nonEmpty && name.matches("[A-Za-z0-9_.\\-]+"),
       s"tag name '$name' must be [A-Za-z0-9_.-]+")
     require(!name.forall(_.isDigit),
       s"tag name '$name' is all digits — VERSION AS OF would read it as a position")
-    val floor = math.max(meta.horizon, meta.collapsed.getOrElse(Long.MinValue))
-    if (pos < floor)
-      throw new IllegalArgumentException(
-        s"tag '$name' at $pos predates the retained history (floor $floor)")
+    requireHistory(meta, targetDir, pos, s"tag '$name'")
     meta.maxPos.foreach { hi =>
       if (pos > hi) throw new IllegalArgumentException(
         s"tag '$name' at $pos is beyond the published high-water mark $hi")
@@ -1446,15 +1464,7 @@ object CdcApplier {
       openTargetForWrite(fs, target)
       val meta = TargetMeta.read(hconf, target).getOrElse(
         throw new IllegalStateException(s"no graft table state at $targetDir"))
-      if (!meta.storage.contains("mor"))
-        throw new IllegalStateException(
-          s"$targetDir is copy-on-write — superseded versions are rewritten away; " +
-            "rollback needs the mor layout")
-      val floor = math.max(meta.horizon, meta.collapsed.getOrElse(Long.MinValue))
-      if (pos < floor)
-        throw new IllegalArgumentException(
-          s"rollback to $pos predates the retained history (floor $floor) — " +
-            "those versions have been collapsed")
+      requireHistory(meta, targetDir, pos, "rollback")
       val hi = meta.maxPos.getOrElse(
         throw new IllegalStateException(s"$targetDir has no published high-water mark"))
       if (pos >= hi) (hi, Seq.empty[Int]) // already at that state — empty commit
@@ -1530,16 +1540,12 @@ object CdcApplier {
     val pkCols = meta.pkCols.getOrElse(
       throw new IllegalStateException(s"no persisted key columns at $targetDir"))
     val keyCol = meta.bucketCols.getOrElse(pkCols).head
-    if (hi < lo) return snapshot(spark, targetDir).limit(0)
+    if (hi < lo) return liveRead(spark, Some(meta), targetDir, Nil)
     // covering buckets: pure arithmetic over the persisted split points
     val buckets = (bounds.count(_ <= lo) to bounds.count(_ <= hi)).map(Int.box)
-    val pruned = readStored(spark, Some(meta), Seq(targetDir))
+    liveRead(spark, Some(meta), targetDir, Seq(targetDir), below = _
       .filter(col(BUCKET).isin(buckets: _*))
-      .filter(col(keyCol) >= lo && col(keyCol) <= hi)
-    val resolved =
-      if (needsResolve(Some(meta))) resolveOnRead(pruned, pkCols)
-      else pruned
-    logicalize(resolved.filter(!col(DEL)).drop(DEL, BUCKET), Some(meta))
+      .filter(col(keyCol) >= lo && col(keyCol) <= hi))
   }
 
   /** Change-data feed FROM a merge-on-read target: reconstruct the CDC
@@ -1571,14 +1577,7 @@ object CdcApplier {
     openTarget(target.getFileSystem(hconf), target)
     val meta = TargetMeta.read(hconf, target).getOrElse(
       throw new IllegalStateException(s"no graft table state at $targetDir"))
-    if (!meta.storage.contains("mor"))
-      throw new IllegalStateException(
-        s"$targetDir is copy-on-write — superseded versions are rewritten away; " +
-          "the change feed needs the mor layout")
-    val floor = math.max(meta.horizon, meta.collapsed.getOrElse(Long.MinValue))
-    if (fromPos < floor)
-      throw new IllegalArgumentException(
-        s"change feed from $fromPos predates the retained history (floor $floor)")
+    requireHistory(meta, targetDir, fromPos, "the change feed")
     val pkCols = meta.pkCols.getOrElse(
       throw new IllegalStateException(s"mor layout at $targetDir has no persisted PK"))
     // bucket pruning off the per-bucket high-water marks: a bucket whose
@@ -1800,7 +1799,7 @@ object CdcApplier {
     val buckets = keys
       .select(bucketExpr(bucketCols, numBuckets, meta.rangeBounds).as(BUCKET))
       .distinct().collect().map(_.getInt(0)).sorted
-    if (buckets.isEmpty) return snapshot(spark, targetDir).limit(0)
+    if (buckets.isEmpty) return liveRead(spark, Some(meta), targetDir, Nil)
     // One bounded collect of the distinct key tuples feeds every column's
     // IN-list (contract-bounded like the bucket collect above).
     val keyRows = keys.select(lookupCols.map(col): _*).distinct().collect()
@@ -1818,29 +1817,18 @@ object CdcApplier {
     val perBucket = buckets.map(b => FileStats.selectBucketFiles(
       fsL, new Path(target, s"$BUCKET=$b"), inFilters))
     val keptFiles = perBucket.flatMap(_._1).map(_.getPath.toString)
-    val pruned =
-      if (keptFiles.isEmpty && perBucket.map(_._2).sum > 0)
-        return snapshot(spark, targetDir).limit(0)
-      else if (keptFiles.size < perBucket.map(_._2).sum)
-        readStored(spark, Some(meta), keptFiles.toIndexedSeq, Some(targetDir))
-      else readStored(spark, Some(meta), Seq(targetDir))
-        .filter(col(BUCKET).isin(buckets.map(Int.box): _*))
-    val rowGroupPruned = lookupCols.zipWithIndex.foldLeft(pruned) {
-      case (df, (pk, i)) =>
-        val vals = keyRows.map(_.get(i)).distinct
-        df.filter(col(pk).isin(vals: _*))
-    }
-    val matched = rowGroupPruned
-      .join(broadcast(keys), lookupCols, "left_semi")
-    // version-bearing layouts (mor deltas, outstanding deletion vectors)
-    // resolve latest-per-key AFTER pruning (all versions of a key share its
-    // bucket and key values, so pruning keeps them together; the window
-    // sorts only the matched rows) — a stale upsert must not outlive its
-    // newer tombstone.
-    val resolved =
-      if (needsResolve(Some(meta))) resolveOnRead(matched, pkCols)
-      else matched
-    logicalize(resolved.filter(!col(DEL)).drop(DEL, BUCKET), Some(meta))
+    val fileSkipped = keptFiles.size < perBucket.map(_._2).sum
+    // all versions of a key share its bucket and key values, so the
+    // pruning and the semi-join below keep them together: version-bearing
+    // layouts resolve only the matched rows
+    liveRead(spark, Some(meta), targetDir,
+      if (fileSkipped) keptFiles.toIndexedSeq else Seq(targetDir), below = { df =>
+        val pruned =
+          if (fileSkipped) df else df.filter(col(BUCKET).isin(buckets.map(Int.box): _*))
+        lookupCols.zipWithIndex.foldLeft(pruned) { case (d, (pk, i)) =>
+          d.filter(col(pk).isin(keyRows.map(_.get(i)).distinct: _*))
+        }.join(broadcast(keys), lookupCols, "left_semi")
+      })
   }
 
   /** [[snapshot]] for callers that must distinguish "this target was never

@@ -63,7 +63,7 @@ object CoercingSink {
     * activation over an existing primary) is backfilled in full. */
   def replicateBuckets(
       spark: SparkSession, targetDir: String, secondaryDir: String, buckets: Seq[Int]): Unit = {
-    import CdcApplier.{BUCKET, DEL, POS}
+    import CdcApplier.{BUCKET, POS}
     val hconf = spark.sparkContext.hadoopConfiguration
     val secondary = new Path(secondaryDir)
     val fs = secondary.getFileSystem(hconf)
@@ -75,20 +75,13 @@ object CoercingSink {
       else buckets
     if (effective.isEmpty) return
 
-    val meta = CdcApplier.TargetMeta.read(hconf, new Path(targetDir))
-    val raw = CdcApplier.readStored(spark, meta, Seq(targetDir))
-      .filter(col(BUCKET).isin(effective.map(Int.box).toIndexedSeq: _*))
-    // A merge-on-read primary holds multiple versions per key in its
-    // deltas — resolve latest-per-key first, or the replica would carry
-    // superseded images and rows whose tombstone is newer.
-    val resolved =
-      if (meta.exists(_.storage.contains("mor")))
-        CdcApplier.resolveOnRead(raw, meta.flatMap(_.pkCols).getOrElse(
-          throw new IllegalStateException(s"mor layout at $targetDir has no persisted PK")))
-      else raw
-    val touched = resolved
-      .filter(!col(DEL))
-      .drop(DEL, POS)
+    // the primary's live rows (version-bearing layouts resolved, so the
+    // replica never carries superseded images or masked rows), bucket kept
+    // for the replica's layout
+    val touched = CdcApplier.liveRead(spark,
+      CdcApplier.TargetMeta.read(hconf, new Path(targetDir)), targetDir, Seq(targetDir),
+      below = _.filter(col(BUCKET).isin(effective.map(Int.box).toIndexedSeq: _*)),
+      keepBucket = true).drop(POS)
     val tmp = new Path(secondaryDir + ".tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
     coerce(touched).write.partitionBy(BUCKET).mode("overwrite").parquet(tmp.toString)

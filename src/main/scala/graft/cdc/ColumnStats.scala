@@ -239,70 +239,76 @@ object ColumnStats {
       .filter(col("_hv").isNotNull)
       .groupBy(col("_i"), col("_hv")).agg(count(lit(1)).as("_c"))
       .localCheckpoint()
-    // R-7 bounds: a value-count row covers global 0-based ranks
-    // [cum - c, cum); the value at rank r is the covering row's. Keep only
-    // rows covering some quantile's floor/ceil rank — ≤ 2(k-1) rows per
-    // column reach the driver (the contract-bounded collect class).
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("_i")).orderBy(col("_hv"))
-    val cum = vc
-      .withColumn("_cum",
-        sum(col("_c")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("_n", sum(col("_c")).over(Window.partitionBy(col("_i"))))
-    val needed = (1 until k).map { j =>
-      val h = (col("_n") - lit(1L)).cast("double") * lit(j.toDouble / k)
-      val loR = floor(h); val hiR = ceil(h)
-      (col("_cum") - col("_c") <= loR && loR < col("_cum")) ||
-        (col("_cum") - col("_c") <= hiR && hiR < col("_cum"))
-    }.reduce(_ || _)
-    val picked = cum.filter(needed)
-      .select(col("_i"), col("_hv"), (col("_cum") - col("_c")).as("_lo"),
-        col("_cum").as("_hi"), col("_n"))
-      .collect()
-    val byCol = picked.groupBy(_.getInt(0))
-    val interiorOf = varying.zipWithIndex.flatMap { case ((c, _, _, _, _), i) =>
-      byCol.get(i).map { rowsI =>
-        val n = rowsI.head.getAs[Long]("_n")
-        def valueAt(r: Long): Double = rowsI.find(x =>
-          x.getAs[Long]("_lo") <= r && r < x.getAs[Long]("_hi"))
-          .getOrElse(throw new IllegalStateException(
-            s"histogram rank $r uncovered for '$c'")).getAs[Double]("_hv")
-        // Spark's Percentile interpolation formula, verbatim (the
-        // exact-quantile engine's outCols expression in driver math —
-        // identical IEEE ops over identical operands)
-        c -> (1 until k).map { j =>
-          val h = (n - 1).toDouble * (j.toDouble / k)
-          val loR = math.floor(h).toLong; val hiR = math.ceil(h).toLong
-          if (loR == hiR) valueAt(loR)
-          else valueAt(loR) * (hiR - h) + valueAt(hiR) * (h - loR)
+    // the checkpoint's blocks are released on every exit, so repeated
+    // ANALYZEs never accumulate cached RDDs
+    try {
+      // R-7 bounds: a value-count row covers global 0-based ranks
+      // [cum - c, cum); the value at rank r is the covering row's. Keep only
+      // rows covering some quantile's floor/ceil rank — ≤ 2(k-1) rows per
+      // column reach the driver (the contract-bounded collect class).
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(col("_i")).orderBy(col("_hv"))
+      val cum = vc
+        .withColumn("_cum",
+          sum(col("_c")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
+        .withColumn("_n", sum(col("_c")).over(Window.partitionBy(col("_i"))))
+      val needed = (1 until k).map { j =>
+        val h = (col("_n") - lit(1L)).cast("double") * lit(j.toDouble / k)
+        val loR = floor(h); val hiR = ceil(h)
+        (col("_cum") - col("_c") <= loR && loR < col("_cum")) ||
+          (col("_cum") - col("_c") <= hiR && hiR < col("_cum"))
+      }.reduce(_ || _)
+      val picked = cum.filter(needed)
+        .select(col("_i"), col("_hv"), (col("_cum") - col("_c")).as("_lo"),
+          col("_cum").as("_hi"), col("_n"))
+        .collect()
+      val byCol = picked.groupBy(_.getInt(0))
+      val interiorOf = varying.zipWithIndex.flatMap { case ((c, _, _, _, _), i) =>
+        byCol.get(i).map { rowsI =>
+          val n = rowsI.head.getAs[Long]("_n")
+          def valueAt(r: Long): Double = rowsI.find(x =>
+            x.getAs[Long]("_lo") <= r && r < x.getAs[Long]("_hi"))
+            .getOrElse(throw new IllegalStateException(
+              s"histogram rank $r uncovered for '$c'")).getAs[Double]("_hv")
+          // Spark's Percentile interpolation formula, verbatim (the
+          // exact-quantile engine's outCols expression in driver math —
+          // identical IEEE ops over identical operands)
+          c -> (1 until k).map { j =>
+            val h = (n - 1).toDouble * (j.toDouble / k)
+            val loR = math.floor(h).toLong; val hiR = math.ceil(h).toLong
+            if (loR == hiR) valueAt(loR)
+            else valueAt(loR) * (hiR - h) + valueAt(hiR) * (h - loR)
+          }
+        }
+      }.toMap
+      // per-bin NDV over the same frame: bin id = #{interior bounds strictly
+      // below the value} (boundary values land in the LOWER bin, repeated
+      // bounds leave singleton runs); rows are distinct values, so a plain
+      // count per (column, bin) IS the bin's NDV
+      val binAssign = varying.zipWithIndex.foldLeft(lit(-1)) {
+        case (acc, ((c, _, _, _, _), i)) =>
+          interiorOf.get(c).fold(acc) { interior =>
+            val e = interior.map(b =>
+              when(lit(b) < col("_hv"), 1).otherwise(0)).reduce(_ + _)
+            when(col("_i") === i, e).otherwise(acc)
+          }
+      }
+      val perBin = vc.withColumn("_bin", binAssign)
+        .groupBy(col("_i"), col("_bin")).agg(count(lit(1)).as("_ndv"))
+        .collect()
+        .map(r => (r.getInt(0), r.getAs[Int]("_bin")) -> r.getAs[Long]("_ndv"))
+        .toMap
+      varying.zipWithIndex.foreach { case ((c, _, nonNull, lo, hi), i) =>
+        interiorOf.get(c).foreach { interior =>
+          val bounds = lo +: interior :+ hi
+          val bins = (0 until k).map(j =>
+            (bounds(j), bounds(j + 1), math.max(1L, perBin.getOrElse((i, j), 1L))))
+          resolved(c) = Hist(nonNull.toDouble / k, bins)
         }
       }
-    }.toMap
-    // per-bin NDV over the same frame: bin id = #{interior bounds strictly
-    // below the value} (boundary values land in the LOWER bin, repeated
-    // bounds leave singleton runs); rows are distinct values, so a plain
-    // count per (column, bin) IS the bin's NDV
-    val binAssign = varying.zipWithIndex.foldLeft(lit(-1)) {
-      case (acc, ((c, _, _, _, _), i)) =>
-        interiorOf.get(c).fold(acc) { interior =>
-          val e = interior.map(b =>
-            when(lit(b) < col("_hv"), 1).otherwise(0)).reduce(_ + _)
-          when(col("_i") === i, e).otherwise(acc)
-        }
-    }
-    val perBin = vc.withColumn("_bin", binAssign)
-      .groupBy(col("_i"), col("_bin")).agg(count(lit(1)).as("_ndv"))
-      .collect()
-      .map(r => (r.getInt(0), r.getAs[Int]("_bin")) -> r.getAs[Long]("_ndv"))
-      .toMap
-    varying.zipWithIndex.foreach { case ((c, _, nonNull, lo, hi), i) =>
-      interiorOf.get(c).foreach { interior =>
-        val bounds = lo +: interior :+ hi
-        val bins = (0 until k).map(j =>
-          (bounds(j), bounds(j + 1), math.max(1L, perBin.getOrElse((i, j), 1L))))
-        resolved(c) = Hist(nonNull.toDouble / k, bins)
-      }
-    }
+    } finally vc.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.foreach(_.unpersist(blocking = false))
     resolved.toMap
   }
 

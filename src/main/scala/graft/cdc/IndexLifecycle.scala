@@ -193,7 +193,6 @@ object IndexLifecycle {
       case None => Set.empty
     }
     val metaNow = TargetMeta.read(hconf, store).get
-    val resolveNeeded = CdcApplier.needsResolve(Some(metaNow))
     val todo = CdcApplier.bucketIds(fs, store).filterNot(done).take(maxBuckets)
     // The whole ≤maxBuckets slice seeds as ONE apply (optimization round
     // 15): per-bucket applies each rewrote every index bucket the slice's
@@ -204,16 +203,8 @@ object IndexLifecycle {
     // lands AFTER the apply, so a crash mid-slice re-seeds the slice,
     // which is idempotent (same keys, same positions).
     if (todo.nonEmpty) {
-      val live = {
-        val raw = CdcApplier.readStored(spark, Some(metaNow),
-          todo.map(b => s"$storeDir/$BUCKET=$b"), Some(storeDir))
-        val logical = CdcApplier.logicalize(raw, Some(metaNow))
-        val lpk = metaNow.pkCols.get.map(CdcApplier.logicalName(Some(metaNow), _))
-        val resolved =
-          if (resolveNeeded) CdcApplier.resolveOnRead(logical, lpk)
-          else logical
-        resolved.filter(!col(DEL))
-      }
+      val live = CdcApplier.liveRead(spark, Some(metaNow), storeDir,
+        todo.map(b => s"$storeDir/$BUCKET=$b"))
       // seed rows apply AT THEIR OWN POSITIONS: a change that raced the
       // seed (already maintained into the index at position p) re-applies
       // value-identical at the same p — LWW folds it; a LATER change

@@ -744,7 +744,7 @@ class GraftRelation(
 }
 
 object GraftScan {
-  import CdcApplier.{BUCKET, DEL}
+  import CdcApplier.BUCKET
 
   /** Safe, exact Filter→Column translations (null semantics identical to
     * the engine's own evaluation of the same predicate). Anything else is
@@ -869,8 +869,9 @@ object GraftScan {
   }.getOrElse(all)
 
   /** The inner declarative read: pruned bucket dirs → file-level stats
-    * skipping (q250) → (PK-safe filters) → mor resolve → tombstone filter →
-    * (remaining filters) → projection. `onFileSkip(kept, total)` reports the
+    * skipping (q250) → the shared live read ([[CdcApplier.liveRead]], with
+    * the PK-safe filters below its resolve) → remaining filters →
+    * projection. `onFileSkip(kept, total)` reports the
     * data-skipping outcome when sidecar statistics were consulted — the
     * seam scan descriptions and the q250 gate audit through. */
   private[sources] def planRead(
@@ -882,82 +883,40 @@ object GraftScan {
       branchPruned: Option[(Seq[Int], Seq[Int])] = None): DataFrame = {
     require(Seq(asOf, changesFrom, branchOf).count(_.isDefined) <= 1,
       "asOfPos / changesFrom / branch are mutually exclusive read modes")
-    // Branch-lineage mode (q277): main AS OF the branch point ∪ the
-    // branch's staged deltas, resolved latest-per-key — Branch.snapshot's
-    // semantics with the connector's bucket pruning on BOTH sides (the
-    // branch copies main's layout, so one pruning arithmetic covers both).
-    // Branches are mor-only, so the read always resolves; only
-    // PK-referencing pushed filters apply below the resolve.
+    def applyFilters(df: DataFrame, fs: Array[Filter]): DataFrame =
+      fs.flatMap(toColumn).foldLeft(df)(_.filter(_))
+    // Branch-lineage mode (q277): Branch.snapshot's lineage with the
+    // connector's bucket pruning on BOTH sides (the branch copies main's
+    // layout, so one pruning arithmetic covers both). Branches are
+    // mor-only, so the read always resolves; only PK-referencing pushed
+    // filters apply below the resolve.
     branchOf.foreach { name =>
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val from = graft.cdc.Branch.point(spark, targetDir, name)
-      val bdir = graft.cdc.Branch.branchDir(targetDir, name)
-      val meta = TargetMeta.read(hconf, new Path(targetDir))
-      val pkCols = meta.flatMap(_.pkCols).getOrElse(
+      val meta = graft.cdc.Branch.mainMeta(spark, targetDir, name)
+      val pkCols = meta.pkCols.getOrElse(
         throw new IllegalStateException(s"branch read of $targetDir needs a persisted PK"))
-      def emptyB = spark.createDataFrame(java.util.Collections.emptyList[Row](), required)
-      def rd(dir: String, bs: Seq[Int]): Option[DataFrame] =
-        if (bs.isEmpty) None
-        // main serves the persisted schema; the branch delta dir keeps
-        // mergeSchema inference (no meta of its own, may stage new columns)
-        else Some(CdcApplier.readStored(spark,
-          if (dir == targetDir) meta else None,
-          bs.map(b => s"$dir/${CdcApplier.BUCKET}=$b"), Some(dir)))
-      val mainSlice = rd(targetDir, buckets)
-        .map(_.filter(col(CdcApplier.POS) <= from))
-      val branchSlice = rd(bdir, branchPruned.map(_._1).getOrElse(Seq.empty))
-      val merged = (mainSlice, branchSlice) match {
-        case (Some(m), Some(b)) => m.unionByName(b, allowMissingColumns = true)
-        case (Some(m), None)    => m
-        case (None, Some(b))    => b
-        case (None, None)       => return emptyB
-      }
-      val raw = CdcApplier.logicalize(merged, meta)
-      // Pushed filters and the logicalized frame both speak LOGICAL names;
-      // a column-mapped table (q258) whose PK was renamed must partition
-      // and resolve on the logical spelling — resolving on the physical
-      // pkCols fails analysis, and a renamed pushed PK filter would
-      // silently never qualify for the below-resolve slot. (PK columns can
-      // never be dropped — dropColumn refuses layout identity — so the
-      // logical PK always exists on the logicalized frame.)
-      val logicalPk = pkCols.map(c => CdcApplier.logicalName(meta, c))
-      val (below, above) = pushed.partition(_.references.toSet.subsetOf(logicalPk.toSet))
-      def applyF(df: DataFrame, fs: Array[Filter]): DataFrame =
-        fs.flatMap(toColumn).foldLeft(df)(_.filter(_))
-      val resolved = CdcApplier.resolveOnRead(applyF(raw, below), logicalPk)
-      val live = applyF(resolved.filter(!col(DEL)), above)
-      return live.select(required.fieldNames.map(col).toIndexedSeq: _*)
+      val bdir = graft.cdc.Branch.branchDir(targetDir, name)
+      val (below, above) = pushed.partition(_.references.toSet.subsetOf(pkCols.toSet))
+      val live = graft.cdc.Branch.lineage(spark, targetDir, name, meta,
+        buckets.map(b => s"$targetDir/$BUCKET=$b"),
+        branchPruned.map(_._1).getOrElse(Seq.empty).map(b => s"$bdir/$BUCKET=$b"),
+        below = applyFilters(_, below))
+      return applyFilters(live, above).select(required.fieldNames.map(col).toIndexedSeq: _*)
     }
     // change-feed mode: the envelope IS the relation — CdcApplier
     // reconstructs it (with its own mor/floor guards); translatable
     // pushed filters apply on the final envelope frame (Spark
     // re-evaluates above as always)
     changesFrom.foreach { from =>
-      val feed = CdcApplier.changeFeed(spark, targetDir, from)
-      val filtered = pushed.flatMap(toColumn).foldLeft(feed)(_.filter(_))
-      return filtered.select(required.fieldNames.map(col).toIndexedSeq: _*)
+      return applyFilters(CdcApplier.changeFeed(spark, targetDir, from), pushed)
+        .select(required.fieldNames.map(col).toIndexedSeq: _*)
     }
     val hconf = spark.sparkContext.hadoopConfiguration
     val target = new Path(targetDir)
     val meta = TargetMeta.read(hconf, target)
-    // mor delta chains AND dv-bearing cow (q275) resolve latest-per-key
-    val resolveNeeded = CdcApplier.needsResolve(meta)
     val pkCols = meta.flatMap(_.pkCols).getOrElse(Seq.empty)
-    // time travel: snapshotAsOf's guards verbatim — mor only, and a
-    // position below the retained-history floor is refused, never
-    // answered with the collapsed (wrong) history
-    asOf.foreach { pos =>
-      val m = meta.getOrElse(
-        throw new IllegalStateException(s"no graft table state at $targetDir"))
-      if (!m.storage.contains("mor"))
-        throw new IllegalStateException(
-          s"$targetDir is copy-on-write - superseded versions are rewritten away; " +
-            "asOfPos needs the mor layout")
-      val floor = math.max(m.horizon, m.collapsed.getOrElse(Long.MinValue))
-      if (pos < floor)
-        throw new IllegalArgumentException(
-          s"asOfPos $pos predates the retained history (floor $floor)")
-    }
+    asOf.foreach(pos => CdcApplier.requireHistory(meta.getOrElse(
+      throw new IllegalStateException(s"no graft table state at $targetDir")),
+      targetDir, pos, "asOfPos"))
 
     def emptyDf = spark.createDataFrame(java.util.Collections.emptyList[Row](), required)
     if (buckets.isEmpty) return emptyDf
@@ -967,7 +926,7 @@ object GraftScan {
     // versions agree on its PK); on one-version copy-on-write everything
     // applies below.
     val (below, above) =
-      if (resolveNeeded) pushed.partition(_.references.toSet.subsetOf(pkCols.toSet))
+      if (CdcApplier.needsResolve(meta)) pushed.partition(_.references.toSet.subsetOf(pkCols.toSet))
       else (pushed, Array.empty[Filter])
 
     // File-level data skipping (q250): the below-resolve filter set is by
@@ -988,24 +947,11 @@ object GraftScan {
 
     val paths = fileSel.map(_._1)
       .getOrElse(buckets.map(b => s"$targetDir/$BUCKET=$b"))
-    // logicalize EARLY (q258): everything below — pushed-filter columns,
-    // required projection, resolve, tombstone filter — speaks logical
-    // names; the rename is a Project(Alias), which Spark pushes filters
-    // straight through into the parquet scan
-    val raw = CdcApplier.logicalize(
-      CdcApplier.readStored(spark, meta, paths, Some(targetDir)),
-      meta)
-    def applyFilters(df: DataFrame, fs: Array[Filter]): DataFrame =
-      fs.flatMap(toColumn).foldLeft(df)(_.filter(_))
-
     // the as-of cut applies BEFORE latest-per-key resolution (a key's
     // winner as of pos is its newest version at or below pos)
-    val cut = asOf.map(pos => raw.filter(col(CdcApplier.POS) <= pos)).getOrElse(raw)
-    val filtered = applyFilters(cut, below)
-    val resolved =
-      if (resolveNeeded) CdcApplier.resolveOnRead(filtered, pkCols) else filtered
-    val live = applyFilters(resolved.filter(!col(DEL)), above)
-    live.select(required.fieldNames.map(col).toIndexedSeq: _*)
+    val live = CdcApplier.liveRead(spark, meta, targetDir, paths, asOf,
+      below = applyFilters(_, below))
+    applyFilters(live, above).select(required.fieldNames.map(col).toIndexedSeq: _*)
   }
 }
 

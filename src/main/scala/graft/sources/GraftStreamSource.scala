@@ -79,10 +79,7 @@ class GraftChangeFeedSource(
   /** First-start cursor (checkpointed offsets take over afterwards):
     * everything after the retained-history floor — Long.MinValue (the
     * whole feed) on a never-compacted target. */
-  private val initial: Long = startPos.getOrElse {
-    val m = metaNow.get
-    math.max(m.horizon, m.collapsed.getOrElse(Long.MinValue))
-  }
+  private val initial: Long = startPos.getOrElse(metaNow.get.asOfFloor)
 
   override val schema: StructType = GraftTable.changesSchema(spark, targetDir)
 

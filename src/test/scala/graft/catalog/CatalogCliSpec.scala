@@ -75,7 +75,14 @@ class CatalogCliSpec extends AnyFunSuite {
       .system(false).streams(keptOpen(scriptBytes), outBuf).build()
     terminal.setSize(new org.jline.terminal.Size(80, 24))
     try CatalogCli.runJline(new Catalog(spark, store), spark, terminal)
-    finally terminal.close()
+    finally {
+      // the pty's output pump copies into outBuf on its own thread and can
+      // trail the REPL by the session's last few hundred bytes; close stops
+      // it, so let it drain first
+      var seen = -1
+      while (outBuf.size != seen) { seen = outBuf.size; Thread.sleep(200) }
+      terminal.close()
+    }
     outBuf.toString("UTF-8")
   }
 

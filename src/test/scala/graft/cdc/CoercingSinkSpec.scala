@@ -94,4 +94,23 @@ class CoercingSinkSpec extends AnyFunSuite {
       .select($"k", $"v", $"extra").as[(Int, Int, Option[String])].collect().toSet
     assert(back == Set((1, 10, None), (2, 20, None), (3, 30, Some("x"))))
   }
+
+  test("rows masked by deletion vectors never reach the replica") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val target = java.nio.file.Files.createTempDirectory("graft_cs").toString + "/t"
+    val second = java.nio.file.Files.createTempDirectory("graft_cs2").toString + "/s"
+    val rows = (1 to 20).map(i => (i, i * 10)).toDF("k", "v")
+    val opts = CdcApplier.Options(Seq("k"), numBuckets = 4)
+    CdcApplier.applyBatch(spark, ChangeFeed.inserts(rows, col("k").cast("long")),
+      target, opts)
+    // copy-on-write primary with an outstanding deletion vector for key 5
+    CdcApplier.applyBatchDv(spark,
+      ChangeFeed.deletes(rows.filter(col("k") === 5), lit(1000L)), target, opts)
+    assert(CdcApplier.snapshot(spark, target).count() == 19)
+    CoercingSink.replicate(spark, target, second)
+    val back = spark.read.parquet(second).select("k").as[Int].collect().sorted
+    assert(back.toSeq == (1 to 20).filterNot(_ == 5),
+      s"the replica must mirror the live rows, got ${back.mkString(",")}")
+  }
 }

@@ -131,6 +131,28 @@ class OptR15Spec extends AnyFunSuite {
         col(CdcApplier.BUCKET))
       .distinct().collect()
     assert(keyed.groupBy(_.getInt(0)).forall(_._2.length == 1))
+    // ids outside the bucket list fail loudly, naming the id: a gap, a
+    // negative (element indexes count from the end) and one above the max
+    for (bad <- Seq(1, -2, -3, 4)) {
+      val e = intercept[Exception] {
+        Seq(0, 2, bad, 3).toDF(CdcApplier.BUCKET)
+          .repartition(3, CdcApplier.bucketAlignedKey(Seq(0, 2, 3), 3))
+          .collect()
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+      assert(msgs.contains(s"bucket id $bad "), msgs)
+    }
+  }
+
+  test("ANALYZE releases its histogram checkpoint") {
+    val store = Files.createTempDirectory("graft_optr15h").toString + "/store"
+    val data = spark.range(1, 101).select($"id".as("k"), ($"id" % 9).as("seg"))
+    CdcApplier.applyBatch(spark, ChangeFeed.inserts(data, $"k" * 10), store, opts)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    ColumnStats.analyze(spark, store, histogramBins = 4)
+    assert(ColumnStats.read(spark, store).get.cols("seg").hist.nonEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
   test("one-pass histograms match percentile bounds and exact per-bin NDVs") {
