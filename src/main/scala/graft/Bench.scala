@@ -30,25 +30,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet's ts encoding drifts across driver regens (NANOS vs
-      // MICROS); Tables.load adapts to either, this conf covers the NANOS case.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Optimization r15 (guide §6): graft's writes all land in tmp trees
-      // whose atomicity comes from the applier's own rename publish, so the
-      // v1 committer's two-phase job-commit renames buy nothing here — v2
-      // commits task files directly (the standard HDFS choice when the
-      // write path has its own atomicity), and the _SUCCESS marker is
-      // unused by every graft reader (publishBuckets filters _-prefixed).
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // Schema-drift canary (see Tables.expectedSchema): a testdata regen shows
     // up here as named stderr lines, not as opaque per-query errors.

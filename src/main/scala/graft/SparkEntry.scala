@@ -12,6 +12,24 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.queries("q03_join_topk")(spark, "/root/testdata/sf0.001")
 
+  /** The local session every main (Bench, Verify and the plan/profile
+    * harnesses) runs on: `cores` task slots and as many shuffle
+    * partitions, UTC, and no UI. Graft's write profile is not set here —
+    * it rides on each graft write ([[graft.cdc.CdcApplier.stage]]). */
+  def localSession(cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet's ts encoding drifts across driver regens (NANOS vs
+      // MICROS); Tables.load adapts to either, this conf covers the NANOS case.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Relational.queries ++ Advanced.queries ++ CdcQueries.queries ++ TextOps.queries ++

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,19 +10,7 @@ object Verify {
     val selected =
       if (args.length <= 2) SparkEntry.queries
       else SparkEntry.queries.filter(q => args.drop(2).contains(q._1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // same committer profile as Bench (see the note there): correctness
-      // must be verified under the configuration the bench runs
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Schema-drift canary: the driver has regenerated the testdata mid-round
     // before (see Tables.expectedSchema) — name the drift up front instead of
     // letting it surface as N opaque per-query failures.

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.cdc.CdcApplier
+import graft.cdc.{CdcApplier, FileStats}
 import graft.cdc.CdcApplier.TargetMeta
 
 /** SQL `CALL` surface for the engine's maintenance operations — the
@@ -191,8 +191,7 @@ class GraftProcedure(root: Path, op: String) extends UnboundProcedure with Bound
       val buckets = CdcApplier.bucketIds(fs, target)
       val files = buckets.flatMap { b =>
         fs.listStatus(new Path(target, s"${CdcApplier.BUCKET}=$b"))
-          .filterNot(f => f.getPath.getName.startsWith("_") ||
-            f.getPath.getName.startsWith("."))
+          .filter(FileStats.isDataFile)
       }
       val liveRows = CdcApplier.snapshot(spark, dir).count()
       val schema = StructType(Seq(

@@ -268,27 +268,8 @@ object Branch {
       // licensing resolve-free reads over multi-version buckets
       TargetMeta.read(hconf, main).filter(_.sorted.nonEmpty).foreach(m =>
         TargetMeta.write(hconf, main, m.copy(sorted = None)))
-      val touched = scala.collection.mutable.ArrayBuffer.empty[Int]
-      val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
-      CdcApplier.bucketIds(fs, new Path(dir)).foreach { b =>
-        val fromDir = new Path(dir, s"$BUCKET=$b")
-        val toDir = new Path(main, s"$BUCKET=$b")
-        fs.mkdirs(toDir)
-        fs.listStatus(fromDir)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith(".")).foreach { f =>
-          val dest = new Path(toDir, s"ff-$name-${f.getPath.getName}")
-          if (!fs.rename(f.getPath, dest))
-            throw new java.io.IOException(s"cannot publish ${f.getPath} -> $dest")
-          moved += dest
-        }
-        touched += b
-      }
-      // sidecar entries for the moved files (q250) — AFTER the renames,
-      // the MOR-apply discipline: a crash in between leaves them unlisted
-      // (never skipped), and the replayed fast-forward re-appends
-      FileStats.appendSidecars(fs,
-        moved.groupBy(_.getParent).map { case (d, fls) => d -> fls.toSeq })
+      // the replayed fast-forward re-appends whatever a crash left unmoved
+      val touched = CdcApplier.appendBuckets(fs, main, new Path(dir), s"ff-$name").buckets
       // advance main's marks from the BRANCH's published marks
       val metaNow = TargetMeta.read(hconf, main).get
       val bHi = branchMeta.flatMap(_.maxPos)
@@ -310,7 +291,7 @@ object Branch {
       spark.catalog.refreshByPath(mainDir)
       // q283×q287: publish-then-maintain, like every apply
       ffIdxEnv.foreach(IndexLifecycle.maintain(spark, _, mainDir))
-      touched.toSeq.sorted
+      touched
     }
   }
 

@@ -844,23 +844,102 @@ object CdcApplier {
         lit(s" is not one of the ${buckets.size} buckets this write covers"))))
   }
 
-  /** Sorted bucket write (q262): all of a bucket's rows land in ONE task
-    * (bucket-aligned repartition — see [[bucketAlignedKey]]), sorted by
-    * (bucket, sortCols) within it, so each published bucket directory
-    * holds one file internally sorted by the layout's sort columns. At
-    * 100 TB this pays the sort once at write — every later co-bucketed
-    * storage-partitioned join then runs with no Exchange AND no Sort (the
-    * scan reports the order). The one-task-per-bucket shape is the same
-    * per-bucket memory bound the merge and the MOR reader already assume. */
-  private def writeSorted(df: DataFrame, sortCols: Seq[String], buckets: Seq[Int],
-      dest: String): Unit = {
-    val n = math.max(buckets.size, 1)
-    val keyed =
-      if (buckets.isEmpty) df.repartition(n, col(BUCKET))
-      else df.repartition(n, bucketAlignedKey(buckets, n))
-    keyed
-      .sortWithinPartitions((BUCKET +: sortCols).map(col): _*)
-      .write.partitionBy(BUCKET).mode("overwrite").parquet(dest)
+  /** The fixed sibling suffixes graft's writers stage under before their
+    * publish (`<target><suffix>`, named by [[stagingDir]]). The same
+    * values are [[openTargetForWrite]]'s reclaim list, so a writer cannot
+    * stage under a name no reclaim covers. Tokenized trees are matched by
+    * prefix instead: [[DeltaStaging]] is reclaimed there too, while
+    * [[optimize]]'s `.optimize-<tok>.tmp` is reclaimed only by the next
+    * optimize (see [[optimizeStaged]]). */
+  private[cdc] object Staging extends Enumeration {
+    val Apply = Value(".tmp") // applyBatch, compactMor, vacuumMor, Scd2, CoercingSink
+    val Compact = Value(".compact.tmp")
+    val Zorder = Value(".zorder.tmp")
+    val Backfill = Value(".backfill.tmp")
+    val Rebucket = Value(".rebucket.tmp")
+    val Widen = Value(".widen.tmp")
+    val Bootstrap = Value(".bootstrap.tmp")
+  }
+
+  /** Prefix of the tokenized `<target>.delta-<tok>` trees the append
+    * publishers ([[applyBatchMor]], [[applyBatchDv]]) stage under. */
+  private val DeltaStaging = ".delta-"
+
+  private[cdc] def stagingDir(target: Path, s: Staging.Value): Path =
+    new Path(target.getParent, target.getName + s)
+
+  private def newToken(): String =
+    java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+
+  /** The ONE staged write behind every graft data tree: clears any
+    * leftover at `dest`, then writes `df` there — partitioned by
+    * `_graft_bucket` when the frame carries it (a bucket tree for
+    * [[publishBuckets]], [[appendBuckets]] or a whole-target [[swapDir]]),
+    * as one directory when it does not (a single bucket's rewrite, a
+    * view version).
+    *
+    * With `sortCols` (q262) all of a bucket's rows land in ONE task
+    * (bucket-aligned repartition over `buckets` — see
+    * [[bucketAlignedKey]]), sorted by (bucket, sortCols) within it, so
+    * each published bucket directory holds one file internally sorted by
+    * the layout's sort columns. At 100 TB this pays the sort once at
+    * write — every later co-bucketed storage-partitioned join then runs
+    * with no Exchange AND no Sort (the scan reports the order). The
+    * one-task-per-bucket shape is the same per-bucket memory bound the
+    * merge and the MOR reader already assume.
+    *
+    * The write profile rides on the write itself, so every embedding
+    * gets it whatever its session sets: committer v2 commits task files
+    * straight into `dest`, and no `_SUCCESS` marker is written. The v1
+    * committer's job-commit renames buy nothing here — the applier's
+    * rename publish owns atomicity, and no graft reader uses `_SUCCESS`. */
+  private[graft] def stage(df: DataFrame, dest: Path,
+      sortCols: Option[Seq[String]] = None, buckets: Seq[Int] = Seq.empty): Path = {
+    val fs = dest.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    if (fs.exists(dest)) fs.delete(dest, true)
+    val rows = sortCols.fold(df) { sc =>
+      val n = math.max(buckets.size, 1)
+      val keyed =
+        if (buckets.isEmpty) df.repartition(n, col(BUCKET))
+        else df.repartition(n, bucketAlignedKey(buckets, n))
+      keyed.sortWithinPartitions((BUCKET +: sc).map(col): _*)
+    }
+    val w = rows.write.mode("overwrite")
+      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+    (if (df.columns.contains(BUCKET)) w.partitionBy(BUCKET) else w).parquet(dest.toString)
+    dest
+  }
+
+  /** What an [[appendBuckets]] publish landed: the touched bucket ids,
+    * the moved files, and the sidecar entries collected for them. */
+  private[cdc] final case class Appended(
+      buckets: Seq[Int], files: Seq[Path],
+      stats: Map[Path, Seq[(String, FileStats.FileEntry)]])
+
+  /** The append publish (MOR deltas, deletion vectors, branch
+    * fast-forward): every data file of `from`'s bucket dirs moves into
+    * `target`'s live bucket dir as `<prefix>-<name>` — one atomic rename
+    * per file, never a rewrite of what the bucket already holds. The
+    * moved files' stats merge into each bucket's sidecar (q250) strictly
+    * AFTER the renames: a crash in between leaves them unlisted, i.e.
+    * never skipped, and the caller's replay re-appends value-identical
+    * rows that the resolve collapses. `from` is left for the caller. */
+  private[cdc] def appendBuckets(
+      fs: FileSystem, target: Path, from: Path, prefix: String): Appended = {
+    val buckets = bucketIds(fs, from)
+    val files = buckets.flatMap { b =>
+      val to = new Path(target, s"$BUCKET=$b")
+      fs.mkdirs(to)
+      fs.listStatus(new Path(from, s"$BUCKET=$b")).filter(FileStats.isDataFile).map { f =>
+        val dest = new Path(to, s"$prefix-${f.getPath.getName}")
+        if (!fs.rename(f.getPath, dest))
+          throw new IOException(s"cannot publish ${f.getPath} -> $dest")
+        dest
+      }
+    }
+    Appended(buckets, files,
+      FileStats.appendSidecars(fs, files.groupBy(_.getParent)))
   }
 
   /** Latest-per-key resolution for merge-on-read layouts: within each PK,
@@ -980,32 +1059,11 @@ object CdcApplier {
       TargetMeta.write(hconf, target, m.copy(sorted = None))
     }
 
-    val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val tmp = new Path(targetDir + s".delta-$token")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    resolved.write.partitionBy(BUCKET).mode("overwrite").parquet(tmp.toString)
-
-    val touched = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val published = scala.collection.mutable.ArrayBuffer.empty[String]
-    bucketIds(fs, tmp).foreach { b =>
-      val from = new Path(tmp, s"$BUCKET=$b")
-      val to = new Path(target, s"$BUCKET=$b")
-      fs.mkdirs(to)
-      fs.listStatus(from).filterNot(_.getPath.getName.startsWith("_")).foreach { f =>
-        val dest = new Path(to, s"delta-$token-${f.getPath.getName}")
-        if (!fs.rename(f.getPath, dest))
-          throw new IOException(s"cannot publish delta file ${f.getPath} -> $dest")
-        published += dest.toString
-      }
-      touched += b
-    }
+    val token = newToken()
+    val tmp = stage(resolved, new Path(targetDir + DeltaStaging + token))
+    val Appended(touched, published, collected) =
+      appendBuckets(fs, target, tmp, s"delta-$token")
     fs.delete(tmp, true)
-    // file-level data-skipping stats for the fresh delta files (q250):
-    // merged into each touched bucket's sidecar AFTER the renames — a
-    // crash in between leaves the new files unlisted, i.e. never skipped
-    val collected = FileStats.appendSidecars(fs,
-      published.map(new Path(_)).groupBy(_.getParent)
-        .map { case (d, files) => d -> files.toSeq })
     // Advance the persisted change-feed high-water mark (`maxPos`) — the
     // metadata a streaming tail polls instead of scanning data. Strictly
     // AFTER the deltas land: a crash in between leaves maxPos stale-LOW,
@@ -1020,7 +1078,7 @@ object CdcApplier {
       // footer stats, a failed sidecar pass), fall back to the read. The
       // global mark feeds the streaming tail's poll, the per-bucket marks
       // feed changeFeed's bucket pruning.
-      val byBucket = published.map(new Path(_)).groupBy(_.getParent)
+      val byBucket = published.groupBy(_.getParent)
       val fromFooters: Seq[Option[(Int, Long)]] = byBucket.toSeq.map {
         case (d, files) =>
           val names = files.map(_.getName).toSet
@@ -1035,7 +1093,7 @@ object CdcApplier {
       val perBucket =
         if (fromFooters.forall(_.isDefined)) fromFooters.flatten.toMap
         else spark.read.option("basePath", targetDir)
-          .parquet(published.toSeq: _*)
+          .parquet(published.map(_.toString): _*)
           .groupBy(col(BUCKET)).agg(max(col(POS)).as("p"))
           .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       if (perBucket.nonEmpty) TargetMeta.read(hconf, target).foreach { m =>
@@ -1052,7 +1110,7 @@ object CdcApplier {
     // q283: registered secondary indexes maintain from the same envelope,
     // strictly after the store publish
     IndexLifecycle.maintain(spark, changes, targetDir)
-    touched.toSeq.sorted
+    touched
   }
 
   /** DELETION VECTORS for copy-on-write (q275; public design points: Delta
@@ -1127,26 +1185,10 @@ object CdcApplier {
     try {
       val nVec = vectors.count()
       if (nVec == 0L) return Seq.empty
-      val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val tmp = new Path(targetDir + s".delta-$token")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      vectors.write.partitionBy(BUCKET).mode("overwrite").parquet(tmp.toString)
-      val touched = scala.collection.mutable.ArrayBuffer.empty[Int]
-      val published = scala.collection.mutable.ArrayBuffer.empty[Path]
-      bucketIds(fs, tmp).foreach { b =>
-        val from = new Path(tmp, s"$BUCKET=$b")
-        val to = new Path(target, s"$BUCKET=$b")
-        fs.listStatus(from).filterNot(_.getPath.getName.startsWith("_")).foreach { f =>
-          val dest = new Path(to, s"dv-$token-${f.getPath.getName}")
-          if (!fs.rename(f.getPath, dest))
-            throw new IOException(s"cannot publish deletion vector ${f.getPath} -> $dest")
-          published += dest
-        }
-        touched += b
-      }
+      val token = newToken()
+      val tmp = stage(vectors, new Path(targetDir + DeltaStaging + token))
+      val touched = appendBuckets(fs, target, tmp, s"dv-$token").buckets
       fs.delete(tmp, true)
-      FileStats.appendSidecars(fs,
-        published.groupBy(_.getParent).map { case (d, fls) => d -> fls.toSeq })
       // The `dv` flag lands strictly AFTER the renames — maxPos's stale-LOW
       // discipline. A reader in the crash window sees tombstone files
       // without the flag: the COW read's `!_graft_deleted` filter drops the
@@ -1164,7 +1206,7 @@ object CdcApplier {
       // q283: index entries for masked keys retire as ordinary deletes
       // (the dv batch carries full before-images by its callers' shape)
       IndexLifecycle.maintain(spark, changes, targetDir)
-      touched.toSeq.sorted
+      touched
     } finally vectors.unpersist()
   }
 
@@ -1671,15 +1713,13 @@ object CdcApplier {
     val maxPos = raw.agg(max(col(POS))).collect()(0).getLong(0)
     // tags pin history (q256): refuse rather than strand a named ref
     requireTagsAnswerable(meta, maxPos, "compactMor")
-    val resolved = resolveOnRead(raw, pkCols)
-    val tmp = new Path(targetDir + ".tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
     // q276: the compacted image is ONE version per key — write each bucket
     // sorted (the same one-task-per-bucket bound as every per-bucket path)
     // so the post-compaction table can report ordering and serve
     // resolve-free streaming reads until the next delta lands
     val sortCols = sortColsOf(meta.bucketCols.getOrElse(pkCols), pkCols)
-    writeSorted(resolved, sortCols, buckets, tmp.toString)
+    val tmp = stage(resolveOnRead(raw, pkCols), stagingDir(target, Staging.Apply),
+      Some(sortCols), buckets)
     // Floor BEFORE the bucket publish: a crash in between leaves intact
     // history with a floor that refuses as-of reads of it — safe-
     // conservative. The reverse order would leave collapsed data with a
@@ -1740,9 +1780,7 @@ object CdcApplier {
     requireTagsAnswerable(meta, oldMax, "vacuumMor")
     val merged = resolveOnRead(old, pkCols)
       .unionByName(raw.filter(col(POS) >= retainFromPos))
-    val tmp = new Path(targetDir + ".tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    merged.write.partitionBy(BUCKET).mode("overwrite").parquet(tmp.toString)
+    val tmp = stage(merged, stagingDir(target, Staging.Apply))
     // floor before publish — same crash-ordering rule as [[compactMor]].
     // `sorted` clears (q276): the retained window keeps MULTIPLE versions
     // per key and this rewrite is unsorted — a stale claim would license a
@@ -2021,10 +2059,7 @@ object CdcApplier {
             sorted = if (wholeTable) Some(sortCols)
                      else meta.flatMap(_.sorted)))
 
-      val tmp = new Path(targetDir + ".tmp")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      writeSorted(merged, sortCols, rewrite, tmp.toString)
-
+      val tmp = stage(merged, stagingDir(target, Staging.Apply), Some(sortCols), rewrite)
       publishBuckets(fs, target, tmp, rewrite)
       // q262 honesty: this publish wrote its buckets in PK-sort order. If a
       // clusterBy optimize had recorded a DIFFERENT order, the table now
@@ -2116,8 +2151,6 @@ object CdcApplier {
       return Seq.empty
     }
 
-    val tmp = new Path(targetDir + ".compact.tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
     val selected = all.filter(col(BUCKET).isin(touched.map(Int.box): _*))
     val resolved =
       if (dvOutstanding)
@@ -2125,13 +2158,9 @@ object CdcApplier {
           throw new IllegalStateException(
             s"dv-bearing layout at $targetDir has no persisted PK")))
       else selected
-    val survivors = resolved.filter(!compactable)
     // q262: maintain the layout's recorded file order through the rewrite
-    metaNow.sorted match {
-      case Some(sc) => writeSorted(survivors, sc, touched, tmp.toString)
-      case None =>
-        survivors.write.partitionBy(BUCKET).mode("overwrite").parquet(tmp.toString)
-    }
+    val tmp = stage(resolved.filter(!compactable), stagingDir(target, Staging.Compact),
+      metaNow.sorted, touched)
     publishBuckets(fs, target, tmp, touched)
     // every dv-bearing bucket was rewritten — the flag clears (fresh read:
     // publishBuckets ran under this op's ticket)
@@ -2211,13 +2240,10 @@ object CdcApplier {
     val metaPre = TargetMeta.read(hconf, target)
     // bounded driver listing: (bucket, fileCount, bytes) per bucket dir
     val stats = buckets.map { b =>
-      val files = fs.listStatus(new Path(target, s"$BUCKET=$b"))
-        .filterNot(f => f.getPath.getName.startsWith("_") ||
-          f.getPath.getName.startsWith("."))
+      val files = fs.listStatus(new Path(target, s"$BUCKET=$b")).filter(FileStats.isDataFile)
       (b, files.length, files.map(_.getLen).sum)
     }
-    val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val tmp = new Path(targetDir + s".optimize-$token.tmp")
+    val tmp = new Path(targetDir + s".optimize-${newToken()}.tmp")
 
     // ---- stage (no ticket) ------------------------------------------------
     // Clustered rewrite (Delta's OPTIMIZE ZORDER BY, linear form): lay each
@@ -2251,10 +2277,9 @@ object CdcApplier {
             math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
           }.sum.toInt
           val orderCols = (col(BUCKET) +: clusterPhys.map(col)).toIndexedSeq
-          readStored(spark, metaPre, Seq(targetDir))
+          stage(readStored(spark, metaPre, Seq(targetDir))
             .repartitionByRange(math.max(1, totalBins), orderCols: _*)
-            .sortWithinPartitions(orderCols: _*)
-            .write.partitionBy(BUCKET).mode("overwrite").parquet(tmp.toString)
+            .sortWithinPartitions(orderCols: _*), tmp)
         }
         t
       } else {
@@ -2272,10 +2297,9 @@ object CdcApplier {
               // written file stays an internally-sorted, range-disjoint
               // slice of its bucket, so the scan keeps reporting the order
               val orderCols = (col(BUCKET) +: sc.map(col)).toIndexedSeq
-              oversized
+              stage(oversized
                 .repartitionByRange(math.max(1, plan.values.sum), orderCols: _*)
-                .sortWithinPartitions(orderCols: _*)
-                .write.partitionBy(BUCKET).mode("overwrite").parquet(tmp.toString)
+                .sortWithinPartitions(orderCols: _*), tmp)
             case None =>
               // bin salt hashes the PK columns (when persisted) plus POS: a
               // freshly-bootstrapped bucket has ONE position for every row,
@@ -2286,11 +2310,10 @@ object CdcApplier {
                 col(BUCKET))
               val saltCols =
                 metaPre.flatMap(_.pkCols).getOrElse(Seq.empty).map(col) :+ col(POS)
-              oversized
+              stage(oversized
                 .withColumn("_graft_bin", pmod(hash(saltCols: _*), binOf))
                 .repartition(math.max(1, plan.values.sum), col(BUCKET), col("_graft_bin"))
-                .drop("_graft_bin")
-                .write.partitionBy(BUCKET).mode("overwrite").parquet(tmp.toString)
+                .drop("_graft_bin"), tmp)
           }
         }
         t
@@ -2414,20 +2437,16 @@ object CdcApplier {
         }.reduce((a, b) => a.bitwiseOR(b))
         val stats = buckets.map { b =>
           fs.listStatus(new Path(target, s"$BUCKET=$b"))
-            .filterNot(f => f.getPath.getName.startsWith("_") ||
-              f.getPath.getName.startsWith(".")).map(_.getLen).sum
+            .filter(FileStats.isDataFile).map(_.getLen).sum
         }
         val totalBins = math.max(1, stats.map(bytes =>
           math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)).sum.toInt)
-        val tmp = new Path(targetDir + ".zorder.tmp")
-        if (fs.exists(tmp)) fs.delete(tmp, true)
         val orderCols = Seq(col(BUCKET), col("_graft_z"))
-        readStored(spark, Some(meta), Seq(targetDir))
+        val tmp = stage(readStored(spark, Some(meta), Seq(targetDir))
           .withColumn("_graft_z", zval)
           .repartitionByRange(totalBins, orderCols: _*)
           .sortWithinPartitions(orderCols: _*)
-          .drop("_graft_z")
-          .write.partitionBy(BUCKET).mode("overwrite").parquet(tmp.toString)
+          .drop("_graft_z"), stagingDir(target, Staging.Zorder))
         // state-preserving: a missing staged bucket is theft, never "empty"
         publishBuckets(fs, target, tmp, buckets, requireAll = true)
         // a Morton layout is not a lexicographic column order — never
@@ -2565,16 +2584,11 @@ object CdcApplier {
           if (d.columns.contains(log)) d.withColumnRenamed(log, phys) else d
       }
       outType = Some(rows.schema(colName))
-      val tmp = new Path(targetDir + s".backfill.tmp/$BUCKET=$b")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
       // q262: a sorted layout's per-bucket rewrite re-sorts (one task — the
       // bucket-fits-memory bound every per-bucket path already assumes)
-      meta.sorted match {
-        case Some(sc) =>
-          rows.repartition(1).sortWithinPartitions(sc.map(col): _*)
-            .write.parquet(tmp.toString)
-        case None => rows.write.parquet(tmp.toString)
-      }
+      val tmp = stage(
+        meta.sorted.fold(rows)(sc => rows.repartition(1).sortWithinPartitions(sc.map(col): _*)),
+        new Path(stagingDir(target, Staging.Backfill), s"$BUCKET=$b"))
       swapDir(fs, live, tmp)
       // marker AFTER the swap: a crash in between re-processes this
       // bucket, which is idempotent
@@ -2582,7 +2596,7 @@ object CdcApplier {
         (colName +: (done ++ todo.takeWhile(_ <= b)).toSeq.sorted.map(_.toString))
           .mkString("\n"))
     }
-    fs.delete(new Path(targetDir + ".backfill.tmp"), true)
+    fs.delete(stagingDir(target, Staging.Backfill), true)
     val remaining = bucketIds(fs, target).filterNot(done ++ todo)
     if (remaining.isEmpty) {
       // complete: ensure the persisted schema is evolved, drop the marker.
@@ -2698,16 +2712,14 @@ object CdcApplier {
     val bucketOrder = meta.bucketCols.getOrElse(pkOrder)
     recoverBuckets(fs, target)
 
-    val fresh = new Path(targetDir + ".rebucket.tmp")
-    if (fs.exists(fresh)) fs.delete(fresh, true)
     // q262: a rebucket rewrites EVERY row, so it publishes sorted and
     // upgrades even a pre-upgrade unsorted layout to the recorded order
     val sortCols = sortColsOf(bucketOrder, pkOrder)
-    writeSorted(
+    val fresh = stage(
       readStored(spark, Some(meta), Seq(targetDir))
         .drop(BUCKET)
         .withColumn(BUCKET, bucketExpr(bucketOrder, newNumBuckets, None)),
-      sortCols, 0 until newNumBuckets, fresh.toString)
+      stagingDir(target, Staging.Rebucket), Some(sortCols), 0 until newNumBuckets)
     // carry every root FILE (high-watermark, meta, any future sidecar) into
     // the fresh tree, then overwrite the meta with the new modulus
     fs.listStatus(target).filter(_.isFile).foreach { f =>
@@ -2774,17 +2786,15 @@ object CdcApplier {
     val widenedSchema = StructType(stored.fields.map(f =>
       if (f.name == column) f.copy(dataType = to) else f))
     recoverBuckets(fs, target)
-    val fresh = new Path(targetDir + ".widen.tmp")
-    if (fs.exists(fresh)) fs.delete(fresh, true)
-    if (bucketIds(fs, target).nonEmpty) {
-      val cast = readStored(spark, Some(meta), Seq(targetDir))
-        .withColumn(column, col(column).cast(to))
-      // q262: maintain the recorded order through the whole-table rewrite
-      meta.sorted match {
-        case Some(sc) => writeSorted(cast, sc, 0 until meta.numBuckets, fresh.toString)
-        case None => cast.write.partitionBy(BUCKET).parquet(fresh.toString)
-      }
-    } else fs.mkdirs(fresh)
+    val fresh = stagingDir(target, Staging.Widen)
+    // q262: maintain the recorded order through the whole-table rewrite
+    if (bucketIds(fs, target).nonEmpty)
+      stage(readStored(spark, Some(meta), Seq(targetDir))
+        .withColumn(column, col(column).cast(to)), fresh, meta.sorted, 0 until meta.numBuckets)
+    else {
+      fs.delete(fresh, true)
+      fs.mkdirs(fresh)
+    }
     fs.listStatus(target).filter(_.isFile).foreach { f =>
       org.apache.hadoop.fs.FileUtil.copy(
         fs, f.getPath, fs, new Path(fresh, f.getPath.getName), false, hconf)
@@ -2873,14 +2883,11 @@ object CdcApplier {
       .withColumn(POS, lit(atPos))
       .withColumn(DEL, lit(false))
       .withColumn(BUCKET, bucketExpr(bucketOrder, numBuckets, rangeBounds))
-    val fresh = new Path(targetDir + ".bootstrap.tmp")
-    if (fs.exists(fresh)) fs.delete(fresh, true)
     val isMorSeed = meta.flatMap(_.storage).contains("mor")
     // q262: copy-on-write seeds publish sorted and record it; a mor seed's
     // later delta appends would break the invariant, so it stays unmarked
-    if (isMorSeed) rows.write.partitionBy(BUCKET).parquet(fresh.toString)
-    else writeSorted(rows, sortColsOf(bucketOrder, pkOrder), 0 until numBuckets,
-      fresh.toString)
+    val fresh = stage(rows, stagingDir(target, Staging.Bootstrap),
+      if (isMorSeed) None else Some(sortColsOf(bucketOrder, pkOrder)), 0 until numBuckets)
     TargetMeta.write(hconf, fresh, TargetMeta(
       numBuckets, horizon = atPos, schemaJson = Some(rows.schema.json),
       pkCols = Some(pkOrder),
@@ -2920,17 +2927,6 @@ object CdcApplier {
     if (fs.exists(target)) recoverBuckets(fs, target)
   }
 
-  /** Every sibling staging suffix any writer stages under before its swap —
-    * kept HERE, next to the reclaim loop, so the list cannot drift from the
-    * writers: `.tmp` ([[applyBatch]]/[[compactMor]]/[[vacuumMor]]),
-    * `.compact.tmp` ([[compact]]), `.optimize.tmp` ([[optimize]]),
-    * `.backfill.tmp` ([[backfill]]), `.rebucket.tmp` ([[rebucket]]),
-    * `.bootstrap.tmp` ([[bootstrap]]); [[applyBatchMor]]'s tokenized
-    * `.delta-<token>` trees are matched by prefix glob below. */
-  private val StagingSuffixes = Seq(
-    ".tmp", ".compact.tmp", ".optimize.tmp", ".zorder.tmp",
-    ".backfill.tmp", ".rebucket.tmp", ".bootstrap.tmp")
-
   /** [[openTarget]] plus staging reclaim — the WRITER entry-point form
     * (applyBatch/applyBatchMor/compact/compactMor/vacuumMor/optimize/
     * backfill/rebucket/bootstrap). Once recovery has run, single-writer
@@ -2940,16 +2936,17 @@ object CdcApplier {
     * otherwise leak indefinitely. */
   private[cdc] def openTargetForWrite(fs: FileSystem, target: Path): Unit = {
     openTarget(fs, target)
-    StagingSuffixes.foreach { suffix =>
-      val staging = new Path(target.getParent, target.getName + suffix)
+    // every fixed staging name the writers stage under (see [[Staging]])
+    Staging.values.foreach { s =>
+      val staging = stagingDir(target, s)
       if (fs.exists(staging)) fs.delete(staging, true)
     }
-    // tokenized staging from a crashed applyBatchMor publish (.delta-<tok>)
+    // tokenized staging from a crashed append publish (.delta-<tok>)
     // or an aborted row-level DML statement (.rowlevel-<queryId> — its
     // committer localCheckpoints the staged frame before the applier runs,
     // so a LIVE statement never needs its tree past this point)
     if (fs.exists(target.getParent)) {
-      val prefixes = Seq(".delta-", ".rowlevel-").map(target.getName + _)
+      val prefixes = Seq(DeltaStaging, ".rowlevel-").map(target.getName + _)
       fs.listStatus(target.getParent)
         .filter(s => prefixes.exists(s.getPath.getName.startsWith))
         .foreach(s => fs.delete(s.getPath, true))

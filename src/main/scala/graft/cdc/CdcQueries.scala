@@ -1831,8 +1831,7 @@ object CdcQueries {
       val cowBytes = CdcApplier.bucketIds(fs, new org.apache.hadoop.fs.Path(cow))
         .map { b =>
           fs.listStatus(new org.apache.hadoop.fs.Path(cow, s"${CdcApplier.BUCKET}=$b"))
-            .filterNot(f => f.getPath.getName.startsWith("_") ||
-              f.getPath.getName.startsWith(".")).map(_.getLen).sum
+            .filter(FileStats.isDataFile).map(_.getLen).sum
         }.sum
       CdcApplier.optimize(s, cow, targetFileBytes = math.max(8L << 10, cowBytes / 24),
         clusterBy = Seq("o_totalprice"))
@@ -2164,8 +2163,7 @@ object CdcQueries {
       val bytes = CdcApplier.bucketIds(fs, new org.apache.hadoop.fs.Path(target))
         .map { b =>
           fs.listStatus(new org.apache.hadoop.fs.Path(target, s"${CdcApplier.BUCKET}=$b"))
-            .filterNot(f => f.getPath.getName.startsWith("_") ||
-              f.getPath.getName.startsWith(".")).map(_.getLen).sum
+            .filter(FileStats.isDataFile).map(_.getLen).sum
         }.sum
       CdcApplier.optimize(s, target, targetFileBytes = math.max(8L << 10, bytes / 24),
         clusterBy = Seq("price_usd"))
@@ -2909,8 +2907,7 @@ object CdcQueries {
       // bucket — the multi-file shape the skip requires below exercise
       val totalBytes = CdcApplier.bucketIds(fs, tpath).map { b =>
         fs.listStatus(new org.apache.hadoop.fs.Path(target, s"graft_bucket=$b"))
-          .filterNot(f => f.getPath.getName.startsWith("_") ||
-            f.getPath.getName.startsWith(".")).map(_.getLen).sum
+          .filter(FileStats.isDataFile).map(_.getLen).sum
       }.sum
       CdcApplier.zorder(s, target, Seq("o_orderkey", "o_custkey"),
         Seq(bounds(maxK), bounds(maxC)),
@@ -3134,8 +3131,7 @@ object CdcQueries {
       def bucketFiles(): Map[Int, Set[String]] =
         CdcApplier.bucketIds(fs, tpath).map { b =>
           b -> fs.listStatus(new org.apache.hadoop.fs.Path(target, s"graft_bucket=$b"))
-            .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-              !f.getPath.getName.startsWith(".")).map(_.getPath.getName).toSet
+            .filter(FileStats.isDataFile).map(_.getPath.getName).toSet
         }.toMap
       def metaNow = CdcApplier.TargetMeta.read(hconf, tpath).get
       val before = bucketFiles()
@@ -3641,8 +3637,7 @@ object CdcQueries {
         val bfs = p.getFileSystem(hconf)
         CdcApplier.bucketIds(bfs, p).map { b =>
           bfs.listStatus(new org.apache.hadoop.fs.Path(d, s"graft_bucket=$b"))
-            .filterNot(f => f.getPath.getName.startsWith("_") ||
-              f.getPath.getName.startsWith(".")).map(_.getLen).sum
+            .filter(FileStats.isDataFile).map(_.getLen).sum
         }.sum
       }
       // the threshold sits BELOW both sides' raw bytes (nothing broadcasts
@@ -3849,8 +3844,7 @@ object CdcQueries {
         val bfs = p.getFileSystem(hconf)
         CdcApplier.bucketIds(bfs, p).map { b =>
           bfs.listStatus(new org.apache.hadoop.fs.Path(d, s"graft_bucket=$b"))
-            .filterNot(f => f.getPath.getName.startsWith("_") ||
-              f.getPath.getName.startsWith(".")).map(_.getLen).sum
+            .filter(FileStats.isDataFile).map(_.getLen).sum
         }.sum
       }
       val confs = Seq(
@@ -3941,8 +3935,7 @@ object CdcQueries {
       val fs = tpath.getFileSystem(hconf)
       val totalBytes = CdcApplier.bucketIds(fs, tpath).map { b =>
         fs.listStatus(new org.apache.hadoop.fs.Path(target, s"graft_bucket=$b"))
-          .filterNot(f => f.getPath.getName.startsWith("_") ||
-            f.getPath.getName.startsWith(".")).map(_.getLen).sum
+          .filter(FileStats.isDataFile).map(_.getLen).sum
       }.sum
       val (apiBounds, _) = CdcApplier.zorderAuto(s, target,
         Seq("o_orderkey", "o_custkey"),
@@ -4042,8 +4035,7 @@ object CdcQueries {
         val fs = p.getFileSystem(hconf)
         CdcApplier.bucketIds(fs, p).map { b =>
           b -> fs.listStatus(new org.apache.hadoop.fs.Path(d, s"graft_bucket=$b"))
-            .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-              !f.getPath.getName.startsWith(".")).map(_.getPath.getName).toSet
+            .filter(FileStats.isDataFile).map(_.getPath.getName).toSet
         }.toMap
       }
       val dvBefore = files(dvDir)

@@ -82,9 +82,8 @@ object CoercingSink {
       CdcApplier.TargetMeta.read(hconf, new Path(targetDir)), targetDir, Seq(targetDir),
       below = _.filter(col(BUCKET).isin(effective.map(Int.box).toIndexedSeq: _*)),
       keepBucket = true).drop(POS)
-    val tmp = new Path(secondaryDir + ".tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    coerce(touched).write.partitionBy(BUCKET).mode("overwrite").parquet(tmp.toString)
+    val tmp = CdcApplier.stage(coerce(touched),
+      CdcApplier.stagingDir(secondary, CdcApplier.Staging.Apply))
     CdcApplier.publishBuckets(fs, secondary, tmp, effective)
     spark.catalog.refreshByPath(secondaryDir)
   }

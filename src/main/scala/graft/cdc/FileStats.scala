@@ -208,7 +208,9 @@ object FileStats {
     f(0) -> FileEntry(f(1).toLong, cols)
   }.toOption
 
-  private def isDataFile(st: FileStatus): Boolean =
+  /** A data file of a bucket dir: not a `_`-prefixed marker or sidecar,
+    * not a `.`-prefixed hidden file (checksums, backups). */
+  private[graft] def isDataFile(st: FileStatus): Boolean =
     st.isFile && !st.getPath.getName.startsWith("_") &&
       !st.getPath.getName.startsWith(".")
 

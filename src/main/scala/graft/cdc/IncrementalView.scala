@@ -385,7 +385,7 @@ object IncrementalView {
           s"batch $batchId - checkpoint/view mismatch (fresh checkpoint " +
           "against an existing view?); refusing to silently drop batches")
     }
-    mergeFn(applied).write.mode("overwrite").parquet(s"$viewDir/v$batchId")
+    CdcApplier.stage(mergeFn(applied), new Path(viewDir, s"v$batchId"))
     AtomicFile.write(spark.sparkContext.hadoopConfiguration,
       pointerPath(viewDir), batchId.toString)
     applied.foreach { prev =>

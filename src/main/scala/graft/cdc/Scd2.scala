@@ -192,10 +192,8 @@ object Scd2 {
     if (meta.isEmpty)
       CdcApplier.TargetMeta.write(hconf, root,
         CdcApplier.TargetMeta(buckets, Long.MinValue, None, Some(Seq(keyCol))))
-    val tmp = new Path(viewDir + ".tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    folded.withColumn(BUCKET, pmod(hash(col(keyCol)), lit(buckets)))
-      .write.partitionBy(BUCKET).mode("overwrite").parquet(tmp.toString)
+    val tmp = CdcApplier.stage(folded.withColumn(BUCKET, pmod(hash(col(keyCol)), lit(buckets))),
+      CdcApplier.stagingDir(root, CdcApplier.Staging.Apply))
     // Stamp each fresh bucket dir BEFORE the swap: marker and data publish
     // as one atomic rename. (A lagging bucket always re-emerges from the
     // fold — closed rows are never dropped — but stamp only what exists.)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery}
 import org.apache.spark.sql.types.DecimalType
 
-import graft.cdc.CdcApplier
+import graft.cdc.{CdcApplier, FileStats}
 
 /** Structured Streaming CDC pipeline (SURVEY.md §2.1 S1/S2/S5/S12/S13/S14).
   *
@@ -509,11 +509,8 @@ object StreamingPipeline {
         .filter(d => d.isDirectory &&
           d.getPath.getName.startsWith(CdcApplier.BUCKET + "="))
         .flatMap(d => fs.listStatus(d.getPath).iterator)
+        .filter(FileStats.isDataFile)
         .map(_.getPath.toUri.getPath)
-        .filterNot { p =>
-          val n = p.substring(p.lastIndexOf('/') + 1)
-          n.startsWith("_") || n.startsWith(".")
-        }
         .toSet
     }
 

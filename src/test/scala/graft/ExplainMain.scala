@@ -1,12 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.execution.command.DataWritingCommand
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-capture harness for the optimization rounds: writes
   * `.explain("formatted")` of each named query's RETURNED frame to
   * `<outDir>/<name>_<tag>.txt` (the `plans/r15/` deliverable). Lifecycle
   * gates perform their side effects while the frame is constructed — the
   * captured plan is the one the gate's timed evaluation runs.
+  *
+  * Those side effects are writes the returned frame does not show, so the
+  * formatted plan of every write command the gate ran while building its
+  * frame goes, in execution order, to `<outDir>/<name>_<tag>.writes.txt`.
   *
   * Usage: sbt "Test/runMain graft.ExplainMain plans/r15 before q03_join_topk ..."
   */
@@ -16,26 +23,37 @@ object ExplainMain {
     val tag = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     new java.io.File(outDir).mkdirs()
+    def save(file: String, text: String): Unit = {
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outDir/$file"), text)
+      println(s"wrote $outDir/$file")
+    }
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => System.err.println(s"unknown query $name")
         case Some(fn) =>
-          val df = fn(spark, sfDir)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$outDir/${name}_$tag.txt"), plan)
-          println(s"wrote $outDir/${name}_$tag.txt")
+          val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]
+          val listener = new QueryExecutionListener {
+            override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+              qe.analyzed match {
+                case _: DataWritingCommand | _: V2WriteCommand =>
+                  writes.add(qe.explainString(FormattedMode))
+                case _ =>
+              }
+            override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+          }
+          spark.listenerManager.register(listener)
+          val df =
+            try fn(spark, sfDir)
+            finally {
+              org.apache.spark.sql.graft.ListenerDrain(spark)
+              spark.listenerManager.unregister(listener)
+            }
+          save(s"${name}_$tag.txt", df.queryExecution.explainString(FormattedMode))
+          import scala.jdk.CollectionConverters._
+          save(s"${name}_$tag.writes.txt", writes.asScala.zipWithIndex
+            .map { case (p, i) => s"== write ${i + 1} ==\n$p" }.mkString("\n"))
       }
     }
     spark.stop()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, LongType, StructType}
 
@@ -23,12 +23,7 @@ import graft.cdc.{CdcApplier, ChangeFeed}
 object PlanSnippetsMain {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("plans/r15")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(4)
     import spark.implicits._
     new java.io.File(outDir).mkdirs()
 

@@ -1186,13 +1186,16 @@ class CdcApplierSpec extends AnyFunSuite {
 
     // (b) crash AFTER the fresh tree was fully written but BEFORE swapDir:
     // live intact, .rebucket.tmp a full-table copy. An applyBatch-only
-    // lifecycle must reclaim it instead of leaking it forever.
+    // lifecycle must reclaim it instead of leaking it forever — and the
+    // same for every other fixed staging name a writer stages under.
     val t2 = newTarget()
     CdcApplier.applyBatch(spark, ev("insert", 10, None, Some(s2)), t2, opts)
-    val staging2 = new Path(t2 + ".rebucket.tmp")
-    fs.mkdirs(staging2)
+    val fixedStaging = Seq(".tmp", ".compact.tmp", ".zorder.tmp", ".backfill.tmp",
+      ".rebucket.tmp", ".widen.tmp", ".bootstrap.tmp")
+    fixedStaging.foreach(suffix => fs.mkdirs(new Path(t2 + suffix)))
     CdcApplier.applyBatch(spark, ev("insert", 20, None, Some(s1)), t2, opts)
-    assert(!fs.exists(staging2))
+    fixedStaging.foreach(suffix =>
+      assert(!fs.exists(new Path(t2 + suffix)), s"$suffix staging leaked"))
     assert(state(t2) == Set(s1, s2))
 
     // (c) pointLookup recovers a crashed swap too (was: "no graft table
