@@ -747,21 +747,25 @@ object CdcApplier {
       case None => pmod(hash(bucketOrder: _*), lit(numBuckets))
     }
 
-  /** Driver-side bucket ids of a bounded set of literal key tuples:
-    * [[bucketExprCols]] over foldable literals, one column per tuple on a
-    * one-row plan — constant folding reduces it to a LocalTableScan, so the
-    * whole batch evaluates driver-side in one `first()`. Used by the V2
-    * connector's pushdown planning; bounded by the pushed IN-list size. */
+  /** Driver-side bucket ids of a set of literal key tuples (one id per
+    * tuple, in order): [[bucketExprCols]] over foldable literals, one
+    * column per tuple over a one-row, zero-column LOCAL relation —
+    * `ConvertToLocalRelation` folds the projection, so each `first()`
+    * evaluates on the driver and runs no Spark job. Used by the V2
+    * connector's pushdown planning, [[pointLookup]] and the index route. */
   private[graft] def bucketIdsOf(
       spark: SparkSession, tuples: Seq[Seq[Column]], numBuckets: Int,
       rangeBounds: Option[Seq[Long]]): Seq[Int] = {
-    if (tuples.isEmpty) return Seq.empty
-    val cols = tuples.zipWithIndex.map { case (lits, i) =>
-      bucketExprCols(lits, numBuckets, rangeBounds).as(s"b$i")
-    }
-    spark.sql("SELECT 1").select(cols: _*).first().toSeq.map {
-      case i: Int => i
-      case other  => throw new IllegalStateException(s"non-integer bucket id $other")
+    val one = spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row()), StructType(Nil))
+    // bounded projection width per evaluation, however many keys a caller holds
+    tuples.grouped(1024).toSeq.flatMap { chunk =>
+      one.select(chunk.zipWithIndex.map { case (lits, i) =>
+        bucketExprCols(lits, numBuckets, rangeBounds).as(s"b$i")
+      }: _*).first().toSeq.map {
+        case i: Int => i
+        case other  => throw new IllegalStateException(s"non-integer bucket id $other")
+      }
     }
   }
 
@@ -1812,8 +1816,8 @@ object CdcApplier {
     * `keys` carries one row per lookup key (the PK columns, writer-typed).
     * Point-lookup batches are driver-bounded BY CONTRACT (a `Get` batch is
     * a handful of keys, not a table — for table-sized probes use a join
-    * against [[snapshot]]); the two collects here are that bounded key set,
-    * mirroring the `touched`-buckets collect in [[applyBatch]]. */
+    * against [[snapshot]]); the one collect here is that bounded key set,
+    * and the bucket ids come from it driver-side ([[bucketIdsOf]]). */
   def pointLookup(spark: SparkSession, targetDir: String, keys: DataFrame): DataFrame = {
     val target = new Path(targetDir)
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -1834,13 +1838,16 @@ object CdcApplier {
       else throw new IllegalArgumentException(
         s"lookup keys (${keys.columns.mkString(",")}) must be the target PK " +
           s"(${pkCols.mkString(",")}) or its bucket prefix (${bucketCols.mkString(",")})")
-    val buckets = keys
-      .select(bucketExpr(bucketCols, numBuckets, meta.rangeBounds).as(BUCKET))
-      .distinct().collect().map(_.getInt(0)).sorted
-    if (buckets.isEmpty) return liveRead(spark, Some(meta), targetDir, Nil)
-    // One bounded collect of the distinct key tuples feeds every column's
-    // IN-list (contract-bounded like the bucket collect above).
-    val keyRows = keys.select(lookupCols.map(col): _*).distinct().collect()
+    // One bounded collect of the key tuples, de-duplicated on the driver,
+    // feeds the bucket ids and every column's IN-list (contract-bounded
+    // like the `touched`-buckets collect in applyBatch).
+    val keyRows = keys.select(lookupCols.map(col): _*).collect().distinct.toSeq
+    if (keyRows.isEmpty) return liveRead(spark, Some(meta), targetDir, Nil)
+    // literals typed as the caller's key columns, which the hash then sees
+    // exactly as the writer did
+    val buckets = bucketIdsOf(spark, keyRows.map(r => bucketCols.map(c =>
+      lit(r.get(lookupCols.indexOf(c))).cast(keys.schema(c).dataType))),
+      numBuckets, meta.rangeBounds).distinct.sorted
     // File-level skipping inside the covered buckets (q250): the per-column
     // key IN-lists are PK-referencing, so they are skip-safe on BOTH
     // storage modes (all of a key's versions agree on its PK) — a lookup
@@ -1850,7 +1857,7 @@ object CdcApplier {
     val fsL = target.getFileSystem(hconf)
     val inFilters: Seq[org.apache.spark.sql.sources.Filter] =
       lookupCols.zipWithIndex.map { case (pk, i) =>
-        org.apache.spark.sql.sources.In(pk, keyRows.map(_.get(i)).distinct)
+        org.apache.spark.sql.sources.In(pk, keyRows.map(_.get(i)).distinct.toArray)
       }
     val perBucket = buckets.map(b => FileStats.selectBucketFiles(
       fsL, new Path(target, s"$BUCKET=$b"), inFilters))

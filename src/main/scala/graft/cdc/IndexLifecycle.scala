@@ -234,9 +234,9 @@ object IndexLifecycle {
   }
 
   /** Drop the index on `column`: deregister the route FIRST (a route
-    * serving a deleted table would fail planning-time lookups — the rule
-    * declines on failure, but why plan for it), then the meta entry, then
-    * the index table itself. */
+    * planned against a deleted table would fail at execution — the rule
+    * declines on a missing index, but why plan for it), then the meta
+    * entry, then the index table itself. */
   def dropIndex(spark: SparkSession, storeDir: String, column: String): Unit = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val store = new Path(storeDir)

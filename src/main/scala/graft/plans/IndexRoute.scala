@@ -1,14 +1,19 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual, Literal, NamedExpression, Not}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Cast, DynamicPruningSubquery, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual, Literal, NamedExpression, Not}
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, HintInfo, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.ColumnShim
 
 import graft.cdc.CdcApplier
+import graft.cdc.CdcApplier.{BUCKET, TargetMeta}
 
 /** AUTOMATIC secondary-index routing (q266/q273/q274) — the optimizer half
   * of q123's index machinery. The engine can MAINTAIN a secondary index (a
@@ -31,7 +36,8 @@ import graft.cdc.CdcApplier
   * V2 leg fires only when the chosen scan is the plain full-coverage
   * [[graft.sources.GraftBatchScan]] — by construction that excludes as-of
   * / change-feed / limit / aggregate projections, whose semantics a
-  * current-state lookup must not impersonate.
+  * current-state lookup must not impersonate. Both legs emit the same
+  * plan: V1 reads of the index and, for a two-hop route, the store root.
   *
   * TWO predicate forms route:
   *  - point/IN (`col = lit`, `col IN (lits)`) — on any index layout;
@@ -44,35 +50,35 @@ import graft.cdc.CdcApplier
   *
   * Deliberately NARROW (the [[GraftViewRewrite]] discipline — an eager
   * rewrite is a wrong-results generator). Fires ONLY when the plan is
-  * `[Project(cols...)](Filter(conjuncts, relation(store path)))` where
-  *  - SOME conjunct routes on a registered indexed column; the remaining
-  *    conjuncts are either enforced by the lookup already (IsNotNull on
-  *    the indexed column — vacuous against literals — and the snapshot's
-  *    own tombstone filter on `_graft_deleted`, which
-  *    [[CdcApplier.pointLookup]] applies) or ride as RESIDUALS (q289)
-  *    re-applied verbatim ABOVE the fetched frame — `o_status = 'F'`
-  *    beside the routed `custkey IN (...)` routes the indexed half and
-  *    filters the rest, exactly Phoenix's index-plus-filter plan. A
-  *    non-deterministic residual declines; a residual referencing a
-  *    column the served frame lacks declines.
-  *  - the projected columns all exist on the lookup's output (data columns
-  *    + `_graft_pos`).
-  * A filter with NO routable conjunct declines — residuals alone never
-  * fabricate a route.
+  * `[Project(cols...)](Filter(conjuncts, relation(store path)))` where SOME
+  * conjunct routes on a registered indexed column and every projected
+  * column is a plain column of the served read (data columns +
+  * `_graft_pos`). The query's whole filter — minus the snapshot's own
+  * tombstone shapes on `_graft_deleted`, which the live read applies —
+  * re-applies ON TOP of the routed read against its current values (q289:
+  * `o_status = 'F'` beside the routed `custkey IN (...)` routes the indexed
+  * half and filters the rest, Phoenix's index-plus-filter plan), so the
+  * answer is exact. A non-deterministic conjunct declines; a conjunct
+  * referencing a column the served read lacks declines. A filter with NO
+  * routable conjunct declines — the rest alone never fabricates a route.
   * Freshness is the registrar's contract, exactly as for the maintained
   * views: registering asserts the index is maintained from the same
   * envelope (q123's discipline); unregister around backfills.
   *
-  * The rewrite executes the lookups at PLANNING time — driver-bounded by
-  * the same contract as every pointLookup (a point/IN batch is a handful
-  * of literals, never a table). Bounds are ENFORCED, not assumed: an
-  * IN-list wider than `spark.graft.indexroute.maxKeys` (default 1024)
-  * declines, and a range whose index matches more than that many keys
-  * declines after one bounded count over the covering index buckets —
-  * refusal is always the rule's safe default. The entire rewrite body is
+  * The rule decides from metadata and literals alone and runs no lookup:
+  * it emits a plan whose lookup happens at EXECUTION — a left-semi join of
+  * the store's live read against the literal-filtered index read, the
+  * index side broadcast, and the store scan pruning its bucket directories
+  * at run time from that same broadcast (Spark's dynamic partition
+  * pruning). Two bounds remain, because a generated 50k-literal IN or a
+  * table-wide range must not become a lookup: an IN-list wider than
+  * `spark.graft.indexroute.maxKeys` (default 1024) declines on the driver,
+  * and a two-hop range whose index matches more than that many keys
+  * declines after one bounded count over the covering index buckets — the
+  * only Spark job the rule ever runs. The rewrite body is
   * failure-isolated: ANY throw (index dir deleted after registration,
-  * layout mismatch, conversion surprise) DECLINES and the user's
-  * otherwise-valid plan runs as written, never fails planning.
+  * layout mismatch, a bucket-id evaluation surprise) DECLINES and the
+  * user's otherwise-valid plan runs as written, never fails planning.
   *
   * 100 TB: this is the difference between ≤k bucket directories and a
   * full fact-table scan, chosen automatically — now also through the
@@ -95,10 +101,8 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
   def declined: Long = declinedCount.sum()
   def resetCounters(): Unit = { firedCount.reset(); declinedCount.reset() }
 
-  /** Hard cap on planning-time lookup keys: an IN-list wider than this —
-    * or a range matching more index keys than this — declines to the scan
-    * (a generated 50k-literal IN must not run table lookups at planning
-    * time on the driver path). */
+  /** Cap on the routed IN-list width and on a two-hop range's matched
+    * index keys: wider declines to the scan, which is then the right plan. */
   private def maxKeys(spark: SparkSession): Int =
     scala.util.Try(spark.conf.get("spark.graft.indexroute.maxKeys").toInt)
       .getOrElse(1024)
@@ -110,7 +114,7 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
     indexes.remove((normalize(storePath), indexedCol))
 
   private def normalize(p: String): String =
-    new org.apache.hadoop.fs.Path(p).toUri.getPath
+    new Path(p).toUri.getPath
 
   def install(spark: SparkSession): Unit =
     if (!spark.experimental.extraOptimizations.contains(this))
@@ -146,10 +150,9 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
 
   /** The routable predicate set on a registered indexed column, or None. */
   private sealed trait Form
-  private case class Points(values: Seq[Any]) extends Form
+  private case class Points(values: Seq[Literal]) extends Form
   private case class Range(lo: Option[Long], hi: Option[Long]) extends Form
-  private case class Route(col: AttributeReference, form: Form,
-      indexDir: String, storePath: String)
+  private case class Route(col: AttributeReference, form: Form, indexDir: String)
 
   private def asLong(v: Any): Option[Long] = v match {
     case n: java.lang.Number => Some(n.longValue)
@@ -166,50 +169,43 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
   private def decExact(x: Long): Option[Long] =
     if (x == Long.MinValue) None else Some(x - 1)
 
-  /** The routable predicate on a registered indexed column, plus the
-    * conjuncts it CONSUMES (q289: everything else becomes a RESIDUAL the
-    * rewrite re-applies above the fetched frame — a point route no longer
-    * demands the filter be nothing-but-the-point). Point/IN wins over a
-    * range on ties; among several routable columns the name-least wins
-    * (determinism — the others' conjuncts ride as residuals, which is
+  /** The routable predicate on a registered indexed column. Point/IN wins
+    * over a range on ties; among several routable columns the name-least
+    * wins (determinism — the others' conjuncts filter on top, which is
     * correct either way). */
-  private def routeOf(cs: Seq[Expression], storePath: String)
-      : Option[(Route, Seq[Expression])] = {
+  private def routeOf(cs: Seq[Expression], storePath: String): Option[Route] = {
     val points = cs.collect {
-      case e @ EqualTo(a: AttributeReference, Literal(v, _)) if v != null =>
-        (a, Seq(v), e)
-      case e @ EqualTo(Literal(v, _), a: AttributeReference) if v != null =>
-        (a, Seq(v), e)
-      case e @ In(a: AttributeReference, vs) if vs.nonEmpty &&
+      case EqualTo(a: AttributeReference, l @ Literal(v, _)) if v != null => (a, Seq(l))
+      case EqualTo(l @ Literal(v, _), a: AttributeReference) if v != null => (a, Seq(l))
+      case In(a: AttributeReference, vs) if vs.nonEmpty &&
         vs.forall { case Literal(v, _) => v != null; case _ => false } =>
-        (a, vs.map { case Literal(v, _) => v }, e)
+        (a, vs.map(_.asInstanceOf[Literal]))
     }
     // range conjuncts (q274): literal one-/two-sided bounds, integral only
     // (rangeLookup's domain — the range-bucketed layouts are Long-keyed);
-    // a non-convertible bound on the routed column falls into the residual
-    // set, which the rewrite enforces above the frame — never dropped
+    // a non-convertible bound still filters on top, never dropped
     val ranges = cs.collect {
-      case e @ GreaterThan(a: AttributeReference, Literal(v, _)) if v != null =>
-        (a, asLong(v).flatMap(incExact).map(x => Range(Some(x), None)), e)
-      case e @ GreaterThan(Literal(v, _), a: AttributeReference) if v != null =>
-        (a, asLong(v).flatMap(decExact).map(x => Range(None, Some(x))), e)
-      case e @ GreaterThanOrEqual(a: AttributeReference, Literal(v, _)) if v != null =>
-        (a, asLong(v).map(x => Range(Some(x), None)), e)
-      case e @ GreaterThanOrEqual(Literal(v, _), a: AttributeReference) if v != null =>
-        (a, asLong(v).map(x => Range(None, Some(x))), e)
-      case e @ LessThan(a: AttributeReference, Literal(v, _)) if v != null =>
-        (a, asLong(v).flatMap(decExact).map(x => Range(None, Some(x))), e)
-      case e @ LessThan(Literal(v, _), a: AttributeReference) if v != null =>
-        (a, asLong(v).flatMap(incExact).map(x => Range(Some(x), None)), e)
-      case e @ LessThanOrEqual(a: AttributeReference, Literal(v, _)) if v != null =>
-        (a, asLong(v).map(x => Range(None, Some(x))), e)
-      case e @ LessThanOrEqual(Literal(v, _), a: AttributeReference) if v != null =>
-        (a, asLong(v).map(x => Range(Some(x), None)), e)
+      case GreaterThan(a: AttributeReference, Literal(v, _)) if v != null =>
+        (a, asLong(v).flatMap(incExact).map(x => Range(Some(x), None)))
+      case GreaterThan(Literal(v, _), a: AttributeReference) if v != null =>
+        (a, asLong(v).flatMap(decExact).map(x => Range(None, Some(x))))
+      case GreaterThanOrEqual(a: AttributeReference, Literal(v, _)) if v != null =>
+        (a, asLong(v).map(x => Range(Some(x), None)))
+      case GreaterThanOrEqual(Literal(v, _), a: AttributeReference) if v != null =>
+        (a, asLong(v).map(x => Range(None, Some(x))))
+      case LessThan(a: AttributeReference, Literal(v, _)) if v != null =>
+        (a, asLong(v).flatMap(decExact).map(x => Range(None, Some(x))))
+      case LessThan(Literal(v, _), a: AttributeReference) if v != null =>
+        (a, asLong(v).flatMap(incExact).map(x => Range(Some(x), None)))
+      case LessThanOrEqual(a: AttributeReference, Literal(v, _)) if v != null =>
+        (a, asLong(v).map(x => Range(None, Some(x))))
+      case LessThanOrEqual(Literal(v, _), a: AttributeReference) if v != null =>
+        (a, asLong(v).map(x => Range(Some(x), None)))
     }
     val pointRoute = points
       .filter(p => indexes.containsKey((storePath, p._1.name)))
-      .sortBy(_._1.name).headOption.map { case (a, vs, e) =>
-        (Route(a, Points(vs), indexes.get((storePath, a.name)), storePath), Seq(e))
+      .sortBy(_._1.name).headOption.map { case (a, vs) =>
+        Route(a, Points(vs), indexes.get((storePath, a.name)))
       }
     def rangeRoute = ranges
       .filter(r => r._2.isDefined && indexes.containsKey((storePath, r._1.name)))
@@ -220,140 +216,122 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
             (acc.lo.toSeq ++ r.lo.toSeq).reduceOption(math.max(_: Long, _: Long)),
             (acc.hi.toSeq ++ r.hi.toSeq).reduceOption(math.min(_: Long, _: Long)))
         }
-        (Route(a, merged, indexes.get((storePath, a.name)), storePath),
-          rs.map(_._3))
+        Route(a, merged, indexes.get((storePath, a.name)))
       }
     pointRoute.orElse(rangeRoute)
   }
 
-  /** Every conjunct the lookup chain already enforces: IsNotNull on the
-    * routed column, and the snapshot's tombstone filter shapes on
-    * `_graft_deleted` (pointLookup filters tombstones itself). */
-  private def redundant(e: Expression, routed: String): Boolean = e match {
-    case IsNotNull(a: AttributeReference) =>
-      a.name == routed || a.name == CdcApplier.DEL
-    case Not(a: AttributeReference)     => a.name == CdcApplier.DEL
+  /** The snapshot's tombstone filter shapes on `_graft_deleted`, which
+    * every live read applies itself. */
+  private def redundant(e: Expression): Boolean = e match {
+    case IsNotNull(a: AttributeReference) => a.name == CdcApplier.DEL
+    case Not(a: AttributeReference)       => a.name == CdcApplier.DEL
     case EqualTo(a: AttributeReference, Literal(false, _)) => a.name == CdcApplier.DEL
     case EqualTo(Literal(false, _), a: AttributeReference) => a.name == CdcApplier.DEL
     case _ => false
   }
 
-  /** The served frame for one route. NON-covered (the default): the index
-    * lookup's matched keys feed a second pointLookup into the store.
-    * COVERED (q282; Phoenix's covered query): when every projected column
-    * already lives on the index table, the index lookup IS the answer —
-    * one hop, no store read at all; a covered RANGE additionally needs NO
-    * key cap (nothing is ever fetched to the driver — the covering-bucket
-    * scan is distributed end-to-end, so arbitrarily wide ranges route).
-    * None declines (cap exceeded, layout ineligible). */
-  private def serve(spark: SparkSession, route: Route, storePk: Seq[String],
-      idxMeta: graft.cdc.CdcApplier.TargetMeta, covered: Boolean)
-      : Option[org.apache.spark.sql.DataFrame] = {
-    val cap = maxKeys(spark)
-    def fetch(idx: org.apache.spark.sql.DataFrame) =
-      if (covered) idx
-      else CdcApplier.pointLookup(spark, route.storePath,
-        idx.select(storePk.map(org.apache.spark.sql.functions.col): _*))
-    route.form match {
-      case Points(values) =>
-        if (values.size > cap) return None
-        // Literals carry Catalyst-INTERNAL values (UTF8String for strings,
-        // epoch ints/longs for dates/timestamps) — convert to the external
-        // form createDataFrame expects; a type whose conversion surprises
-        // DECLINES (the rule's contract), never crashes planning.
-        val external = values.map(v =>
-          org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .convertToScala(v, route.col.dataType))
-        val keys = spark.createDataFrame(
-          spark.sparkContext.parallelize(external.map(Row(_)), 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(
-              route.col.name, route.col.dataType, nullable = false))))
-        Some(fetch(CdcApplier.pointLookup(spark, route.indexDir, keys)))
+  /** The index side of a route: the index's live rows the routed literals
+    * select, read from only the index buckets they can live in, with the
+    * routed predicate below the resolve. The literals fix the bucket only
+    * when the index is bucketed on the routed column alone — point/IN
+    * literals map through [[CdcApplier.bucketIdsOf]] typed to the index
+    * column, a range to its contiguous covering buckets on a range layout
+    * (the arithmetic [[CdcApplier.rangeLookup]] uses). None declines
+    * (IN-list past the cap, layout ineligible). No Spark job runs. */
+  private def indexSide(spark: SparkSession, route: Route, idxMeta: TargetMeta)
+      : Option[DataFrame] = {
+    val name = route.col.name
+    if (idxMeta.bucketCols.orElse(idxMeta.pkCols) != Some(Seq(name))) return None
+    val c = col(name)
+    val (buckets, pred) = route.form match {
+      case Points(lits) =>
+        if (lits.size > maxKeys(spark)) return None
+        val t = CdcApplier.storedSchema(Some(idxMeta)).fold(route.col.dataType)(_(name).dataType)
+        val typed = lits.map(l => ColumnShim.column(if (l.dataType == t) l else Cast(l, t)))
+        (CdcApplier.bucketIdsOf(spark, typed.map(Seq(_)), idxMeta.numBuckets,
+          idxMeta.rangeBounds), c.isin(typed: _*))
       case Range(lo, hi) =>
-        // range routes ONLY over a range-bucketed index whose bucket key IS
-        // the indexed column (q274) — on a hash layout the range would read
-        // every index bucket, so decline
-        if (idxMeta.rangeBounds.isEmpty) return None
-        val ipk = idxMeta.pkCols.getOrElse(return None)
-        if (idxMeta.bucketCols.getOrElse(ipk).headOption != Some(route.col.name))
-          return None
-        val matched = CdcApplier.rangeLookup(spark, route.indexDir,
-          lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue))
-        if (covered) Some(matched)
-        // bounded-fetch enforcement on the two-hop form only: one count
-        // over the covering buckets — wider matches decline to the scan
-        // (which is then the right plan)
-        else if (matched.limit(cap + 1).count() > cap) None
-        else Some(fetch(matched))
+        val bounds = idxMeta.rangeBounds.getOrElse(return None)
+        val (l, h) = (lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue))
+        (bounds.count(_ <= l) to bounds.count(_ <= h), c >= l && c <= h)
     }
+    val dir = new Path(route.indexDir)
+    CdcApplier.openTarget(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
+    Some(CdcApplier.liveRead(spark, Some(idxMeta), route.indexDir, Seq(route.indexDir),
+      below = _.filter(col(BUCKET).isin(buckets.distinct: _*)).filter(pred)))
+  }
+
+  /** The two-hop store side: the store's live read over the whole table,
+    * left-semi joined below its resolve against the index side's
+    * (PK, store bucket) pairs. The bucket equality is exact by
+    * construction — the writer placed every row by that same
+    * [[CdcApplier.bucketExprCols]] — and lets the store scan prune its
+    * bucket directories at run time: a dynamic-pruning filter over the
+    * store relation reuses the join's broadcast (its build keys ARE the
+    * join's), and `onlyInBroadcast` keeps it from ever planning a second
+    * read of the index. The broadcast hint sits on the Join itself: hint
+    * wrappers are resolved before user rules run. Both the semi-join and
+    * the pruning filter reference only the PK, so they are safe below a
+    * version-bearing layout's resolve. None declines: a two-hop RANGE
+    * whose index matches more than the cap — the one data-dependent
+    * decline, and so the rule's one planning-time job. */
+  private def storeSide(spark: SparkSession, route: Route, storePath: String,
+      storeMeta: TargetMeta, storePk: Seq[String], index: DataFrame): Option[LogicalPlan] = {
+    val cap = maxKeys(spark)
+    if (route.form.isInstanceOf[Range] && index.limit(cap + 1).count() > cap) return None
+    val keys = index.select(storePk.map(col) :+ CdcApplier.bucketExprCols(
+      storeMeta.bucketCols.getOrElse(storePk).map(col), storeMeta.numBuckets,
+      storeMeta.rangeBounds).as(BUCKET): _*)
+    val read = CdcApplier.liveRead(spark, Some(storeMeta), storePath, Seq(storePath),
+      below = _.join(keys, storePk :+ BUCKET, "left_semi"))
+    Some(read.queryExecution.analyzed.transformUp {
+      case j @ Join(_, _, LeftSemi, _, _) => j match {
+        case ExtractEquiJoinKeys(_, leftKeys, rightKeys, _, _, left, right, _) =>
+          val b = leftKeys.indexWhere(_.references.exists(_.name == BUCKET))
+          val pruning = DynamicPruningSubquery(leftKeys(b), right, rightKeys, Seq(b),
+            onlyInBroadcast = true)
+          j.copy(left = left.transformUp { case r: LogicalRelation => Filter(pruning, r) },
+            hint = JoinHint(None, Some(HintInfo(Some(BROADCAST)))))
+        case _ => j
+      }
+    })
   }
 
   private def rewrite(projList: Seq[NamedExpression], cond: Expression,
       storePath: String): Option[LogicalPlan] = {
-    val cs = conjuncts(cond)
+    val kept = conjuncts(cond).filterNot(redundant)
+    val spark = SparkSession.active
+    val conf = spark.sparkContext.hadoopConfiguration
     for {
-      routed <- routeOf(cs, storePath)
-      (route, consumed) = routed
-      // RESIDUAL conjuncts (q289): everything the lookup chain does not
-      // already enforce re-applies ABOVE the fetched frame — the routed
-      // half narrows the read, the residual keeps the exact semantics.
-      // Non-deterministic residuals decline (re-evaluation could differ).
-      consumedSet = consumed.toSet
-      residual = cs.filterNot(c =>
-        consumedSet.contains(c) || redundant(c, route.col.name))
-      _ <- if (residual.forall(_.deterministic)) Some(()) else None
-      residRefs = residual.flatMap(_.references.toSeq.map(_.name)).toSet
+      route <- routeOf(kept, storePath)
+      if kept.forall(_.deterministic)
       // pure column projection only (the snapshot/tableSchema shape)
-      outAttrs <- Some(projList).filter(_.forall(_.isInstanceOf[AttributeReference]))
-      spark = SparkSession.active
-      storeMeta <- graft.cdc.CdcApplier.TargetMeta.read(
-        spark.sparkContext.hadoopConfiguration,
-        new org.apache.hadoop.fs.Path(storePath))
+      outAttrs <- Some(projList.collect { case a: AttributeReference => a })
+        .filter(_.size == projList.size)
+      storeMeta <- TargetMeta.read(conf, new Path(storePath))
       storePk <- storeMeta.pkCols
-      idxMeta <- graft.cdc.CdcApplier.TargetMeta.read(
-        spark.sparkContext.hadoopConfiguration,
-        new org.apache.hadoop.fs.Path(route.indexDir))
-      // covered eligibility (q282): every projected column — and every
-      // residual-referenced column — lives on the index table; LOGICAL
-      // names, since the lookup logicalizes. The layout offset
-      // `_graft_pos` is NEVER covered: the index's positions are its own,
-      // not the store's, and serving them would lie.
-      idxCols = idxMeta.schemaJson.map(j =>
-        org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq
-          .filterNot(c => c == CdcApplier.DEL || c == CdcApplier.BUCKET)
-          .map(c => CdcApplier.logicalName(Some(idxMeta), c)).toSet)
-        .getOrElse(Set.empty[String])
-      covers = (n: String) => n != CdcApplier.POS && idxCols.contains(n)
-      covered = idxCols.nonEmpty && outAttrs.forall(o => covers(o.name)) &&
-        residRefs.forall(covers)
-      fetched <- serve(spark, route, storePk, idxMeta, covered)
-      // this subtree is injected POST-analysis into an already-optimized
-      // plan, so hint wrappers must be resolved here (EliminateResolvedHint
-      // already ran); dropping them costs at most a join strategy, and the
-      // semi-join's key side is stats-tiny anyway
-      plan = fetched.queryExecution.analyzed.transform {
-        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h.child
-      }
-      byName: Map[String, org.apache.spark.sql.catalyst.expressions.Attribute] =
-        plan.output.map(a => a.name -> a).toMap
-      _ <- if (outAttrs.forall(o => byName.contains(o.name)) &&
-        residRefs.forall(byName.contains)) Some(()) else None
-      // the residual's attributes re-bind to the served frame's exprIds
-      withResidual = if (residual.isEmpty) plan
-        else Filter(residual.map(_.transform {
-          case a: AttributeReference => byName(a.name)
-        }).reduce(And), plan)
-    } yield Project(outAttrs.map { o =>
-      Alias(byName(o.name), o.name)(exprId = o.exprId)
-    }, withResidual)
+      idxMeta <- TargetMeta.read(conf, new Path(route.indexDir))
+      index <- indexSide(spark, route, idxMeta)
+      refs = outAttrs.map(_.name) ++ kept.flatMap(_.references.map(_.name))
+      // covered (q282; Phoenix's covered query): every projected and
+      // filtered column lives on the index, so the index side IS the answer
+      // and nothing touches the store. The layout offset `_graft_pos` is
+      // NEVER covered: the index's positions are its own, not the store's.
+      covered = refs.forall(n => n != CdcApplier.POS && index.columns.contains(n))
+      served <- if (covered) Some(index.queryExecution.analyzed)
+        else storeSide(spark, route, storePath, storeMeta, storePk, index)
+      byName = served.output.map(a => a.name -> a).toMap
+      if refs.forall(byName.contains)
+    } yield Project(outAttrs.map(o => Alias(byName(o.name), o.name)(exprId = o.exprId)),
+      Filter(kept.map(_.transform { case a: AttributeReference => byName(a.name) })
+        .reduce(And), served))
   }
 
   /** [[rewrite]] with the rule's decline-on-ANY-failure contract: the body
-    * runs planning-time lookups against live state, and an index dir
-    * deleted or corrupted after registration must fail THE REWRITE, never
-    * the user's otherwise-valid plan. */
+    * reads live table metadata, and an index dir deleted or corrupted
+    * after registration must fail THE REWRITE, never the user's
+    * otherwise-valid plan. */
   private def tryRewrite(projList: Seq[NamedExpression], cond: Expression,
       storePath: String): Option[LogicalPlan] =
     try rewrite(projList, cond, storePath)
@@ -362,6 +340,12 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
         logWarning(s"graft index route declined on failure: $e")
         None
     }
+
+  /** The rule's own output: the routed store read, a dynamic-pruning
+    * filter over the registered store path. The fixed-point batch re-runs
+    * the rule on it, and it must not be consulted again. */
+  private def routed(cond: Expression): Boolean =
+    cond.exists(_.isInstanceOf[DynamicPruningSubquery])
 
   /** Counting is PER PLAN: one fired tick when any rewrite landed in this
     * apply, else one declined tick when a registered relation was consulted
@@ -384,7 +368,7 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
         }
       }.getOrElse(p)
     val out = plan.transform {
-      case p @ Project(projList, Filter(cond, rel: LogicalRelation)) =>
+      case p @ Project(projList, Filter(cond, rel: LogicalRelation)) if !routed(cond) =>
         consult(p, projList, cond, rel)
       case p @ Project(projList, Filter(cond, rel: DataSourceV2ScanRelation)) =>
         consult(p, projList, cond, rel)

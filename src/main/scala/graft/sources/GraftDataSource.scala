@@ -196,15 +196,8 @@ class GraftV1Relation(ctx: SQLContext, targetDir: String,
 
   override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
     val spark = ctx.sparkSession
-    val target = new Path(targetDir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = target.getFileSystem(hconf)
-    CdcApplier.openTarget(fs, target)
-    val all = CdcApplier.bucketIds(fs, target)
-    val meta = TargetMeta.read(hconf, target)
-    val covered =
-      if (changesFrom.isDefined) all
-      else GraftScan.coveredBuckets(meta, schema, filters, all)
+    val (pruned, all) = GraftScan.coverage(spark, targetDir, schema, filters)
+    val covered = if (changesFrom.isDefined) all else pruned
     val required = StructType(requiredColumns.map(schema(_)))
     GraftScan.planRead(spark, targetDir, schema, required, filters, covered,
         asOf, changesFrom)
@@ -594,24 +587,20 @@ class GraftScanBuilder(spark: SparkSession, targetDir: String, fullSchema: Struc
     * keeps the V1 [[GraftScan]] leg (already bucket-pruned / mode-special,
     * runtime filtering has nothing left to win there). */
   override def build(): Scan = aggScan.getOrElse {
-    val runtimeEligible =
-      asOf.isEmpty && changesFrom.isEmpty && pushedLimit.isEmpty &&
-        branch.isEmpty && {
-        val target = new Path(targetDir)
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val fs = target.getFileSystem(hconf)
-        CdcApplier.openTarget(fs, target)
-        val all = CdcApplier.bucketIds(fs, target)
-        val meta = TargetMeta.read(hconf, target)
-        all.nonEmpty &&
-          GraftScan.coveredBuckets(meta, fullSchema, pushed, all).size == all.size
-      }
-    if (runtimeEligible)
-      new GraftBatchScan(spark, targetDir, fullSchema, required, pushed,
-        spjCapable = spjCapable)
-    else
-      new GraftScan(spark, targetDir, fullSchema, required, pushed, asOf,
-        changesFrom, pushedLimit, branch)
+    // (covered, all) of a plain current-state read, computed once and
+    // handed to the V1 leg when the static predicates did prune
+    val coverage =
+      if (asOf.isEmpty && changesFrom.isEmpty && pushedLimit.isEmpty && branch.isEmpty)
+        Some(GraftScan.coverage(spark, targetDir, fullSchema, pushed))
+      else None
+    coverage match {
+      case Some((covered, all)) if all.nonEmpty && covered.size == all.size =>
+        new GraftBatchScan(spark, targetDir, fullSchema, required, pushed,
+          spjCapable = spjCapable)
+      case _ =>
+        new GraftScan(spark, targetDir, fullSchema, required, pushed, asOf,
+          changesFrom, pushedLimit, branch, coverage)
+    }
   }
 }
 
@@ -622,22 +611,18 @@ class GraftScan(
     spark: SparkSession, targetDir: String, fullSchema: StructType,
     required: StructType, pushed: Array[Filter],
     asOf: Option[Long] = None, changesFrom: Option[Long] = None,
-    limit: Option[Int] = None, branchOf: Option[String] = None) extends V1Scan
+    limit: Option[Int] = None, branchOf: Option[String] = None,
+    coverage: Option[(Seq[Int], Seq[Int])] = None) extends V1Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
-  /** (covered bucket ids, all bucket ids) — exposed for plan tests. */
-  val (prunedBuckets, allBuckets): (Seq[Int], Seq[Int]) = {
-    val target = new Path(targetDir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = target.getFileSystem(hconf)
-    CdcApplier.openTarget(fs, target)
-    val all = CdcApplier.bucketIds(fs, target)
-    val meta = TargetMeta.read(hconf, target)
+  /** (covered bucket ids, all bucket ids) — exposed for plan tests; the
+    * value [[GraftScanBuilder]] already computed, when it passed one. */
+  val (prunedBuckets, allBuckets): (Seq[Int], Seq[Int]) = coverage.getOrElse {
+    val c = GraftScan.coverage(spark, targetDir, fullSchema, pushed)
     // the change feed reconstructs before-images from each touched key's
     // version chain — its internal semi-join already bounds the read, and
     // pushed-filter bucket pruning does not apply to the envelope shape
-    if (changesFrom.isDefined) (all, all)
-    else (GraftScan.coveredBuckets(meta, fullSchema, pushed, all), all)
+    if (changesFrom.isDefined) (c._2, c._2) else c
   }
 
   /** Branch-side coverage (q277): the branch delta dir shares main's exact
@@ -807,6 +792,19 @@ object GraftScan {
   }
 
   private val MaxTuples = 1024 // pruning is worth a bounded driver loop only
+
+  /** (covered bucket ids, all bucket ids) of a read of `targetDir` under
+    * the pushed filters: the live tree is opened, listed and its meta read
+    * once, then [[coveredBuckets]] maps the predicates. */
+  private[sources] def coverage(spark: SparkSession, targetDir: String,
+      schema: StructType, pushed: Array[Filter]): (Seq[Int], Seq[Int]) = {
+    val target = new Path(targetDir)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val fs = target.getFileSystem(hconf)
+    CdcApplier.openTarget(fs, target)
+    val all = CdcApplier.bucketIds(fs, target)
+    (coveredBuckets(TargetMeta.read(hconf, target), schema, pushed, all), all)
+  }
 
   /** Map pushed conjuncts to the covered bucket ids, or `all` when the
     * predicates don't bound the bucket key. Hash layouts need a bounded

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.catalyst.plans.logical.{Command, V2WriteCommand}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.execution.command.DataWritingCommand
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -13,7 +13,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * Those side effects are writes the returned frame does not show, so the
   * formatted plan of every write command the gate ran while building its
-  * frame goes, in execution order, to `<outDir>/<name>_<tag>.writes.txt`.
+  * frame goes, in execution order, to `<outDir>/<name>_<tag>.writes.txt`,
+  * and that of every other query it ran (the in-gate reads and checks, as
+  * executed, AQE's final plan included) to `<outDir>/<name>_<tag>.reads.txt`.
   *
   * Usage: sbt "Test/runMain graft.ExplainMain plans/r15 before q03_join_topk ..."
   */
@@ -34,12 +36,14 @@ object ExplainMain {
         case None => System.err.println(s"unknown query $name")
         case Some(fn) =>
           val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]
+          val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]
           val listener = new QueryExecutionListener {
             override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
               qe.analyzed match {
                 case _: DataWritingCommand | _: V2WriteCommand =>
                   writes.add(qe.explainString(FormattedMode))
-                case _ =>
+                case _: Command =>
+                case _ => reads.add(qe.explainString(FormattedMode))
               }
             override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
           }
@@ -54,6 +58,8 @@ object ExplainMain {
           import scala.jdk.CollectionConverters._
           save(s"${name}_$tag.writes.txt", writes.asScala.zipWithIndex
             .map { case (p, i) => s"== write ${i + 1} ==\n$p" }.mkString("\n"))
+          save(s"${name}_$tag.reads.txt", reads.asScala.zipWithIndex
+            .map { case (p, i) => s"== read ${i + 1} ==\n$p" }.mkString("\n"))
       }
     }
     spark.stop()

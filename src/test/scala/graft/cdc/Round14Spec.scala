@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cdc.CdcApplier.TargetMeta
 
-/** Round-14 surfaces: the planning-time lookup cap + failure isolation on
-  * the index route (q273/q274 + the round-13 ADVICE items), the
+/** Round-14 surfaces: the lookup cap + failure isolation on the index
+  * route (q273/q274 + the round-13 ADVICE items) and its execution-time
+  * plan (no planning jobs, run-time store bucket pruning), the
   * state-preserving publish's atomic theft refusal, the commit-stamp
   * retention floor, deletion-vector guard rails (q275), sorted-MOR
   * compaction honesty (q276), branch SQL-read edges (q277), and the
@@ -153,6 +154,140 @@ class Round14Spec extends AnyFunSuite {
       spark.conf.unset("spark.graft.indexroute.maxKeys")
       GraftIndexRoute.unregister(store, "v")
     }
+  }
+
+  // ---- execution-time routing: no planning jobs, run-time bucket pruning ----
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.ListenerDrain(spark)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.sql.graft.ListenerDrain(spark)
+      (r, n.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** The executed file scans whose root is `dir`, AQE stages included. */
+  private def scansOf(df: DataFrame, dir: String) = {
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val root = new Path(dir).toUri.getPath
+    helper.collect(df.queryExecution.executedPlan) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.relation.location.rootPaths.map(_.toUri.getPath) == Seq(root) => f
+    }
+  }
+
+  /** Stored buckets holding the given store keys. */
+  private def bucketsOf(store: String, keys: Seq[Long]): Long =
+    spark.read.parquet(store).filter($"k".isin(keys: _*))
+      .select(CdcApplier.BUCKET).distinct().count()
+
+  /** One routed query: 0 jobs and exactly one fired tick while planning;
+    * then, on a two-hop route, the store scan reads exactly the buckets the
+    * matched keys live in; the answer equals the unrouted plan's. */
+  private def assertRoutedAtExecution(query: () => DataFrame, store: String,
+      storeCol: String, twoHop: Boolean, unroute: () => Unit): Unit = {
+    import graft.plans.GraftIndexRoute
+    val f0 = GraftIndexRoute.fired
+    val d0 = GraftIndexRoute.declined
+    val df = query()
+    val (_, planJobs) = jobsDuring(df.queryExecution.optimizedPlan)
+    assert(planJobs == 0, "a routed query must run no Spark job while planning")
+    assert(GraftIndexRoute.fired == f0 + 1 && GraftIndexRoute.declined == d0,
+      "one fired tick per planned query, though the batch re-applies the rule")
+    val routed = df.collect().map(_.toString).sorted.toSeq
+    val storeScans = scansOf(df, store)
+    if (twoHop) {
+      val keys = df.select(storeCol).collect().map(_.getLong(0)).toSeq
+      val k = bucketsOf(store, keys)
+      val n = CdcApplier.bucketIds(fsOf(store), new Path(store)).size
+      assert(k > 0 && k < n, s"the fixture must match a strict bucket subset: $k/$n")
+      assert(storeScans.size == 1, s"one store scan: $storeScans")
+      assert(storeScans.head.metrics("numPartitions").value == k,
+        "the store scan must prune to the matched keys' buckets at run time")
+    } else assert(storeScans.isEmpty, "a covered route never reads the store")
+    unroute()
+    assert(query().collect().map(_.toString).sorted.toSeq == routed,
+      "routed and unrouted answers must be identical")
+  }
+
+  test("indexroute: two-hop routes run at execution and prune store buckets (V1 leg)") {
+    val base = Files.createTempDirectory("graft_r14").toString
+    val (store, index) = (base + "/store", base + "/index")
+    // `w` lives only on the store, so projecting it forces the two-hop route
+    val data = spark.range(1, 201)
+      .select($"id".as("k"), ($"id" % 50).as("v"), ($"id" + 0.5).as("w"))
+    CdcApplier.applyBatch(spark, ChangeFeed.inserts(data, $"k" * 10), store,
+      CdcApplier.Options(Seq("k"), numBuckets = 16))
+    CdcApplier.applyBatch(spark,
+      ChangeFeed.inserts(data.select($"v", $"k"), $"k" * 10), index,
+      CdcApplier.Options(Seq("v", "k"), bucketCols = Some(Seq("v")), numBuckets = 4))
+    import graft.plans.GraftIndexRoute
+    GraftIndexRoute.install(spark)
+    GraftIndexRoute.register(store, "v", index)
+    try assertRoutedAtExecution(
+      () => CdcApplier.snapshot(spark, store).filter($"v".isin(3L, 7L)).select($"k", $"v", $"w"),
+      store, "k", twoHop = true, () => GraftIndexRoute.unregister(store, "v"))
+    finally GraftIndexRoute.unregister(store, "v")
+  }
+
+  test("indexroute: catalog SQL routes at execution (V2 leg); covered routes skip the store") {
+    val root = Files.createTempDirectory("graft_r14cat").toString
+    spark.conf.set("spark.sql.catalog.r14cat", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.r14cat.root", root)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS r14cat.prod")
+    spark.sql("""CREATE TABLE r14cat.prod.routed (k BIGINT, v BIGINT, w DOUBLE)
+                 OPTIONS (pk 'k', buckets '16')""")
+    val store = s"$root/prod/routed"
+    val data = spark.range(1, 201)
+      .select($"id".as("k"), ($"id" % 50).as("v"), ($"id" + 0.5).as("w"))
+    CdcApplier.applyBatch(spark, ChangeFeed.inserts(data, $"k" * 10), store,
+      CdcApplier.Options(Seq("k"), numBuckets = 16))
+    val index = Files.createTempDirectory("graft_r14").toString + "/index"
+    CdcApplier.applyBatch(spark,
+      ChangeFeed.inserts(data.select($"v", $"k"), $"k" * 10), index,
+      CdcApplier.Options(Seq("v", "k"), bucketCols = Some(Seq("v")), numBuckets = 4))
+    import graft.plans.GraftIndexRoute
+    GraftIndexRoute.install(spark)
+    try {
+      // a PK IN-list on the catalog table plans with no Spark job: its
+      // bucket ids fold driver-side
+      val (_, pkJobs) = jobsDuring(spark.sql(
+        "SELECT k, w FROM r14cat.prod.routed WHERE k IN (3, 17, 42)").queryExecution.optimizedPlan)
+      assert(pkJobs == 0, "a catalog PK IN-list must plan without a Spark job")
+      GraftIndexRoute.register(store, "v", index)
+      assertRoutedAtExecution(
+        () => spark.sql("SELECT k, v, w FROM r14cat.prod.routed WHERE v IN (3, 7)"),
+        store, "k", twoHop = true, () => GraftIndexRoute.unregister(store, "v"))
+      GraftIndexRoute.register(store, "v", index)
+      assertRoutedAtExecution(
+        () => spark.sql("SELECT k, v FROM r14cat.prod.routed WHERE v = 7"),
+        store, "k", twoHop = false, () => GraftIndexRoute.unregister(store, "v"))
+    } finally GraftIndexRoute.unregister(store, "v")
+  }
+
+  test("pointLookup: a composite-key lookup collects its keys once, plans no job") {
+    val t = newTarget()
+    val data = spark.range(1, 101).select(($"id" % 10).as("a"), ($"id" / 10).cast("long").as("b"),
+      ($"id" * 1.5).as("v"))
+    val copts = CdcApplier.Options(Seq("a", "b"), numBuckets = 4)
+    CdcApplier.applyBatch(spark, ChangeFeed.inserts(data, $"a" * 1000 + $"b"), t, copts)
+    // (1, 0) and (2, 1) exist; the cross product's (1, 1) and (2, 0) also
+    // exist and must NOT match
+    val keys = Seq((1L, 0L), (2L, 1L), (1L, 0L)).toDF("a", "b")
+    val (rows, jobs) = jobsDuring(CdcApplier.pointLookup(spark, t, keys)
+      .select($"a", $"b").collect())
+    assert(rows.map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq == Seq((1L, 0L), (2L, 1L)),
+      "the lookup must match the key tuples exactly")
+    // the keys' broadcast and the scan: no key-frame collects or bucket probes
+    assert(jobs == 2, s"one broadcast and one scan job: $jobs")
   }
 
   // ---- state-preserving publish: atomic theft refusal (ADVICE r13) -------
