@@ -184,10 +184,8 @@ object Branch {
     val bucketCols = meta.bucketCols.getOrElse(pk)
     require(keys.columns.toSet == pk.toSet || keys.columns.toSet == bucketCols.toSet,
       s"lookup keys (${keys.columns.mkString(",")}) must be the PK or its bucket prefix")
-    val buckets = keys
-      .select(CdcApplier.bucketExprCols(bucketCols.map(col), meta.numBuckets,
-        meta.rangeBounds).as(BUCKET))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
+    val (_, buckets) = CdcApplier.lookupBuckets(spark, meta, keys,
+      keys.columns.toSeq, bucketCols)
     def pruned(dir: String): Seq[String] = {
       val present = CdcApplier.bucketIds(fsOf(spark, dir), new Path(dir)).toSet
       buckets.filter(present).map(b => s"$dir/$BUCKET=$b")

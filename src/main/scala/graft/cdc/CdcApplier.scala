@@ -1824,7 +1824,6 @@ object CdcApplier {
     openTarget(target.getFileSystem(hconf), target)
     val meta = TargetMeta.read(hconf, target).getOrElse(
       throw new IllegalStateException(s"no graft table state at $targetDir"))
-    val numBuckets = meta.numBuckets
     // Hash in the layout's persisted column order — the caller's key-frame
     // column order must not change which bucket a key lands in.
     val pkCols = meta.pkCols.getOrElse(keys.columns.toSeq)
@@ -1838,16 +1837,9 @@ object CdcApplier {
       else throw new IllegalArgumentException(
         s"lookup keys (${keys.columns.mkString(",")}) must be the target PK " +
           s"(${pkCols.mkString(",")}) or its bucket prefix (${bucketCols.mkString(",")})")
-    // One bounded collect of the key tuples, de-duplicated on the driver,
-    // feeds the bucket ids and every column's IN-list (contract-bounded
-    // like the `touched`-buckets collect in applyBatch).
-    val keyRows = keys.select(lookupCols.map(col): _*).collect().distinct.toSeq
+    // the key tuples also feed every column's IN-list
+    val (keyRows, buckets) = lookupBuckets(spark, meta, keys, lookupCols, bucketCols)
     if (keyRows.isEmpty) return liveRead(spark, Some(meta), targetDir, Nil)
-    // literals typed as the caller's key columns, which the hash then sees
-    // exactly as the writer did
-    val buckets = bucketIdsOf(spark, keyRows.map(r => bucketCols.map(c =>
-      lit(r.get(lookupCols.indexOf(c))).cast(keys.schema(c).dataType))),
-      numBuckets, meta.rangeBounds).distinct.sorted
     // File-level skipping inside the covered buckets (q250): the per-column
     // key IN-lists are PK-referencing, so they are skip-safe on BOTH
     // storage modes (all of a key's versions agree on its PK) — a lookup
@@ -1874,6 +1866,23 @@ object CdcApplier {
           d.filter(col(pk).isin(keyRows.map(_.get(i)).distinct: _*))
         }.join(broadcast(keys), lookupCols, "left_semi")
       })
+  }
+
+  /** A bounded lookup key frame's distinct key tuples, in `lookupCols`
+    * order — ONE collect, de-duplicated on the driver (contract-bounded
+    * like the `touched`-buckets collect in applyBatch) — and the sorted
+    * bucket ids they map to through [[bucketIdsOf]], which runs no job.
+    * The literals are typed as the caller's key columns, which the hash
+    * then sees exactly as the writer did. `bucketCols` ⊆ `lookupCols`.
+    * Shared by [[pointLookup]] and [[Branch.pointLookup]]. */
+  private[cdc] def lookupBuckets(spark: SparkSession, meta: TargetMeta,
+      keys: DataFrame, lookupCols: Seq[String], bucketCols: Seq[String])
+      : (Seq[org.apache.spark.sql.Row], Seq[Int]) = {
+    val keyRows = keys.select(lookupCols.map(col): _*).collect().distinct.toSeq
+    val buckets = bucketIdsOf(spark, keyRows.map(r => bucketCols.map(c =>
+      lit(r.get(lookupCols.indexOf(c))).cast(keys.schema(c).dataType))),
+      meta.numBuckets, meta.rangeBounds).distinct.sorted
+    (keyRows, buckets)
   }
 
   /** [[snapshot]] for callers that must distinguish "this target was never

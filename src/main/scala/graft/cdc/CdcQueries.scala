@@ -1620,10 +1620,10 @@ object CdcQueries {
     }),
 
     // CONNECTOR STATISTICS (q236): the scan reports its covered-bucket
-    // bytes as relation statistics (GraftScan.prunedBytes ->
-    // GraftRelation.sizeInBytes), so Catalyst's JoinSelection sizes graft
-    // reads correctly — a dimension-sized graft table joined to a fact
-    // auto-broadcasts with NO hint. Without the override, V1 relations
+    // bytes as relation statistics (GraftBatchScan.estimateStatistics),
+    // so Catalyst's JoinSelection sizes graft reads correctly — a
+    // dimension-sized graft table joined to a fact auto-broadcasts with NO
+    // hint. Without the override, relations
     // report defaultSizeInBytes (= infinite) and every graft join plans as
     // a shuffle — at 100 TB the difference between a map-side hash probe
     // and shuffling the fact table. The gate SELF-AUDITS the plan: the

@@ -36,7 +36,7 @@ import org.apache.spark.sql.sources._
   * bucket — the same I/O class as the directory listing they already do.
   *
   * Correctness rules (mirrors the row-group pushdown discipline in
-  * [[graft.sources.GraftScan]]):
+  * [[graft.sources.GraftBatchScan]]):
   *  - Spark re-evaluates every pushed predicate above the scan, so a
   *    MATCHING file wrongly kept costs performance only. The matcher is
   *    therefore conservative: any unknown (missing sidecar, missing file
@@ -448,23 +448,5 @@ object FileStats {
       case _ => ()
     }
     (byMin.map(_._1), depth)
-  }
-
-  /** Multi-bucket selection for the V1 scan: Some((kept file paths, kept
-    * count, total count)) when at least one sidecar exists under the
-    * covered buckets AND there is something to test; None = read the bucket
-    * directories as before (pre-upgrade targets lose nothing). */
-  def selectFiles(fs: FileSystem, target: Path, buckets: Seq[Int],
-      filters: Seq[Filter]): Option[(Seq[String], Int, Int)] = {
-    if (filters.isEmpty || buckets.isEmpty) return None
-    val perBucket = buckets.map(b =>
-      selectBucketFiles(fs, new Path(target, s"${CdcApplier.BUCKET}=$b"), filters))
-    val anySidecar = buckets.exists(b =>
-      fs.exists(new Path(target, s"${CdcApplier.BUCKET}=$b/$SIDECAR")))
-    if (!anySidecar) None
-    else {
-      val kept = perBucket.flatMap(_._1).map(_.getPath.toString)
-      Some((kept, kept.size, perBucket.map(_._2).sum))
-    }
   }
 }

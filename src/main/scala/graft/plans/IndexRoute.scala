@@ -29,15 +29,17 @@ import graft.cdc.CdcApplier.{BUCKET, TargetMeta}
   * path, SURVEY S7/EP3; public design point: Phoenix/Astro secondary-index
   * plan rewrite).
   *
-  * TWO plan legs route (q273): the V1 `LogicalRelation(HadoopFsRelation)`
+  * TWO relation shapes route (q273): the V1 `LogicalRelation(HadoopFsRelation)`
   * shape the Scala read paths ([[CdcApplier.snapshot]]) produce, and the
-  * DataSource-V2 `DataSourceV2ScanRelation` shape catalog SQL
-  * (`SELECT ... FROM cat.ns.t WHERE ...`) reaches the optimizer with. The
-  * V2 leg fires only when the chosen scan is the plain full-coverage
-  * [[graft.sources.GraftBatchScan]] — by construction that excludes as-of
-  * / change-feed / limit / aggregate projections, whose semantics a
-  * current-state lookup must not impersonate. Both legs emit the same
-  * plan: V1 reads of the index and, for a two-hop route, the store root.
+  * connector's one scan, [[graft.sources.GraftBatchScan]], in the
+  * `DataSourceV2ScanRelation` catalog SQL (`SELECT ... FROM cat.ns.t
+  * WHERE ...`) reaches the optimizer with. The connector shape routes only
+  * a [[graft.sources.GraftBatchScan.wholeTable]] read — a plain
+  * current-state read no pushed key predicate pruned; as-of, branch,
+  * limit, change-feed and aggregate projections, whose semantics a
+  * current-state lookup must not impersonate, never route. Both shapes
+  * emit the same plan: V1 reads of the index and, for a two-hop route,
+  * the store root.
   *
   * TWO predicate forms route:
   *  - point/IN (`col = lit`, `col IN (lits)`) — on any index layout;
@@ -123,10 +125,9 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
 
   /** The store path of a routable relation, or None. V1: a single-root
     * HadoopFsRelation (the snapshot read). V2 (q273): a catalog/path graft
-    * table whose chosen scan is the plain full-coverage Batch leg — the
-    * builder picks it exactly when no static predicate bounded the bucket
-    * key and no as-of/change-feed/limit/aggregate mode is in play, which
-    * is precisely the only shape a current-state lookup may replace. */
+    * table whose scan reads the whole current table
+    * ([[graft.sources.GraftBatchScan.wholeTable]]) — precisely the only
+    * shape a current-state lookup may replace. */
   private def scanPath(plan: LogicalPlan): Option[String] = plan match {
     case r: LogicalRelation => r.relation match {
       case fs: HadoopFsRelation => fs.location.rootPaths.toList match {
@@ -136,7 +137,7 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
       case _ => None
     }
     case r: DataSourceV2ScanRelation => (r.relation.table, r.scan) match {
-      case (t: graft.sources.GraftTable, _: graft.sources.GraftBatchScan) =>
+      case (t: graft.sources.GraftTable, s: graft.sources.GraftBatchScan) if s.wholeTable =>
         Some(normalize(t.targetDir))
       case _ => None
     }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -8,43 +10,50 @@ import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.graft.ParquetReadShim
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{BooleanType, DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.cdc.CdcApplier
 import graft.cdc.CdcApplier.TargetMeta
 
-/** The RUNTIME-FILTERABLE read leg of the graft connector (q244): a true
-  * DataSource-V2 `Batch` scan, chosen by [[GraftScanBuilder]] exactly when
-  * the static predicates could NOT bound the bucket key — the case where
-  * the only remaining pruning opportunity is a JOIN's runtime keys. Spark's
-  * dynamic-pruning machinery (`PartitionPruning` → `BatchScanExec`) then
-  * feeds the dimension side's observed join keys into
-  * [[SupportsRuntimeFiltering.filter]] at EXECUTION time, and this scan
-  * maps them through the same literal-keys→bucket arithmetic the static
-  * pushdown uses ([[GraftScan.coveredBuckets]] over the writer's own hash /
-  * range-split expression) — so `SELECT ... FROM fact JOIN dim ON fact.pk =
-  * dim.k WHERE dim.x = ...` reads only the buckets the dimension's keys
-  * can live in, instead of every bucket the layout holds. This is the join
-  * form of the reference's rowkey-prefix pruning (Astro scans prune HBase
-  * regions by rowkey prefix; SURVEY EP3), and at 100 TB it is the
-  * difference between touching ≤|dim keys| bucket directories and scanning
-  * the fact table.
+/** The graft connector's one scan for the table's own shape: a true
+  * DataSource-V2 `Batch` scan that serves every current-state read —
+  * full, bucket-pruned by pushed key predicates, LIMIT-capped — and the
+  * two history shapes: time travel (`asOfPos` / `VERSION AS OF`) and
+  * branch lineage (q277/q287). Only the change-feed envelope
+  * (`changesFrom`), which is not a stored read, keeps its own V1
+  * [[GraftScan]].
   *
-  * Planning: ONE input partition per bucket directory. A bucket is
+  * Pruning: the pushed predicates map to the covered bucket ids ONCE, when
+  * the scan is built ([[GraftScan.coveredBuckets]] over the writer's own
+  * hash / range-split expression). At execution, Spark's dynamic-pruning
+  * machinery (`PartitionPruning` → `BatchScanExec`) may additionally feed a
+  * JOIN's observed dimension keys into [[SupportsRuntimeFiltering.filter]]
+  * (q244), which narrows that static coverage through the same arithmetic
+  * — so `SELECT ... FROM fact JOIN dim ON fact.pk = dim.k WHERE dim.x = ...`
+  * reads only the buckets the dimension's keys can live in. This is the
+  * join form of the reference's rowkey-prefix pruning (Astro scans prune
+  * HBase regions by rowkey prefix; SURVEY EP3).
+  *
+  * Planning: ONE input partition per covered bucket. A bucket is
   * key-complete (every version of a key hashes to the same bucket), which
-  * makes the second property of this leg sound: merge-on-read
-  * latest-per-key resolution happens INSIDE the reader
-  * ([[MorResolvingReader]] — a per-bucket hashmap keyed on the PK
-  * projection), so the resolve that costs the V1 leg a window-function
-  * SHUFFLE costs this leg nothing but the bucket's resolved working set —
-  * the same per-bucket memory bound the applier's own merge already
-  * assumes. Copy-on-write buckets stream through [[LiveRowsReader]] with
-  * zero buffering (tombstone filter + projection only).
+  * makes latest-per-key resolution sound INSIDE the reader
+  * ([[GraftResolvingReaderFactory]] — a per-bucket hashmap keyed on the PK
+  * projection): no window, no shuffle, only the bucket's resolved working
+  * set — the same per-bucket memory bound the applier's own merge already
+  * assumes. One-version buckets (plain copy-on-write, compacted mor)
+  * stream through with zero buffering. A partition holds one or two
+  * SIDES, each a set of files plus the `_graft_pos` cut its rows must
+  * pass BEFORE the resolve: the table itself (cut at the as-of position,
+  * if any), or, on a branch, main's files cut at the branch point plus the
+  * branch directory's files for the same bucket, uncut. A LIMIT caps each
+  * partition after the resolve and the tombstone filter (Spark's
+  * LocalLimit semantics; Spark keeps the global limit above).
   *
   * Decoding is Spark's own V2 parquet reader end-to-end
   * ([[ParquetReadShim.parquetReaderFactory]]): per-file schema clipping
-  * (additive evolution surfaces NULL), vectorized decode, row-group
-  * skipping for the pushed filters (merge-on-read pushes only
+  * (additive evolution surfaces NULL — also for branch-staged or main
+  * columns the other side's files lack), vectorized decode, row-group
+  * skipping for the pushed filters (a resolving read pushes only
   * PK-referencing predicates below the resolve — a non-key predicate could
   * skip a row group holding a key's WINNING version while an older version
   * survives elsewhere). Spark re-evaluates every pushed predicate above
@@ -52,12 +61,16 @@ import graft.cdc.CdcApplier.TargetMeta
   * filtering is a performance matter only.
   *
   * Statistics ([[SupportsReportStatistics]]): bytes under the covered
-  * buckets — the V2 mirror of [[GraftRelation.sizeInBytes]], keeping the
-  * q236 auto-broadcast property on this leg.
+  * buckets (q236 auto-broadcast), plus the ANALYZEd table statistics
+  * (q278) and `KeyGroupedPartitioning` (q255) only on a [[wholeTable]]
+  * read — the table-level numbers and the full bucket layout describe
+  * nothing narrower.
   */
 class GraftBatchScan(
     spark: SparkSession, targetDir: String, fullSchema: StructType,
-    required: StructType, pushed: Array[Filter], spjCapable: Boolean = false)
+    required: StructType, pushed: Array[Filter], spjCapable: Boolean = false,
+    asOf: Option[Long] = None, limit: Option[Int] = None,
+    branch: Option[String] = None)
     extends Scan with Batch with SupportsRuntimeFiltering with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
@@ -66,7 +79,22 @@ class GraftBatchScan(
   private val hconf = spark.sparkContext.hadoopConfiguration
   private val fs = target.getFileSystem(hconf)
   CdcApplier.openTarget(fs, target)
-  private val meta = TargetMeta.read(hconf, target)
+  /** Main's meta; a branch read also proves the branch exists. */
+  private val meta = branch match {
+    case Some(name) => Some(graft.cdc.Branch.mainMeta(spark, targetDir, name))
+    case None       => TargetMeta.read(hconf, target)
+  }
+  asOf.foreach(pos => CdcApplier.requireHistory(meta.getOrElse(
+    throw new IllegalStateException(s"no graft table state at $targetDir")),
+    targetDir, pos, "asOfPos"))
+
+  /** Each side's directory and the `_graft_pos` cut its rows must pass. */
+  private val sides: Seq[(Path, Option[Long])] = branch match {
+    case Some(name) => Seq(
+      target -> Some(graft.cdc.Branch.point(spark, targetDir, name)),
+      new Path(graft.cdc.Branch.branchDir(targetDir, name)) -> None)
+    case None => Seq(target -> asOf)
+  }
   private val isMor = meta.exists(_.storage.contains("mor"))
   /** Outstanding deletion vectors (q275): appended key-tombstones mask rows
     * through the same latest-per-key resolve as MOR. */
@@ -74,43 +102,51 @@ class GraftBatchScan(
   /** q276: on MOR, a recorded `sorted` is set ONLY by compactMor (after its
     * publish) and cleared by every delta append / vacuum / fast-forward
     * BEFORE new versions become visible — so mor + sorted proves ONE
-    * version per key, and the bucket streams through the tombstone-filter
-    * reader with no resolve (and may report its order below). */
+    * version per key, and the bucket streams through the tombstone filter
+    * with no resolve (and may report its order below). */
   private val morCompacted = isMor && meta.exists(_.sorted.exists(_.nonEmpty))
   /** Latest-per-key resolution required? MOR delta chains (unless proven
-    * compacted) and dv-bearing COW — [[CdcApplier.needsResolve]]'s rule,
-    * refined by the compaction proof this scan can additionally use. */
-  private val mustResolve = (isMor && !morCompacted) || dvOutstanding
+    * compacted), dv-bearing COW, and every history read (a cut version
+    * chain, or main plus a branch's deltas) — [[CdcApplier.needsResolve]]'s
+    * rule, refined by the compaction proof this scan can additionally use. */
+  private val mustResolve =
+    (isMor && !morCompacted) || dvOutstanding || sides.exists(_._2.isDefined)
   private val pkCols: Seq[String] = meta.flatMap(_.pkCols).getOrElse(Seq.empty)
   private val bucketCols: Seq[String] =
     meta.flatMap(m => m.bucketCols.orElse(m.pkCols)).getOrElse(Seq.empty)
 
-  /** All bucket ids the layout holds (fixed for the scan's lifetime). */
-  val allBuckets: Seq[Int] = CdcApplier.bucketIds(fs, target)
+  /** All bucket ids the read's directories hold (fixed for the scan's
+    * lifetime). */
+  val allBuckets: Seq[Int] =
+    sides.flatMap(s => CdcApplier.bucketIds(fs, s._1)).distinct.sorted
 
-  /** The runtime filters of the CURRENT execution. Spark hands
+  /** The buckets the pushed predicates cover — computed once, here. */
+  private val staticBuckets: Seq[Int] =
+    GraftScan.coveredBuckets(meta, fullSchema, pushed, allBuckets)
+
+  /** A plain current-state read of the whole table: no history, no limit,
+    * and no pushed predicate bounded the bucket key. The only shape that
+    * ANALYZEd statistics and the bucket layout describe, and the only one
+    * a current-state index route may replace ([[graft.plans.GraftIndexRoute]]). */
+  def wholeTable: Boolean =
+    asOf.isEmpty && branch.isEmpty && limit.isEmpty && allBuckets.nonEmpty &&
+      staticBuckets.size == allBuckets.size
+
+  /** The covered buckets of the CURRENT execution: the static coverage,
+    * narrowed by this execution's runtime filters. Spark hands
     * [[SupportsRuntimeFiltering.filter]] the complete runtime-filter set
-    * for an execution in one call, so the semantics here are REPLACE, not
-    * accumulate: coverage is always recomputed from `pushed ++ these`
-    * against the static baseline. Intersecting into persistent state (the
-    * pre-r12 shape) was correct within one execution but wrong across
-    * them — a re-executed Scan whose dimension side had GAINED keys would
-    * keep the previous execution's narrower pruning and silently drop
-    * rows. Replacing resets coverage to exactly what this execution's
-    * filters justify. */
+    * for an execution in one call, so the semantics are REPLACE, not
+    * accumulate: each call recomputes from the static coverage. Carrying
+    * a narrower set across executions (the pre-r12 shape) was wrong — a
+    * re-executed Scan whose dimension side had GAINED keys would keep the
+    * previous execution's pruning and silently drop rows. */
+  @volatile private var active: Seq[Int] = staticBuckets
   @volatile private var runtimeFilters: Array[Filter] = Array.empty
-
-  /** Currently-covered buckets: the static coverage (= all, or this leg
-    * would not have been chosen) narrowed by the current execution's
-    * runtime filters — recomputed from scratch per [[filter]] call, never
-    * carried across executions. */
-  def activeBuckets: Seq[Int] =
-    GraftScan.coveredBuckets(meta, fullSchema, pushed ++ runtimeFilters, allBuckets)
+  def activeBuckets: Seq[Int] = active
 
   /** What the last `planInputPartitions` actually planned — the seam the
-    * q244 gate and specs assert runtime pruning through. */
-  @volatile var lastPlannedBuckets: Seq[Int] =
-    GraftScan.coveredBuckets(meta, fullSchema, pushed, allBuckets)
+    * q244 gate and specs assert pruning through. */
+  @volatile var lastPlannedBuckets: Seq[Int] = staticBuckets
 
   /** (files planned, files present) from the last `planInputPartitions` —
     * the q250 data-skipping seam. (-1, -1) until a plan ran. */
@@ -129,8 +165,12 @@ class GraftBatchScan(
       bucketCols.map(c => Expressions.column(c)).toArray
     else Array.empty
 
-  override def filter(filters: Array[Filter]): Unit =
+  override def filter(filters: Array[Filter]): Unit = {
     runtimeFilters = filters
+    active =
+      if (filters.isEmpty) staticBuckets
+      else GraftScan.coveredBuckets(meta, fullSchema, pushed ++ filters, staticBuckets)
+  }
 
   // ---- schemas -----------------------------------------------------------
 
@@ -156,11 +196,16 @@ class GraftBatchScan(
     * are optimizations, dropping only reads more). */
   private val pushedPhys: Array[Filter] =
     pushed.flatMap(GraftScan.renameRefs(_, physOf))
+  /** A resolving read may skip only on PK-referencing predicates (a key's
+    * versions agree on its PK, so skipping by PK cannot change a key's
+    * winner); a one-version read may skip on anything. */
+  private def resolveSafe(fs: Array[Filter]): Array[Filter] =
+    if (mustResolve) fs.filter(_.references.toSet.subsetOf(pkCols.toSet)) else fs
 
   /** Internal read schema: the required columns first (so output ordinals
     * are a prefix), then whatever the reader additionally needs — the PK +
-    * `_graft_pos` for merge-on-read resolution, `_graft_deleted` always
-    * (the tombstone filter). Field lookups are by PHYSICAL name; the
+    * `_graft_pos` for resolution and the history cut, `_graft_deleted`
+    * always (the tombstone filter). Field lookups are by PHYSICAL name; the
     * output's ordinal contract makes the logical/physical naming moot at
     * runtime (InternalRows carry no names). */
   private val readInternal: StructType = {
@@ -179,7 +224,11 @@ class GraftBatchScan(
     s"GraftBatchScan $targetDir runtime-filterable " +
       s"buckets=${activeBuckets.size}/${allBuckets.size}" +
       (if (lastPlannedFiles._2 >= 0)
-        s" files=${lastPlannedFiles._1}/${lastPlannedFiles._2}" else "")
+        s" files=${lastPlannedFiles._1}/${lastPlannedFiles._2}" else "") +
+      limit.fold("")(n => s" limit=$n") +
+      asOf.fold("")(p => s" asOfPos=$p") +
+      branch.fold("")(b => s" branch=$b") +
+      (if (pushed.isEmpty) "" else pushed.mkString(" PushedFilters: [", ", ", "]"))
 
   // ---- batch -------------------------------------------------------------
 
@@ -190,13 +239,14 @@ class GraftBatchScan(
     * buckets)` — one key-complete partition per bucket directory, each
     * carrying its bucket id as the partition key — so a join of two graft
     * tables with agreeing layouts shuffles NEITHER side (the layout paid
-    * the shuffle once, at write time). Range layouts and key-pruned
-    * projections report Unknown; refusal costs a shuffle, never
-    * correctness. The transform resolves against the table's OWN catalog
-    * ([[GraftBucketFunction]] — the writer's exact pmod(murmur3) fold). */
+    * the shuffle once, at write time). Range layouts, key-pruned
+    * projections and reads narrower than the whole table report Unknown;
+    * refusal costs a shuffle, never correctness. The transform resolves
+    * against the table's OWN catalog ([[GraftBucketFunction]] — the
+    * writer's exact pmod(murmur3) fold). */
   private def keyGrouped: Boolean =
-    spjCapable && meta.exists(_.rangeBounds.isEmpty) && bucketCols.nonEmpty &&
-      bucketCols.forall(required.fieldNames.contains) && allBuckets.nonEmpty
+    spjCapable && wholeTable && meta.exists(_.rangeBounds.isEmpty) &&
+      bucketCols.nonEmpty && bucketCols.forall(required.fieldNames.contains)
 
   override def outputPartitioning()
       : org.apache.spark.sql.connector.read.partitioning.Partitioning =
@@ -205,7 +255,7 @@ class GraftBatchScan(
         Array(Expressions.bucket(meta.get.numBuckets, bucketCols: _*)),
         allBuckets.size)
     else new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(
-      allBuckets.size)
+      staticBuckets.size)
 
   // ---- reported ordering (q262) ------------------------------------------
 
@@ -218,16 +268,16 @@ class GraftBatchScan(
     * full list; touching only at equal boundaries → the first column
     * alone). Any unknown (missing stats, nulls on the sort column,
     * overlap) degrades to NO reported order — refusal costs a Sort above
-    * the scan, never correctness. Merge-on-read never reports (the
+    * the scan, never correctness. A resolving read never reports (the
     * reader-local hashmap resolve is unordered by construction). Reported
     * names are LOGICAL (the relation's output) and only the prefix present
     * in the pruned read schema is claimed. */
   private lazy val orderInfo: (Seq[String], Map[Int, Seq[String]]) = {
     val sortedPhys = meta.flatMap(_.sorted).getOrElse(Seq.empty)
     // a resolving read is unordered by construction (reader-local hashmap):
-    // live MOR delta chains and dv-bearing COW refuse; a COMPACTED mor
-    // (q276 — `sorted` set by compactMor, cleared by any delta) streams in
-    // file order and MAY report, exactly like sorted COW
+    // live MOR delta chains, dv-bearing COW and history reads refuse; a
+    // COMPACTED mor (q276 — `sorted` set by compactMor, cleared by any
+    // delta) streams in file order and MAY report, exactly like sorted COW
     if (mustResolve || sortedPhys.isEmpty) (Seq.empty, Map.empty)
     else {
       val logicalSorted = sortedPhys.map(c => CdcApplier.logicalName(meta, c))
@@ -235,7 +285,7 @@ class GraftBatchScan(
       if (present.isEmpty) (Seq.empty, Map.empty)
       else {
         var depth = present.length
-        val orders = allBuckets.map { b =>
+        val orders = staticBuckets.map { b =>
           val (names, d) = graft.cdc.FileStats.bucketFileOrder(
             fs, new Path(target, s"${CdcApplier.BUCKET}=$b"), sortedPhys.head)
           if (d == 0) depth = 0
@@ -259,76 +309,66 @@ class GraftBatchScan(
   override def planInputPartitions(): Array[InputPartition] = {
     val bs = activeBuckets
     lastPlannedBuckets = bs
-    // File-level data skipping (q250): the same sidecar statistics the V1
-    // leg consults, against the skip-safe filter set — copy-on-write may
-    // skip on ANY pushed/runtime predicate; merge-on-read only on
-    // PK-referencing ones (a key's versions agree on its PK, so a skipped
-    // file holds no version of any key surviving the predicate above the
-    // reader-local resolve). Unknown files/columns are always kept.
-    val skipF = {
-      val all = (pushedPhys ++
+    // File-level data skipping (q250): the sidecar statistics against the
+    // skip-safe filter set. Unknown files/columns are always kept. Time
+    // travel skips nothing (its cut is by position, not by value).
+    val skipF =
+      if (asOf.isDefined) Seq.empty
+      else resolveSafe(pushedPhys ++
         runtimeFilters.flatMap(GraftScan.renameRefs(_, physOf))).toIndexedSeq
-      // one-version layouts (cow, compacted mor) may skip on anything; a
-      // resolving layout only on PK-referencing predicates
-      if (mustResolve) all.filter(_.references.toSet.subsetOf(pkCols.toSet)) else all
-    }
-    val grouped = keyGrouped
     var kept = 0
     var total = 0
     val parts = bs.zipWithIndex.map { case (b, i) =>
-      val d = new Path(target, s"${CdcApplier.BUCKET}=$b")
-      val (files0, n) = graft.cdc.FileStats.selectBucketFiles(fs, d, skipF)
-      // serve the REPORTED order (q262): concatenate the bucket's files in
-      // ascending min-order of the first sort column; skipping files never
-      // disturbs the order of the rest
-      val files = orderInfo._2.get(b) match {
-        case Some(names) if orderInfo._1.nonEmpty =>
-          val idx = names.zipWithIndex.toMap
-          files0.sortBy(st => idx.getOrElse(st.getPath.getName, Int.MaxValue))
-        case _ => files0
+      val perSide = sides.map { case (dir, cut) =>
+        val (files0, n) = graft.cdc.FileStats.selectBucketFiles(
+          fs, new Path(dir, s"${CdcApplier.BUCKET}=$b"), skipF)
+        // serve the REPORTED order (q262): concatenate the bucket's files
+        // in ascending min-order of the first sort column; skipping files
+        // never disturbs the order of the rest
+        val files = orderInfo._2.get(b) match {
+          case Some(names) if orderInfo._1.nonEmpty =>
+            val idx = names.zipWithIndex.toMap
+            files0.sortBy(st => idx.getOrElse(st.getPath.getName, Int.MaxValue))
+          case _ => files0
+        }
+        kept += files.size
+        total += n
+        (ParquetReadShim.bucketPartition(i, files), cut)
       }
-      kept += files.size
-      total += n
-      val fp = ParquetReadShim.bucketPartition(i, files)
-      // partition key = the bucket id (= the bucket(n, keys) value for
-      // every row in the directory) — what Spark's key-grouped execution
-      // aligns the two join sides by
-      if (grouped) GraftBucketPartition(fp, b) else fp
+      GraftBucketPartition(perSide, b): InputPartition
     }.toArray
     lastPlannedFiles = (kept, total)
     parts
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // below-resolve row-group skipping: PK-referencing predicates only on
-    // merge-on-read (a key's versions agree on its PK, so skipping by PK
-    // cannot change a key's winner); everything on copy-on-write
-    val parquetSafe =
-      if (mustResolve) pushedPhys.filter(_.references.toSet.subsetOf(pkCols.toSet))
-      else pushedPhys
     val inner = ParquetReadShim.parquetReaderFactory(
-      spark, fileSchema, readInternal, parquetSafe)
+      spark, fileSchema, readInternal, resolveSafe(pushedPhys))
     new GraftResolvingReaderFactory(inner, mustResolve,
       pkCols.map(ord).toArray, ord(CdcApplier.POS), ord(CdcApplier.DEL),
-      readInternal, required.indices.toArray)
+      readInternal, required.indices.toArray, limit)
   }
 
+  /** This scan's rows outside a Spark plan — the V1-resolved relation
+    * ([[GraftV1Relation]]) serves them through its `buildScan`. */
+  private[sources] def toRdd: org.apache.spark.rdd.RDD[InternalRow] =
+    new org.apache.spark.sql.execution.datasources.v2.DataSourceRDD(
+      spark.sparkContext, planInputPartitions().toSeq.map(Seq(_)),
+      createReaderFactory(), false, Map.empty)
+
   /** Bytes under the covered buckets, PLUS — when the table was ANALYZEd
-    * (q278, [[graft.cdc.ColumnStats]]) and this is a full-coverage read —
+    * (q278, [[graft.cdc.ColumnStats]]) and this is a [[wholeTable]] read —
     * the live row count, the rows×width size estimate (raw file bytes
     * over-count a mor table's superseded versions, the wrong number for
     * broadcast selection), and per-column NDV/min/max/nulls/widths for
-    * CBO's join reorder and cardinality estimation. A pruned read keeps
+    * CBO's join reorder and cardinality estimation. Any narrower read keeps
     * the byte-based honesty (the stats describe the whole table). */
   override def estimateStatistics(): Statistics = {
-    val bytes = activeBuckets.map { b =>
-      val d = new Path(target, s"${CdcApplier.BUCKET}=$b")
-      if (fs.exists(d)) fs.listStatus(d).map(_.getLen).sum else 0L
-    }.sum
+    val bytes = GraftScan.bytesUnder(fs,
+      for (b <- activeBuckets; (dir, _) <- sides)
+        yield new Path(dir, s"${CdcApplier.BUCKET}=$b"))
     val analyzed =
-      if (activeBuckets.size == allBuckets.size)
-        graft.cdc.ColumnStats.read(spark, targetDir)
-      else None
+      if (wholeTable) graft.cdc.ColumnStats.read(spark, targetDir) else None
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(analyzed.map(_.sizeBytes).getOrElse(bytes))
@@ -345,32 +385,36 @@ class GraftBatchScan(
   }
 }
 
-/** One bucket directory's files plus the bucket id as the partition key —
-  * the [[org.apache.spark.sql.connector.read.HasPartitionKey]] carrier
-  * Spark's key-grouped execution groups/aligns partitions by. Unwrapped by
+/** One bucket's read: per side, that side's files and the `_graft_pos` cut
+  * its rows must pass, plus the bucket id as the partition key — the
+  * [[org.apache.spark.sql.connector.read.HasPartitionKey]] carrier Spark's
+  * key-grouped execution groups/aligns partitions by. Unwrapped by
   * [[GraftResolvingReaderFactory]] before the inner parquet factory sees
-  * it (the factory handles FilePartitions only). */
+  * the sides (that factory handles FilePartitions only). */
 case class GraftBucketPartition(
-    fp: InputPartition, bucketId: Int)
+    sides: Seq[(InputPartition, Option[Long])], bucketId: Int)
     extends InputPartition with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](bucketId))
-  // delegate locality: the wrapped FilePartition reports block hosts —
-  // dropping them would schedule every SPJ partition without locality on
-  // a real cluster, remote-reading exactly the joins SPJ accelerates
-  override def preferredLocations(): Array[String] = fp.preferredLocations()
+  // delegate locality: the wrapped FilePartitions report block hosts —
+  // dropping them would schedule every partition without locality on a
+  // real cluster, remote-reading exactly the joins SPJ accelerates
+  override def preferredLocations(): Array[String] =
+    sides.flatMap(_._1.preferredLocations()).distinct.toArray
 }
 
-/** Wraps Spark's parquet reader factory with the graft read semantics:
-  * tombstone filtering (+ reader-local latest-per-key resolution on
-  * merge-on-read) and the projection down to the served columns. Row-based
-  * by construction — resolution needs rows; the inner parquet decode stays
+/** Wraps Spark's parquet reader factory with the graft read semantics, per
+  * bucket: each side's `_graft_pos` cut, then latest-per-key resolution
+  * when the read holds versions, then the tombstone filter (after the
+  * resolve, so a newer tombstone suppresses an older upsert), the
+  * projection down to the served columns, and the LIMIT cap. Row-based by
+  * construction — resolution needs rows; the inner parquet decode stays
   * vectorized and hands rows off the column batches. */
 class GraftResolvingReaderFactory(
-    inner: PartitionReaderFactory, isMor: Boolean,
+    inner: PartitionReaderFactory, val resolve: Boolean,
     pkOrdinals: Array[Int], posOrdinal: Int, delOrdinal: Int,
-    readSchema: StructType, outOrdinals: Array[Int])
+    readSchema: StructType, outOrdinals: Array[Int], limit: Option[Int])
     extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean = false
@@ -379,77 +423,42 @@ class GraftResolvingReaderFactory(
     def proj(ords: Array[Int]): UnsafeProjection = UnsafeProjection.create(
       ords.toIndexedSeq.map(i =>
         BoundReference(i, readSchema(i).dataType, nullable = true)))
-    val filePart = partition match {
-      case GraftBucketPartition(fp, _) => fp
-      case p => p
+    val sides = partition.asInstanceOf[GraftBucketPartition].sides
+    val readers = sides.map { case (fp, _) => inner.createReader(fp) }
+    val versions = readers.iterator.zip(sides.iterator.map(_._2)).flatMap {
+      case (r, cut) =>
+        val rows = Iterator.continually(r).takeWhile(_.next()).map(_.get())
+        cut.fold(rows)(p => rows.filter(row =>
+          !row.isNullAt(posOrdinal) && row.getLong(posOrdinal) <= p))
     }
-    val in = inner.createReader(filePart)
-    if (isMor)
-      new MorResolvingReader(in, proj(pkOrdinals), posOrdinal, delOrdinal,
-        proj(outOrdinals))
-    else new LiveRowsReader(in, delOrdinal, proj(outOrdinals))
-  }
-}
-
-/** Copy-on-write: stream rows through, dropping tombstones (and null-DEL
-  * rows — exactly the `!col(_graft_deleted)` semantics of every other read
-  * path) and projecting to the served columns. Zero buffering. */
-class LiveRowsReader(
-    inner: PartitionReader[InternalRow], delOrdinal: Int,
-    outProj: UnsafeProjection) extends PartitionReader[InternalRow] {
-  private var cur: InternalRow = _
-  override def next(): Boolean = {
-    while (inner.next()) {
-      val r = inner.get()
-      if (!r.isNullAt(delOrdinal) && !r.getBoolean(delOrdinal)) {
-        cur = outProj(r)
-        return true
-      }
+    val outProj = proj(outOrdinals)
+    val live = (if (resolve) latestPerKey(versions, proj(pkOrdinals)) else versions)
+      .filter(r => !r.isNullAt(delOrdinal) && !r.getBoolean(delOrdinal))
+      .map(outProj(_))
+    val capped = limit.fold(live)(live.take)
+    new PartitionReader[InternalRow] {
+      private var cur: InternalRow = _
+      override def next(): Boolean = capped.hasNext && { cur = capped.next(); true }
+      override def get(): InternalRow = cur
+      override def close(): Unit = readers.foreach(_.close())
     }
-    false
   }
-  override def get(): InternalRow = cur
-  override def close(): Unit = inner.close()
-}
 
-/** Merge-on-read: the bucket is key-complete, so latest-per-key resolves
-  * READER-LOCALLY — a hashmap from the PK projection to the newest
-  * version's row ([[graft.cdc.CdcApplier.resolveOnRead]]'s semantics:
-  * newest `_graft_pos` wins; replay duplicates are value-identical, so the
-  * first-seen tie winner is the same row). Memory is the bucket's RESOLVED
-  * working set — the bound the applier's own merge already assumes per
-  * bucket — and the shuffle the V1 leg's window resolution pays does not
-  * exist here. Tombstones drop AFTER resolution (a newer tombstone
-  * suppresses an older upsert). */
-class MorResolvingReader(
-    inner: PartitionReader[InternalRow], keyProj: UnsafeProjection,
-    posOrdinal: Int, delOrdinal: Int, outProj: UnsafeProjection)
-    extends PartitionReader[InternalRow] {
-  private var it: Iterator[InternalRow] = _
-  private var cur: InternalRow = _
-
-  private def materialize(): Unit = {
+  /** The bucket is key-complete, so latest-per-key resolves READER-LOCALLY:
+    * a hashmap from the PK projection to the newest version's row
+    * ([[graft.cdc.CdcApplier.resolveOnRead]]'s semantics: newest
+    * `_graft_pos` wins; replay duplicates are value-identical, so the
+    * first-seen tie winner is the same row). Memory is the bucket's
+    * RESOLVED working set. */
+  private def latestPerKey(rows: Iterator[InternalRow], keyProj: UnsafeProjection)
+      : Iterator[InternalRow] = {
     val winners = new java.util.HashMap[UnsafeRow, (Long, InternalRow)]()
-    while (inner.next()) {
-      val r = inner.get()
+    rows.foreach { r =>
       val pos = if (r.isNullAt(posOrdinal)) Long.MinValue else r.getLong(posOrdinal)
       val k = keyProj(r)
       val prev = winners.get(k)
-      if (prev == null) winners.put(k.copy(), (pos, r.copy()))
-      else if (pos > prev._1) winners.put(k.copy(), (pos, r.copy()))
+      if (prev == null || pos > prev._1) winners.put(k.copy(), (pos, r.copy()))
     }
-    it = {
-      import scala.jdk.CollectionConverters._
-      winners.values.iterator.asScala
-        .filter { case (_, r) => !r.isNullAt(delOrdinal) && !r.getBoolean(delOrdinal) }
-        .map { case (_, r) => outProj(r) }
-    }
+    winners.values.iterator.asScala.map(_._2)
   }
-
-  override def next(): Boolean = {
-    if (it == null) materialize()
-    if (it.hasNext) { cur = it.next(); true } else false
-  }
-  override def get(): InternalRow = cur
-  override def close(): Unit = inner.close()
 }

@@ -41,19 +41,18 @@ import graft.cdc.CdcApplier.TargetMeta
   *    projects the required columns; Catalyst prunes the inner parquet read
   *    to required ∪ layout columns.
   *  - '''Merge-on-read resolution''': a `storage=mor` target resolves
-  *    latest-per-key ([[CdcApplier.resolveOnRead]]) before serving rows —
+  *    latest-per-key inside each bucket's reader before serving rows —
   *    the plain-parquet view this replaces leaked superseded versions.
-  *    Only PK-referencing predicates are applied BELOW the resolve (all of
-  *    a key's versions share its PK, so they prune without changing the
-  *    per-key winner); everything else applies after.
+  *    Only PK-referencing predicates reach the reader BELOW the resolve
+  *    (all of a key's versions share its PK, so they prune without
+  *    changing the per-key winner); Spark applies everything above.
   *  - '''Tombstones''' are always filtered (after resolution on mor, so a
   *    newer tombstone suppresses an older upsert).
   *
-  * Execution rides the public [[V1Scan]] seam (the same one Spark's own
-  * JDBC V2 connector uses): the scan plans an ordinary DataFrame over the
-  * pruned bucket directories and hands its `queryExecution.toRdd` to a
-  * `needConversion=false` relation — rows stay InternalRow end-to-end, and
-  * the inner parquet scan keeps its whole-stage codegen.
+  * Execution: every read of the table's own shape — full, pruned, LIMIT,
+  * as-of, branch — is ONE DataSource-V2 scan, [[GraftBatchScan]]; only the
+  * change-feed envelope (`changesFrom`) plans a DataFrame, behind the
+  * public [[V1Scan]] seam ([[GraftScan]]).
   *
   * Writes (`INSERT INTO` / `INSERT OVERWRITE` / `DELETE FROM` /
   * `df.write.format("graft")`) are NOT blind appends: every surface funnels
@@ -133,11 +132,13 @@ class GraftDataSource extends TableProvider with RelationProvider
       branch = GraftDataSource.branchOf(opts))
   }
 
-  /** V1 seam for SQL-on-file (``SELECT ... FROM graft.`dir` `` resolves
-    * through [[RelationProvider]], not [[TableProvider]]) — same planning
-    * machinery, same pruning, served as a [[PrunedFilteredScan]].
-    * `DataFrameReader.load` still takes the V2 path above
-    * (`lookupDataSourceV2` prefers TableProvider). */
+  /** V1 seam: whatever resolves a graft path through
+    * `DataSource.resolveRelation` ([[RelationProvider]], not
+    * [[TableProvider]]) — `CREATE TABLE ... USING graft`'s validation, or a
+    * session listing `graft` in `spark.sql.sources.useV1SourceList` — gets
+    * the same scan and pruning, served as a [[PrunedFilteredScan]].
+    * Otherwise `DataFrameReader.load` and `USING graft` tables take the V2
+    * path above (`lookupDataSourceV2` prefers TableProvider). */
   override def createRelation(
       ctx: SQLContext, parameters: Map[String, String]): BaseRelation = {
     val dir = parameters.getOrElse("path", throw new IllegalArgumentException(
@@ -172,8 +173,10 @@ class GraftDataSource extends TableProvider with RelationProvider
   }
 }
 
-/** The SQL-on-file relation: per-`buildScan` (per query) bucket pruning and
-  * filter application — exactly [[GraftScan]]'s plan, V1-shaped. */
+/** The V1-resolved relation: a thin adapter over the V2 read of the same
+  * path and options — each `buildScan` (per query) builds the scan through
+  * [[GraftScanBuilder]] with the pushed filters and required columns and
+  * serves its rows. */
 class GraftV1Relation(ctx: SQLContext, targetDir: String,
     asOf: Option[Long] = None, changesFrom: Option[Long] = None)
     extends BaseRelation with PrunedFilteredScan with InsertableRelation {
@@ -194,16 +197,23 @@ class GraftV1Relation(ctx: SQLContext, targetDir: String,
   // engine keeps the authoritative evaluation above
   override def unhandledFilters(filters: Array[Filter]): Array[Filter] = filters
 
+  /** The served scan's description once a query planned it (pruning
+    * ratio, files, pushed filters) — the relation's explain surface. */
+  @volatile private var served: String = targetDir
+
   override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    val spark = ctx.sparkSession
-    val (pruned, all) = GraftScan.coverage(spark, targetDir, schema, filters)
-    val covered = if (changesFrom.isDefined) all else pruned
-    val required = StructType(requiredColumns.map(schema(_)))
-    GraftScan.planRead(spark, targetDir, schema, required, filters, covered,
-        asOf, changesFrom)
-      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
+    val b = new GraftScanBuilder(ctx.sparkSession, targetDir, schema, asOf, changesFrom)
+    b.pushFilters(filters)
+    b.pruneColumns(StructType(requiredColumns.map(schema(_))))
+    val scan = b.build()
+    val rows = scan match {
+      case s: GraftBatchScan => s.toRdd
+      case s: GraftScan      => s.innerDf.queryExecution.toRdd
+    }
+    served = scan.description()
+    rows.asInstanceOf[RDD[Row]]
   }
-  override def toString: String = s"GraftV1Relation($targetDir)"
+  override def toString: String = s"GraftV1Relation($served)"
 }
 
 object GraftDataSource {
@@ -559,7 +569,7 @@ class GraftScanBuilder(spark: SparkSession, targetDir: String, fullSchema: Struc
     aggScan.isDefined
   }
 
-  /** LIMIT pushdown: the inner plan caps each task at `n` rows (Spark's
+  /** LIMIT pushdown: the scan caps each partition at `n` rows (Spark's
     * LocalLimit semantics) AFTER mor resolution and tombstone filtering,
     * so a bare `SELECT ... LIMIT n` stops reading once satisfied instead
     * of materializing the table. Partial by contract — Spark keeps its own
@@ -569,167 +579,91 @@ class GraftScanBuilder(spark: SparkSession, targetDir: String, fullSchema: Struc
 
   /** Top-level column pruning only: Catalyst may hand a schema with
     * NESTED-pruned struct fields (e.g. `before: struct<bal>` in the
-    * change-feed mode); this scan serves whole columns, so each requested
+    * change-feed mode); the scans serve whole columns, so each requested
     * column is restored to its full declared type — a silently-accepted
-    * narrower struct would make the `needConversion=false` consumer read
-    * wrong ordinals inside the actual rows. Spark projects the nested
-    * extraction above the scan. (With a pushed aggregation the scan's
-    * output IS the aggregate schema — nothing to prune.) */
+    * narrower struct would make the consumer read wrong ordinals inside
+    * the actual rows. Spark projects the nested extraction above the scan.
+    * (With a pushed aggregation the scan's output IS the aggregate schema
+    * — nothing to prune.) */
   override def pruneColumns(requiredSchema: StructType): Unit =
     if (aggScan.isEmpty)
       required = StructType(requiredSchema.fields.map(f => fullSchema(f.name)))
 
-  /** Leg selection. Pushed aggregation wins (footer-only). Otherwise: when
-    * the static predicates could NOT bound the bucket key — a full-coverage
-    * read, where a join's runtime keys are the only remaining pruning
-    * opportunity — build the runtime-filterable [[GraftBatchScan]] (q244);
-    * every statically-pruned, as-of, change-feed, or limit-pushed read
-    * keeps the V1 [[GraftScan]] leg (already bucket-pruned / mode-special,
-    * runtime filtering has nothing left to win there). */
+  /** A pushed aggregation wins (footer-only); the change-feed envelope
+    * takes its own [[GraftScan]]; every read of the table's own shape —
+    * full or pruned, LIMIT, as-of, branch — is the one [[GraftBatchScan]]. */
   override def build(): Scan = aggScan.getOrElse {
-    // (covered, all) of a plain current-state read, computed once and
-    // handed to the V1 leg when the static predicates did prune
-    val coverage =
-      if (asOf.isEmpty && changesFrom.isEmpty && pushedLimit.isEmpty && branch.isEmpty)
-        Some(GraftScan.coverage(spark, targetDir, fullSchema, pushed))
-      else None
-    coverage match {
-      case Some((covered, all)) if all.nonEmpty && covered.size == all.size =>
+    require(Seq(asOf, changesFrom, branch).count(_.isDefined) <= 1,
+      "asOfPos / changesFrom / branch are mutually exclusive read modes")
+    changesFrom match {
+      case Some(from) =>
+        new GraftScan(spark, targetDir, required, pushed, from, pushedLimit)
+      case None =>
         new GraftBatchScan(spark, targetDir, fullSchema, required, pushed,
-          spjCapable = spjCapable)
-      case _ =>
-        new GraftScan(spark, targetDir, fullSchema, required, pushed, asOf,
-          changesFrom, pushedLimit, branch, coverage)
+          spjCapable, asOf, pushedLimit, branch)
     }
   }
 }
 
-/** One planned read: bucket pruning + filter classification happen HERE
-  * (per query, so the file listing is always fresh — a mapped view never
-  * serves a stale swap). */
+/** The change-feed read (`changesFrom`): the reconstructed CDC envelope
+  * ([[CdcApplier.changeFeed]], with its own mor/floor guards) is not a
+  * stored read, so it plans a DataFrame and serves it through the public
+  * [[V1Scan]] seam (the one Spark's own JDBC V2 connector uses).
+  * Translatable pushed filters apply on the envelope frame (Spark
+  * re-evaluates above as always). */
 class GraftScan(
-    spark: SparkSession, targetDir: String, fullSchema: StructType,
-    required: StructType, pushed: Array[Filter],
-    asOf: Option[Long] = None, changesFrom: Option[Long] = None,
-    limit: Option[Int] = None, branchOf: Option[String] = None,
-    coverage: Option[(Seq[Int], Seq[Int])] = None) extends V1Scan
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+    spark: SparkSession, targetDir: String, required: StructType,
+    pushed: Array[Filter], changesFrom: Long, limit: Option[Int] = None)
+    extends V1Scan with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
-  /** (covered bucket ids, all bucket ids) — exposed for plan tests; the
-    * value [[GraftScanBuilder]] already computed, when it passed one. */
-  val (prunedBuckets, allBuckets): (Seq[Int], Seq[Int]) = coverage.getOrElse {
-    val c = GraftScan.coverage(spark, targetDir, fullSchema, pushed)
-    // the change feed reconstructs before-images from each touched key's
-    // version chain — its internal semi-join already bounds the read, and
-    // pushed-filter bucket pruning does not apply to the envelope shape
-    if (changesFrom.isDefined) (c._2, c._2) else c
-  }
-
-  /** Branch-side coverage (q277): the branch delta dir shares main's exact
-    * layout (copied meta), so the same pruning arithmetic applies to its
-    * bucket dirs — (covered, all) of the BRANCH side, None when this is
-    * not a branch read. The plan-shape seam the bucket-pruning spec locks. */
-  val branchPruned: Option[(Seq[Int], Seq[Int])] = branchOf.map { name =>
-    val bdir = new Path(graft.cdc.Branch.branchDir(targetDir, name))
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val bAll = CdcApplier.bucketIds(bdir.getFileSystem(hconf), bdir)
-    val meta = TargetMeta.read(hconf, new Path(targetDir))
-    (GraftScan.coveredBuckets(meta, fullSchema, pushed, bAll), bAll)
-  }
-
-  /** (files read, files present) when sidecar statistics pruned the file
-    * list (q250) — None when skipping did not engage. */
-  @volatile var fileSkip: Option[(Int, Int)] = None
-
-  /** The inner declarative plan the relation executes — also the seam the
-    * plan-shape tests inspect (`innerDf.queryExecution`). */
+  /** The envelope plan the relation executes. */
   val innerDf: DataFrame = {
-    val df = GraftScan.planRead(
-      spark, targetDir, fullSchema, required, pushed, prunedBuckets, asOf,
-      changesFrom, onFileSkip = (k, t) => fileSkip = Some((k, t)),
-      branchOf = branchOf, branchPruned = branchPruned)
+    val df = pushed.flatMap(GraftScan.toColumn)
+      .foldLeft(CdcApplier.changeFeed(spark, targetDir, changesFrom))(_.filter(_))
+      .select(required.fieldNames.map(col).toIndexedSeq: _*)
     limit.map(df.limit).getOrElse(df)
-  }
-
-  /** Bytes under the COVERED buckets only — the connector's statistics
-    * (post-pushdown, so a point lookup on a 1000-bucket table reports one
-    * bucket's bytes). Served through [[GraftRelation.sizeInBytes]] so
-    * Catalyst sizes joins correctly: a dimension-sized graft table (or a
-    * bucket-pruned read of a huge one) auto-broadcasts with no hint —
-    * without this, V1 relations report `defaultSizeInBytes` (= infinite)
-    * and every graft join is planned as a shuffle. Driver-side listing of
-    * dirs the scan already listed; raw file bytes over-estimate a mor
-    * target's resolved rows (conservative — never a wrong broadcast). */
-  val prunedBytes: Long = {
-    val target = new Path(targetDir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    prunedBuckets.map { b =>
-      val d = new Path(target, s"${CdcApplier.BUCKET}=$b")
-      if (fs.exists(d)) fs.listStatus(d).map(_.getLen).sum else 0L
-    }.sum
   }
 
   override def readSchema(): StructType = required
 
-  /** The V1 leg's logical-plan statistics (q278): pruned bytes always; the
-    * ANALYZEd row count + column stats additionally on a plain
-    * full-coverage read (history/branch/limit projections and pruned reads
-    * keep byte-based honesty — table-level stats do not describe them). */
+  /** The table's stored bytes — an upper bound on the envelope, so
+    * Catalyst can still broadcast a small table's feed. */
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
-    val analyzed =
-      if (asOf.isEmpty && changesFrom.isEmpty && branchOf.isEmpty &&
-        limit.isEmpty && prunedBuckets.size == allBuckets.size)
-        graft.cdc.ColumnStats.read(spark, targetDir)
-      else None
+    val target = new Path(targetDir)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bytes = GraftScan.bytesUnder(fs, CdcApplier.bucketIds(fs, target)
+      .map(b => new Path(target, s"${CdcApplier.BUCKET}=$b")))
     new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(analyzed.map(_.sizeBytes).getOrElse(prunedBytes))
-      override def numRows(): java.util.OptionalLong =
-        analyzed.map(ts => java.util.OptionalLong.of(ts.rows))
-          .getOrElse(java.util.OptionalLong.empty())
-      override def columnStats(): java.util.Map[
-          org.apache.spark.sql.connector.expressions.NamedReference,
-          org.apache.spark.sql.connector.read.colstats.ColumnStatistics] =
-        if (analyzed.isDefined)
-          graft.cdc.ColumnStats.v2ColumnStats(spark, targetDir, required)
-        else java.util.Collections.emptyMap()
+      override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
+      override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
     }
   }
 
-  private def suffix: String =
-    limit.map(n => s" limit=$n").getOrElse("") +
-      fileSkip.map { case (k, t) => s" files=$k/$t" }.getOrElse("")
-
   override def description(): String =
-    s"GraftScan $targetDir buckets=${prunedBuckets.size}/${allBuckets.size}$suffix"
+    s"GraftScan $targetDir changesFrom=$changesFrom" + limit.fold("")(n => s" limit=$n")
 
   override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
-    new GraftRelation(context, required, innerDf,
-      s"$targetDir buckets=${prunedBuckets.size}/${allBuckets.size}$suffix",
-      prunedBytes).asInstanceOf[T]
+    new GraftRelation(context, required, innerDf, description()).asInstanceOf[T]
 }
 
 /** `needConversion=false`: `buildScan` hands back the inner plan's
-  * InternalRow RDD directly — zero row conversion, and the inner parquet
-  * scan keeps whole-stage codegen. */
-class GraftRelation(
-    ctx: SQLContext, s: StructType, df: DataFrame, label: String,
-    bytes: Long = Long.MaxValue)
+  * InternalRow RDD directly — zero row conversion, and the inner plan
+  * keeps whole-stage codegen. */
+class GraftRelation(ctx: SQLContext, s: StructType, df: DataFrame, label: String)
     extends BaseRelation with TableScan {
   override def sqlContext: SQLContext = ctx
   override def schema: StructType = s
   override def needConversion: Boolean = false
-  /** Covered-bucket bytes ([[GraftScan.prunedBytes]]) — lets Catalyst
-    * auto-broadcast dimension-sized (or point-pruned) graft reads. */
-  override def sizeInBytes: Long = bytes
   override def buildScan(): RDD[Row] =
     df.queryExecution.toRdd.asInstanceOf[RDD[Row]]
   override def toString: String = s"GraftRelation($label)"
 }
 
+/** Helpers shared by the connector's scans and writes: exact
+  * Filter→Column translation, logical→physical renaming, the
+  * predicate→covered-buckets arithmetic, and bucket-directory bytes. */
 object GraftScan {
-  import CdcApplier.BUCKET
 
   /** Safe, exact Filter→Column translations (null semantics identical to
     * the engine's own evaluation of the same predicate). Anything else is
@@ -793,18 +727,10 @@ object GraftScan {
 
   private val MaxTuples = 1024 // pruning is worth a bounded driver loop only
 
-  /** (covered bucket ids, all bucket ids) of a read of `targetDir` under
-    * the pushed filters: the live tree is opened, listed and its meta read
-    * once, then [[coveredBuckets]] maps the predicates. */
-  private[sources] def coverage(spark: SparkSession, targetDir: String,
-      schema: StructType, pushed: Array[Filter]): (Seq[Int], Seq[Int]) = {
-    val target = new Path(targetDir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = target.getFileSystem(hconf)
-    CdcApplier.openTarget(fs, target)
-    val all = CdcApplier.bucketIds(fs, target)
-    (coveredBuckets(TargetMeta.read(hconf, target), schema, pushed, all), all)
-  }
+  /** Bytes of the files directly under `dirs` (absent dirs count 0). */
+  private[sources] def bytesUnder(fs: org.apache.hadoop.fs.FileSystem,
+      dirs: Seq[Path]): Long =
+    dirs.map(d => if (fs.exists(d)) fs.listStatus(d).map(_.getLen).sum else 0L).sum
 
   /** Map pushed conjuncts to the covered bucket ids, or `all` when the
     * predicates don't bound the bucket key. Hash layouts need a bounded
@@ -865,92 +791,6 @@ object GraftScan {
         all.filter(ids.contains)
     }
   }.getOrElse(all)
-
-  /** The inner declarative read: pruned bucket dirs → file-level stats
-    * skipping (q250) → the shared live read ([[CdcApplier.liveRead]], with
-    * the PK-safe filters below its resolve) → remaining filters →
-    * projection. `onFileSkip(kept, total)` reports the
-    * data-skipping outcome when sidecar statistics were consulted — the
-    * seam scan descriptions and the q250 gate audit through. */
-  private[sources] def planRead(
-      spark: SparkSession, targetDir: String, fullSchema: StructType,
-      required: StructType, pushed: Array[Filter], buckets: Seq[Int],
-      asOf: Option[Long] = None, changesFrom: Option[Long] = None,
-      onFileSkip: (Int, Int) => Unit = (_, _) => (),
-      branchOf: Option[String] = None,
-      branchPruned: Option[(Seq[Int], Seq[Int])] = None): DataFrame = {
-    require(Seq(asOf, changesFrom, branchOf).count(_.isDefined) <= 1,
-      "asOfPos / changesFrom / branch are mutually exclusive read modes")
-    def applyFilters(df: DataFrame, fs: Array[Filter]): DataFrame =
-      fs.flatMap(toColumn).foldLeft(df)(_.filter(_))
-    // Branch-lineage mode (q277): Branch.snapshot's lineage with the
-    // connector's bucket pruning on BOTH sides (the branch copies main's
-    // layout, so one pruning arithmetic covers both). Branches are
-    // mor-only, so the read always resolves; only PK-referencing pushed
-    // filters apply below the resolve.
-    branchOf.foreach { name =>
-      val meta = graft.cdc.Branch.mainMeta(spark, targetDir, name)
-      val pkCols = meta.pkCols.getOrElse(
-        throw new IllegalStateException(s"branch read of $targetDir needs a persisted PK"))
-      val bdir = graft.cdc.Branch.branchDir(targetDir, name)
-      val (below, above) = pushed.partition(_.references.toSet.subsetOf(pkCols.toSet))
-      val live = graft.cdc.Branch.lineage(spark, targetDir, name, meta,
-        buckets.map(b => s"$targetDir/$BUCKET=$b"),
-        branchPruned.map(_._1).getOrElse(Seq.empty).map(b => s"$bdir/$BUCKET=$b"),
-        below = applyFilters(_, below))
-      return applyFilters(live, above).select(required.fieldNames.map(col).toIndexedSeq: _*)
-    }
-    // change-feed mode: the envelope IS the relation — CdcApplier
-    // reconstructs it (with its own mor/floor guards); translatable
-    // pushed filters apply on the final envelope frame (Spark
-    // re-evaluates above as always)
-    changesFrom.foreach { from =>
-      return applyFilters(CdcApplier.changeFeed(spark, targetDir, from), pushed)
-        .select(required.fieldNames.map(col).toIndexedSeq: _*)
-    }
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val target = new Path(targetDir)
-    val meta = TargetMeta.read(hconf, target)
-    val pkCols = meta.flatMap(_.pkCols).getOrElse(Seq.empty)
-    asOf.foreach(pos => CdcApplier.requireHistory(meta.getOrElse(
-      throw new IllegalStateException(s"no graft table state at $targetDir")),
-      targetDir, pos, "asOfPos"))
-
-    def emptyDf = spark.createDataFrame(java.util.Collections.emptyList[Row](), required)
-    if (buckets.isEmpty) return emptyDf
-
-    // Below-resolve filters must not change a key's latest version: only
-    // predicates over PK columns qualify on a resolving layout (a key's
-    // versions agree on its PK); on one-version copy-on-write everything
-    // applies below.
-    val (below, above) =
-      if (CdcApplier.needsResolve(meta)) pushed.partition(_.references.toSet.subsetOf(pkCols.toSet))
-      else (pushed, Array.empty[Filter])
-
-    // File-level data skipping (q250): the below-resolve filter set is by
-    // construction exactly the set safe for FILE skipping too (cow: all
-    // pushed; mor: PK-referencing only — a skipped file holds no version of
-    // any key that could survive the predicate above). Time travel reads
-    // every version file (the cut is by POS), so it opts out.
-    val fs = target.getFileSystem(hconf)
-    // sidecar statistics carry PHYSICAL names (q258): translate the skip
-    // set; untranslatable nodes drop (skipping is optional, never wrong)
-    val physOf: String => String = c => CdcApplier.physicalName(meta, c)
-    val fileSel =
-      if (asOf.isDefined) None
-      else graft.cdc.FileStats.selectFiles(fs, target, buckets,
-        below.toIndexedSeq.flatMap(renameRefs(_, physOf)))
-    fileSel.foreach { case (_, k, t) => onFileSkip(k, t) }
-    fileSel.foreach { case (files, _, _) => if (files.isEmpty) return emptyDf }
-
-    val paths = fileSel.map(_._1)
-      .getOrElse(buckets.map(b => s"$targetDir/$BUCKET=$b"))
-    // the as-of cut applies BEFORE latest-per-key resolution (a key's
-    // winner as of pos is its newest version at or below pos)
-    val live = CdcApplier.liveRead(spark, meta, targetDir, paths, asOf,
-      below = applyFilters(_, below))
-    applyFilters(live, above).select(required.fieldNames.map(col).toIndexedSeq: _*)
-  }
 }
 
 /** Footer-only aggregate scan (q246): readSchema IS the aggregate schema;

@@ -224,17 +224,21 @@ class FileStatsSpec extends AnyFunSuite {
       "update before-images must come from the older files")
   }
 
-  test("V1 leg: combined PK + non-key predicate skips within the pruned bucket") {
+  test("one scan: combined PK + non-key predicate skips within the pruned bucket") {
     val dir = newDir()
     CdcApplier.applyBatch(spark, ChangeFeed.inserts(accts(400), $"k" * 10), dir, opts)
     CdcApplier.optimize(spark, dir, targetFileBytes = 4L << 10, clusterBy = Seq("bal"))
-    // PK IN-list prunes buckets → V1 leg; the non-key conjunct then skips
-    // files inside the covered buckets
+    // PK IN-list prunes buckets; the non-key conjunct then skips files
+    // inside the covered buckets
     val df = spark.read.format("graft").load(dir)
       .filter($"k".isin(3L, 14L, 77L) && $"bal" > 1e9)
     df.queryExecution.toRdd.count()
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("GraftRelation("), s"static pruning keeps the V1 leg:\n$plan")
+    val b = """buckets=(\d+)/(\d+)""".r.findFirstMatchIn(plan)
+      .getOrElse(fail(s"no buckets ratio in:\n$plan"))
+    assert(plan.contains("GraftBatchScan") && !plan.contains("GraftRelation("), plan)
+    assert(b.group(1).toInt <= 3 && b.group(1).toInt < b.group(2).toInt,
+      s"the IN-list must prune buckets:\n$plan")
     val m = """files=(\d+)/(\d+)""".r.findFirstMatchIn(plan)
       .getOrElse(fail(s"no files ratio in:\n$plan"))
     assert(m.group(1).toInt == 0, s"bal > 1e9 excludes every file:\n$plan")

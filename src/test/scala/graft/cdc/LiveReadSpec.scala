@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -44,20 +46,10 @@ class LiveReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     CdcApplier.applyBatchDv(spark,
       ChangeFeed.deletes(rows(40).filter($"k" === 15L), lit(1000L)), dv, opts)
 
-    def reads(t: String): Seq[(String, DataFrame)] = {
-      val schema = graft.sources.GraftTable.tableSchema(spark, t)
-      val builder = new graft.sources.GraftScanBuilder(spark, t, schema)
-      builder.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("k", 3L)))
-      val v1 = builder.build() match {
-        case s: graft.sources.GraftScan => s.innerDf
-        case other => fail(s"a bucket-pruned read must take the V1 leg, got $other")
-      }
-      Seq(
-        "snapshot" -> CdcApplier.snapshot(spark, t),
-        "pointLookup" -> CdcApplier.pointLookup(spark, t, Seq(3L, 15L).toDF("k")),
-        "rangeLookup" -> CdcApplier.rangeLookup(spark, t, 5L, 25L),
-        "V1 connector" -> v1)
-    }
+    def reads(t: String): Seq[(String, DataFrame)] = Seq(
+      "snapshot" -> CdcApplier.snapshot(spark, t),
+      "pointLookup" -> CdcApplier.pointLookup(spark, t, Seq(3L, 15L).toDF("k")),
+      "rangeLookup" -> CdcApplier.rangeLookup(spark, t, 5L, 25L))
     for ((name, df) <- reads(cow))
       assert(!windowed(df), s"plain copy-on-write $name must not resolve")
     for ((layout, t) <- Seq("mor" -> mor, "dv" -> dv); (name, df) <- reads(t))
@@ -65,6 +57,26 @@ class LiveReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // and the resolve masks the deleted key on every dv path
     for ((name, df) <- reads(dv))
       assert(df.filter($"k" === 15L).isEmpty, s"dv $name serves a masked row")
+
+    // the connector's pruned read resolves inside each bucket's reader: no
+    // window and no exchange on any layout, the resolve on mor and dv only
+    def connector(t: String): DataFrame =
+      spark.read.format("graft").load(t).filter($"k".isin(3L, 15L))
+    for ((layout, t) <- Seq("cow" -> cow, "mor" -> mor, "dv" -> dv)) {
+      val df = connector(t)
+      val got = df.select($"k").as[Long].collect().toSet
+      val plan = df.queryExecution.executedPlan
+      assert(collect(plan) { case w: WindowExec => w }.isEmpty, s"$layout: $plan")
+      assert(collect(plan) { case e: Exchange => e }.isEmpty, s"$layout: $plan")
+      val factories = collect(plan) { case b: BatchScanExec => b.readerFactory }
+      assert(factories.size == 1, s"$layout: $plan")
+      val resolves = factories.head
+        .asInstanceOf[graft.sources.GraftResolvingReaderFactory].resolve
+      assert(resolves == (layout != "cow"), s"$layout resolves per bucket: $resolves")
+      assert(plan.toString.contains("buckets=2/4"), s"$layout: $plan")
+      // the dv-masked key is absent; the mor/cow key is served
+      assert(got == (if (layout == "dv") Set(3L) else Set(3L, 15L)), s"$layout: $got")
+    }
   }
 
   test("fast-forward maintains the store's index from the branch lineage") {

@@ -290,6 +290,24 @@ class Round14Spec extends AnyFunSuite {
     assert(jobs == 2, s"one broadcast and one scan job: $jobs")
   }
 
+  test("Branch.pointLookup: a local key frame maps to buckets with no job") {
+    val t = newTarget()
+    val morOpts = CdcApplier.Options(Seq("k"), numBuckets = 4)
+    CdcApplier.applyBatchMor(spark, ChangeFeed.inserts(rows(40), lit(100L)), t, morOpts)
+    Branch.create(spark, t, "aud")
+    Branch.applyBatch(spark, t, "aud",
+      ChangeFeed.updates(rows(40).filter($"k" === 3), Map("v" -> lit(9.0)), lit(200L)))
+    val keys = Seq(3L, 7L, 3L).toDF("k")
+    val (df, planJobs) = jobsDuring(Branch.pointLookup(spark, t, "aud", keys))
+    // one job: the branch side's mergeSchema inference over its delta
+    // files; the bucket ids come from the collected keys (no distinct job)
+    assert(planJobs == 1, s"no bucket-id job while planning: $planJobs jobs")
+    val (got, jobs) = jobsDuring(df.select($"k", $"v").as[(Long, Double)].collect())
+    // the branch's staged value wins for k=3; k=7 serves main's row
+    assert(got.toSeq.sorted == Seq((3L, 9.0), (7L, 14.0)), got.toSeq)
+    assert(jobs == 3, s"the lookup's execution: $jobs jobs")
+  }
+
   // ---- state-preserving publish: atomic theft refusal (ADVICE r13) -------
 
   test("optimize: staging stolen between stage and publish refuses in the swap loop") {
@@ -375,11 +393,11 @@ class Round14Spec extends AnyFunSuite {
       ChangeFeed.deletes(data.filter($"k" % 4 === 0), $"k" * 10 + 5), t, ropts)
     val live = (1L to 100L).filterNot(_ % 4 == 0).toSet
     assert(CdcApplier.snapshot(spark, t).select($"k").as[Long].collect().toSet == live)
-    // the V1 connector leg (statically pruned read)
+    // a statically pruned connector read
     val v1 = spark.read.format("graft").load(t)
       .filter($"k" >= 30L && $"k" <= 40L).select($"k").as[Long].collect().toSet
-    assert(v1 == (30L to 40L).filterNot(_ % 4 == 0).toSet, s"v1 leg must mask: $v1")
-    // the V2 batch leg (full-coverage read resolves reader-locally)
+    assert(v1 == (30L to 40L).filterNot(_ % 4 == 0).toSet, s"the pruned read must mask: $v1")
+    // a full-coverage connector read (resolves reader-locally)
     val v2 = spark.read.format("graft").load(t)
       .select($"k").as[Long].collect().toSet
     assert(v2 == live, "the V2 batch leg must mask")
@@ -434,14 +452,26 @@ class Round14Spec extends AnyFunSuite {
     val builder = new graft.sources.GraftScanBuilder(spark, t, schema,
       branch = Some("aud"))
     builder.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("k", 3L)))
-    val scan = builder.build().asInstanceOf[graft.sources.GraftScan]
-    assert(scan.prunedBuckets.size == 1,
-      s"main side must prune to the key's bucket: ${scan.prunedBuckets}")
-    val (bCov, bAll) = scan.branchPruned.get
-    assert(bCov.size <= 1 && bAll.nonEmpty,
-      s"branch side must prune too: $bCov of $bAll")
-    // and the pruned read answers the branch lineage
-    val row = scan.innerDf.filter($"k" === 3L).select($"v").as[Double].collect()
+    val scan = builder.build().asInstanceOf[graft.sources.GraftBatchScan]
+    scan.planInputPartitions()
+    // one partition: the key's bucket, holding BOTH sides' files for it
+    val bucket = CdcApplier.bucketIdsOf(spark, Seq(Seq(lit(3L))), 4, None)
+    assert(scan.lastPlannedBuckets == bucket && scan.allBuckets.size == 4,
+      s"main and branch must prune to the key's bucket: ${scan.lastPlannedBuckets}")
+    def filesIn(dir: String) = fsOf(dir).listStatus(
+      new Path(s"$dir/${CdcApplier.BUCKET}=${bucket.head}"))
+      .count(_.getPath.getName.endsWith(".parquet"))
+    val sideFiles = filesIn(t) + filesIn(Branch.branchDir(t, "aud"))
+    assert(filesIn(Branch.branchDir(t, "aud")) > 0 &&
+        scan.lastPlannedFiles._2 == sideFiles,
+      s"the partition reads exactly both sides' files of that bucket: " +
+        s"${scan.lastPlannedFiles} vs $sideFiles")
+    // and the pruned read answers the branch lineage, through SQL too
+    val df = spark.read.format("graft").option("branch", "aud").load(t)
+      .filter($"k" === 3L)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("GraftBatchScan") && plan.contains("buckets=1/4"), plan)
+    val row = df.select($"v").as[Double].collect()
     assert(row.toSeq == Seq(9.0), s"branch read must serve the staged value: ${row.toSeq}")
   }
 
@@ -471,9 +501,17 @@ class Round14Spec extends AnyFunSuite {
     val schema = graft.sources.GraftTable.tableSchema(spark, t)
     val b = new graft.sources.GraftScanBuilder(spark, t, schema)
     b.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("k", 3L)))
-    val scan = b.build().asInstanceOf[graft.sources.GraftScan]
-    assert(!scan.estimateStatistics().numRows().isPresent,
+    val scan = b.build().asInstanceOf[graft.sources.GraftBatchScan]
+    val pruned = scan.estimateStatistics()
+    assert(!pruned.numRows().isPresent,
       "a bucket-pruned read keeps byte-based statistics")
+    assert(pruned.sizeInBytes().getAsLong > 0 &&
+      pruned.sizeInBytes().getAsLong < fsOf(t).getContentSummary(new Path(t)).getLength,
+      "a pruned read reports only its covered buckets' bytes")
+    // the whole-table read serves the ANALYZEd row count
+    val whole = new graft.sources.GraftScanBuilder(spark, t, schema).build()
+      .asInstanceOf[graft.sources.GraftBatchScan]
+    assert(whole.estimateStatistics().numRows().getAsLong == 200L)
   }
 
   // ---- covered routing (q282): the POS exclusion ---------------------------

@@ -217,11 +217,13 @@ class GraftDataSourceSpec extends AnyFunSuite {
       val got = df.drop("_graft_pos").as[Acct].collect().toSet
       assert(got == expected.as[Acct].collect().toSet, s"mor=$isMor")
     }
-    // statically-pruned reads stay on the V1 leg (already bucket-pruned)
+    // statically-pruned reads take the same scan, pruned to the key's bucket
     val target = newDir()
     build(target)
     val pruned = read(target).filter($"k" === 3L)
-    assert(pruned.queryExecution.executedPlan.toString.contains("GraftRelation("))
+    val plan = pruned.queryExecution.executedPlan.toString
+    assert(plan.contains("GraftBatchScan") && !plan.contains("GraftRelation("), plan)
+    assert(plan.contains("buckets=1/8"), plan)
     assert(pruned.count() == 1)
   }
 
@@ -305,8 +307,9 @@ class GraftDataSourceSpec extends AnyFunSuite {
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(plan.contains("PushedFilters"), plan)
     assert(plan.contains("In(k"), plan)
-    assert(plan.contains("GraftRelation"), plan)
-    assert(plan.contains("buckets="), plan)
+    assert(plan.contains("GraftBatchScan") && !plan.contains("GraftRelation"), plan)
+    assert("""buckets=(\d+)/8""".r.findFirstMatchIn(plan).exists(_.group(1).toInt <= 2),
+      plan)
   }
 
   test("a fresh applyBatch is visible to an existing reader plan (no stale listing)") {
