@@ -188,7 +188,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       if (isTableDir(bdir) && bname.nonEmpty &&
           graft.cdc.Branch.exists(spark, bdir.toString, bname))
         return new GraftTable(bdir.toString,
-          GraftTable.tableSchema(spark, bdir.toString), spjCapable = true,
+          GraftTable.tableSchema(spark, bdir.toString, Some(bname)), spjCapable = true,
           branch = Some(bname))
     }
     val dir = tablePath(ident)
@@ -241,7 +241,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             case Some(p) => p
             case None if graft.cdc.Branch.exists(spark, dir.toString, version) =>
               return new GraftTable(dir.toString,
-                GraftTable.tableSchema(spark, dir.toString),
+                GraftTable.tableSchema(spark, dir.toString, Some(version)),
                 branch = Some(version))
             case None =>
               throw new IllegalArgumentException(

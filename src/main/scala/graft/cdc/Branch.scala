@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import CdcApplier.{BUCKET, POS, TargetMeta}
+import CdcApplier.{POS, TargetMeta}
 
 /** BRANCHES + write-audit-publish (q264; public design points: Iceberg
   * branching and the WAP pattern, Delta's staging-table idiom). A tag
@@ -89,6 +89,16 @@ object Branch {
     meta
   }
 
+  /** The branch dir's own meta — main's layout copied by [[create]], its
+    * schema evolved by staged batches — with [[mainMeta]]'s typed error
+    * unless main pins branch `name`. */
+  private[graft] def branchMeta(spark: SparkSession, mainDir: String, name: String): TargetMeta = {
+    mainMeta(spark, mainDir, name)
+    TargetMeta.read(spark.sparkContext.hadoopConfiguration,
+      new Path(branchDir(mainDir, name))).getOrElse(
+      throw new IllegalStateException(s"branch '$name' of $mainDir has no meta"))
+  }
+
   /** The branch point: main's published high-water position at create time. */
   private def branchFrom(spark: SparkSession, mainDir: String, name: String): Long =
     mainMeta(spark, mainDir, name).tags.get(pinTag(name))
@@ -132,69 +142,31 @@ object Branch {
     * above the branch point (the copied horizon discards the rest). */
   def applyBatch(spark: SparkSession, mainDir: String, name: String,
       changes: DataFrame): Seq[Int] = {
-    branchFrom(spark, mainDir, name) // existence check with a typed error
-    val dir = branchDir(mainDir, name)
-    val meta = TargetMeta.read(spark.sparkContext.hadoopConfiguration,
-      new Path(dir)).getOrElse(
-      throw new IllegalStateException(s"branch '$name' of $mainDir has no meta"))
+    val meta = branchMeta(spark, mainDir, name)
     val pk = meta.pkCols.getOrElse(
       throw new IllegalStateException(s"branch '$name' of $mainDir has no persisted PK"))
-    CdcApplier.applyBatchMor(spark, changes, dir,
+    CdcApplier.applyBatchMor(spark, changes, branchDir(mainDir, name),
       CdcApplier.Options(pk, numBuckets = meta.numBuckets,
         bucketCols = meta.bucketCols, rangeBounds = meta.rangeBounds))
   }
 
-  /** The branch lineage's live rows: main AS OF the branch point ∪ the
-    * branch's deltas, resolved by [[CdcApplier.live]] (`below` as there).
-    * `meta` is main's ([[mainMeta]]); each side's paths are its whole dir,
-    * bucket dirs, or none. Main's files are read in place and serve the
-    * persisted schema; the branch dir has no meta of its own and may stage
-    * columns main does not have yet, so it keeps mergeSchema inference. */
-  private[graft] def lineage(spark: SparkSession, mainDir: String, name: String,
-      meta: TargetMeta, mainPaths: Seq[String], branchPaths: Seq[String],
-      below: DataFrame => DataFrame = identity): DataFrame = {
-    val base = CdcApplier.storedSlice(spark, Some(meta), mainDir, mainPaths)
-      .filter(col(POS) <= meta.tags.get(pinTag(name)))
-    val merged =
-      if (branchPaths.isEmpty) base
-      else base.unionByName(CdcApplier.storedSlice(spark, None,
-        branchDir(mainDir, name), branchPaths), allowMissingColumns = true)
-    CdcApplier.live(merged, Some(meta), below)
-  }
+  /** The branch lineage's state: the connector's branch read — main's
+    * files cut at the branch point plus the branch's deltas, per bucket,
+    * resolved together inside each bucket's reader, served in the branch
+    * dir's own schema. Main's files are read in place — zero copies at any
+    * size. An unknown branch is refused at call time, by the read's schema
+    * resolution. */
+  def snapshot(spark: SparkSession, mainDir: String, name: String): DataFrame =
+    CdcApplier.connectorRead(spark, mainDir, "branch" -> name)
 
-  /** The branch lineage's state ([[lineage]] over both whole dirs). Main's
-    * files are read in place — zero copies at any size. */
-  def snapshot(spark: SparkSession, mainDir: String, name: String): DataFrame = {
-    val dir = branchDir(mainDir, name)
-    lineage(spark, mainDir, name, mainMeta(spark, mainDir, name), Seq(mainDir),
-      if (CdcApplier.bucketIds(fsOf(spark, dir), new Path(dir)).isEmpty) Nil else Seq(dir))
-  }
-
-  /** Bucket-pruned point lookup against the branch lineage — the audit
-    * read's cheap form: BOTH sides (main's as-of slice and the branch's
-    * deltas) prune to the keys' buckets with the layout's own hash before
-    * the union resolves, so an audit probe touches ≤k bucket directories
-    * per side, never either table (the q123/q216 pruning discipline,
-    * carried onto branches). */
+  /** Point lookup against the branch lineage — the audit read's cheap
+    * form: [[snapshot]] filtered by the keys' exact match
+    * ([[CdcApplier.keyMatch]]), so BOTH sides read only the keys' bucket
+    * directories, never either table. */
   def pointLookup(spark: SparkSession, mainDir: String, name: String,
       keys: DataFrame): DataFrame = {
     val meta = mainMeta(spark, mainDir, name)
-    val pk = meta.pkCols.getOrElse(
-      throw new IllegalStateException(s"mor layout at $mainDir has no persisted PK"))
-    val bucketCols = meta.bucketCols.getOrElse(pk)
-    require(keys.columns.toSet == pk.toSet || keys.columns.toSet == bucketCols.toSet,
-      s"lookup keys (${keys.columns.mkString(",")}) must be the PK or its bucket prefix")
-    val (_, buckets) = CdcApplier.lookupBuckets(spark, meta, keys,
-      keys.columns.toSeq, bucketCols)
-    def pruned(dir: String): Seq[String] = {
-      val present = CdcApplier.bucketIds(fsOf(spark, dir), new Path(dir)).toSet
-      buckets.filter(present).map(b => s"$dir/$BUCKET=$b")
-    }
-    // the keys are the PK or its prefix, so the semi-join may run below
-    // the resolve (a key's versions agree on its PK)
-    lineage(spark, mainDir, name, meta, pruned(mainDir),
-      pruned(branchDir(mainDir, name)),
-      below = _.join(broadcast(keys), keys.columns.toSeq, "left_semi"))
+    snapshot(spark, mainDir, name).filter(CdcApplier.keyMatch(meta, keys))
   }
 
   /** Publish the branch into main atomically — the WAP "publish" step.

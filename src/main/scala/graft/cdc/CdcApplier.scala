@@ -674,18 +674,49 @@ object CdcApplier {
           throw new IllegalStateException(s"no graft table state at $dir")))
     else readStored(spark, meta, paths, if (paths == Seq(dir)) None else Some(dir))
 
-  /** The one live read every serving path shares (snapshot, as-of, point
-    * and range lookups, the connector, the index seed, the coercing sink):
-    * the stored rows at `paths` ([[storedSlice]]), cut at `asOf` if given,
-    * resolved to their live rows by [[live]]. */
+  /** The live rows of an EXPLICIT path set ([[storedSlice]] resolved by
+    * [[live]]) as a V1 parquet read: the epoch pin's exact file set, the
+    * coercing sink's touched buckets, the index seed's bucket slice, and
+    * the subtrees optimizer rules splice into a plan after V2 pushdown has
+    * run. Every other read of a table goes through the connector's one
+    * scan ([[connectorRead]]). */
   private[graft] def liveRead(
       spark: SparkSession, meta: Option[TargetMeta], targetDir: String,
-      paths: Seq[String], asOf: Option[Long] = None,
-      below: DataFrame => DataFrame = identity,
-      keepBucket: Boolean = false): DataFrame = {
-    val stored = storedSlice(spark, meta, targetDir, paths)
-    live(asOf.fold(stored)(p => stored.filter(col(POS) <= p)), meta, below, keepBucket)
+      paths: Seq[String], below: DataFrame => DataFrame = identity,
+      keepBucket: Boolean = false): DataFrame =
+    live(storedSlice(spark, meta, targetDir, paths), meta, below, keepBucket)
+
+  /** [[liveRead]] of a whole table directory, after [[openTarget]]: the
+    * read an optimizer rule splices in after V2 pushdown has run, where an
+    * unpushed connector relation cannot be planned. A table with no bucket
+    * dirs left is an empty frame. */
+  private[graft] def liveDir(spark: SparkSession, dir: String): DataFrame = {
+    val target = new Path(dir)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val fs = target.getFileSystem(hconf)
+    openTarget(fs, target)
+    liveRead(spark, TargetMeta.read(hconf, target), dir,
+      if (bucketIds(fs, target).nonEmpty) Seq(dir) else Nil)
   }
+
+  /** The persisted meta a read entry point checks its guards against,
+    * after [[openTarget]] (a crashed rebucket's `.bak` may hold the data). */
+  private def readerMeta(spark: SparkSession, targetDir: String): TargetMeta = {
+    val target = new Path(targetDir)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    openTarget(target.getFileSystem(hconf), target)
+    TargetMeta.read(hconf, target).getOrElse(
+      throw new IllegalStateException(s"no graft table state at $targetDir"))
+  }
+
+  /** The connector's read of `targetDir` with the given read options
+    * (`asOfPos`, `branch`): one [[graft.sources.GraftBatchScan]] that
+    * prunes buckets and files by the query's key predicates, cuts history
+    * and resolves latest-per-key inside each bucket's reader. The Scala
+    * read API is this plus a predicate. */
+  private[graft] def connectorRead(spark: SparkSession, targetDir: String,
+      options: (String, String)*): DataFrame =
+    spark.read.format("graft").options(options.toMap).load(targetDir)
 
   /** Stored versions → live rows: logicalize (so `below` and the result
     * speak LOGICAL names), apply `below`, resolve latest-per-key when the
@@ -713,14 +744,8 @@ object CdcApplier {
     * row has been deleted AND compacted away has no bucket dirs left — that
     * is a valid empty table, typed from the schema persisted in
     * `.graft_meta`, not a read error. */
-  def snapshot(spark: SparkSession, targetDir: String): DataFrame = {
-    val target = new Path(targetDir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = target.getFileSystem(hconf)
-    openTarget(fs, target) // a crashed rebucket's .bak may hold the data
-    liveRead(spark, TargetMeta.read(hconf, target), targetDir,
-      if (bucketIds(fs, target).nonEmpty) Seq(targetDir) else Nil)
-  }
+  def snapshot(spark: SparkSession, targetDir: String): DataFrame =
+    connectorRead(spark, targetDir)
 
   /** The layout's bucket-assignment expression: hash (default) or the
     * range-split count-of-bounds-below (a codegen'd sum of comparisons —
@@ -949,8 +974,9 @@ object CdcApplier {
   /** Latest-per-key resolution for merge-on-read layouts: within each PK,
     * the newest `_graft_pos` wins. Replayed batches append value-identical
     * (key, pos) duplicates; any of them is the same winner, so the
-    * row_number tie is harmless. Runs AFTER bucket pruning on lookups, so
-    * the window only sorts the touched buckets' rows. */
+    * row_number tie is harmless. The window form, for the applier's own
+    * raw-version reads and the explicit-path [[live]] reads; the serving
+    * reads resolve per bucket inside the connector's reader. */
   private[graft] def resolveOnRead(df: DataFrame, pkCols: Seq[String]): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(pkCols.map(col): _*).orderBy(col(POS).desc)
@@ -973,11 +999,12 @@ object CdcApplier {
     * delete files). The resolved batch is APPENDED as per-bucket delta
     * files — the existing bucket data is never read or rewritten, so a
     * batch's write I/O is exactly the batch, not the touched buckets. The
-    * cost moves to readers ([[resolveOnRead]]'s latest-per-key window) and
-    * is reclaimed by [[compactMor]] on whatever cadence the deployment
-    * picks — at 100 TB hot high-churn tables run MOR between compactions,
-    * cold tables stay copy-on-write. Same envelope, same resolve, same
-    * horizon guard and layout-adoption rules as [[applyBatch]]; schema
+    * cost moves to readers (latest-per-key, resolved inside each bucket's
+    * reader) and is reclaimed by [[compactMor]] on whatever cadence the
+    * deployment picks — at 100 TB hot high-churn tables run MOR between
+    * compactions, cold tables stay copy-on-write. Same envelope, same
+    * resolve, same horizon guard and layout-adoption rules as
+    * [[applyBatch]]; schema
     * evolution is deliberately NOT supported on the delta path (evolve at
     * a compaction, where the whole bucket rewrites anyway).
     *
@@ -1225,13 +1252,8 @@ object CdcApplier {
     * `pos` below the persisted horizon is therefore rejected rather than
     * answered wrong. */
   def snapshotAsOf(spark: SparkSession, targetDir: String, pos: Long): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val target = new Path(targetDir)
-    openTarget(target.getFileSystem(hconf), target)
-    val meta = TargetMeta.read(hconf, target).getOrElse(
-      throw new IllegalStateException(s"no graft table state at $targetDir"))
-    requireHistory(meta, targetDir, pos, "time travel")
-    liveRead(spark, Some(meta), targetDir, Seq(targetDir), asOf = Some(pos))
+    requireHistory(readerMeta(spark, targetDir), targetDir, pos, "time travel")
+    connectorRead(spark, targetDir, "asOfPos" -> pos.toString)
   }
 
   // ---- column mapping (q258) ----------------------------------------------
@@ -1569,29 +1591,20 @@ object CdcApplier {
   /** Range scan against a RANGE-bucketed snapshot — the reference target's
     * native access path (an HBase scan over a rowkey interval touches only
     * the covering regions; `Options.rangeBounds` recreates that property
-    * on parquet). The covering bucket ids are pure driver arithmetic over
-    * the persisted split points — no probe job — and the BETWEEN predicate
-    * pushes into the pruned scan for row-group skipping. Works on both
-    * storage modes (mor resolves after pruning: a key's versions share its
-    * bucket). */
+    * on parquet). The connector read filtered by the BETWEEN: its scan maps
+    * the interval to the contiguous covering buckets by driver arithmetic
+    * over the persisted split points (no probe job), skips files and row
+    * groups by the range, and resolves mor per bucket (a key's versions
+    * share its bucket). Hash layouts are refused here, at call time. */
   def rangeLookup(spark: SparkSession, targetDir: String, lo: Long, hi: Long): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val target = new Path(targetDir)
-    openTarget(target.getFileSystem(hconf), target)
-    val meta = TargetMeta.read(hconf, target).getOrElse(
-      throw new IllegalStateException(s"no graft table state at $targetDir"))
-    val bounds = meta.rangeBounds.getOrElse(
+    val meta = readerMeta(spark, targetDir)
+    if (meta.rangeBounds.isEmpty)
       throw new IllegalStateException(
-        s"$targetDir is hash-bucketed — range scans need a rangeBounds layout"))
+        s"$targetDir is hash-bucketed — range scans need a rangeBounds layout")
     val pkCols = meta.pkCols.getOrElse(
       throw new IllegalStateException(s"no persisted key columns at $targetDir"))
-    val keyCol = meta.bucketCols.getOrElse(pkCols).head
-    if (hi < lo) return liveRead(spark, Some(meta), targetDir, Nil)
-    // covering buckets: pure arithmetic over the persisted split points
-    val buckets = (bounds.count(_ <= lo) to bounds.count(_ <= hi)).map(Int.box)
-    liveRead(spark, Some(meta), targetDir, Seq(targetDir), below = _
-      .filter(col(BUCKET).isin(buckets: _*))
-      .filter(col(keyCol) >= lo && col(keyCol) <= hi))
+    val keyCol = col(meta.bucketCols.getOrElse(pkCols).head)
+    connectorRead(spark, targetDir).filter(keyCol >= lo && keyCol <= hi)
   }
 
   /** Change-data feed FROM a merge-on-read target: reconstruct the CDC
@@ -1800,89 +1813,50 @@ object CdcApplier {
   /** Point lookup against the bucketed snapshot — the replica's analog of
     * the key-value store `Get` the reference replicates INTO HBase for
     * (HbaseApplier serves row-key gets; here the PK-hash layout serves the
-    * same read). The lookup keys' buckets are computed with the layout's
-    * own hash (same `pmod(hash(pk), numBuckets)` the writer used, modulus
-    * from the persisted `.graft_meta` truth) and turned into a LITERAL
-    * `graft_bucket IN (...)` predicate, so Spark's partition pruning reads
-    * ONLY those bucket directories — at 100 TB with thousands of buckets a
-    * k-key lookup touches ≤k directories, never the table. Within the
-    * pruned buckets every PK column additionally pushes a literal
-    * `pk IN (...)` into the parquet scan (row-group stats pruning). For a
-    * composite PK the conjunction of per-column IN-lists is a SUPERSET of
-    * the key tuples (the cross product), so it is safe to push — the
-    * authoritative exact tuple match is the broadcast semi-join below,
-    * which holds for any PK arity.
+    * same read): the connector read filtered by [[keyMatch]], the exact
+    * key tuples as literals. Its scan hashes those tuples with the
+    * layout's own bucket expression and reads ONLY their bucket
+    * directories — at 100 TB with thousands of buckets a k-key lookup
+    * touches ≤k directories, never the table — skips files and row groups
+    * by the key IN-lists, and resolves version-bearing layouts inside each
+    * bucket's reader: no join, no exchange.
     *
-    * `keys` carries one row per lookup key (the PK columns, writer-typed).
+    * `keys` carries one row per lookup key: the PK columns, or on a layout
+    * bucketed on a PK prefix that prefix alone (the rowkey prefix SCAN).
     * Point-lookup batches are driver-bounded BY CONTRACT (a `Get` batch is
     * a handful of keys, not a table — for table-sized probes use a join
-    * against [[snapshot]]); the one collect here is that bounded key set,
-    * and the bucket ids come from it driver-side ([[bucketIdsOf]]). */
-  def pointLookup(spark: SparkSession, targetDir: String, keys: DataFrame): DataFrame = {
-    val target = new Path(targetDir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    openTarget(target.getFileSystem(hconf), target)
-    val meta = TargetMeta.read(hconf, target).getOrElse(
-      throw new IllegalStateException(s"no graft table state at $targetDir"))
-    // Hash in the layout's persisted column order — the caller's key-frame
-    // column order must not change which bucket a key lands in.
+    * against [[snapshot]]); the one collect here is that bounded key set. */
+  def pointLookup(spark: SparkSession, targetDir: String, keys: DataFrame): DataFrame =
+    connectorRead(spark, targetDir).filter(keyMatch(readerMeta(spark, targetDir), keys))
+
+  /** The exact key match of a bounded lookup key frame, as literals: its
+    * columns must be the layout's PK or its bucket prefix (refused here,
+    * at call time, otherwise). ONE collect, de-duplicated on the driver. A
+    * one-column key is an IN-list; a composite key is a balanced
+    * disjunction of per-tuple equality conjunctions — the tuples the scan
+    * hashes to buckets — plus each column's IN-list for file and
+    * row-group skipping. No keys matches nothing. Literals keep the key
+    * frame's column types. */
+  private[cdc] def keyMatch(meta: TargetMeta, keys: DataFrame): Column = {
     val pkCols = meta.pkCols.getOrElse(keys.columns.toSeq)
     val bucketCols = meta.bucketCols.getOrElse(pkCols)
-    // Full-key lookup (the `Get`) or bucket-prefix lookup (the rowkey
-    // prefix SCAN — only for layouts bucketed on a PK prefix, where the
-    // prefix alone still determines the bucket).
-    val lookupCols =
+    val cols =
       if (pkCols.toSet == keys.columns.toSet) pkCols
       else if (bucketCols.toSet == keys.columns.toSet) bucketCols
       else throw new IllegalArgumentException(
         s"lookup keys (${keys.columns.mkString(",")}) must be the target PK " +
           s"(${pkCols.mkString(",")}) or its bucket prefix (${bucketCols.mkString(",")})")
-    // the key tuples also feed every column's IN-list
-    val (keyRows, buckets) = lookupBuckets(spark, meta, keys, lookupCols, bucketCols)
-    if (keyRows.isEmpty) return liveRead(spark, Some(meta), targetDir, Nil)
-    // File-level skipping inside the covered buckets (q250): the per-column
-    // key IN-lists are PK-referencing, so they are skip-safe on BOTH
-    // storage modes (all of a key's versions agree on its PK) — a lookup
-    // into a bucket with a long file history opens only the files whose
-    // key ranges can hold the probed keys. Unknown files are always read;
-    // when nothing skips, the ordinary bucket-directory read keeps its plan.
-    val fsL = target.getFileSystem(hconf)
-    val inFilters: Seq[org.apache.spark.sql.sources.Filter] =
-      lookupCols.zipWithIndex.map { case (pk, i) =>
-        org.apache.spark.sql.sources.In(pk, keyRows.map(_.get(i)).distinct.toArray)
-      }
-    val perBucket = buckets.map(b => FileStats.selectBucketFiles(
-      fsL, new Path(target, s"$BUCKET=$b"), inFilters))
-    val keptFiles = perBucket.flatMap(_._1).map(_.getPath.toString)
-    val fileSkipped = keptFiles.size < perBucket.map(_._2).sum
-    // all versions of a key share its bucket and key values, so the
-    // pruning and the semi-join below keep them together: version-bearing
-    // layouts resolve only the matched rows
-    liveRead(spark, Some(meta), targetDir,
-      if (fileSkipped) keptFiles.toIndexedSeq else Seq(targetDir), below = { df =>
-        val pruned =
-          if (fileSkipped) df else df.filter(col(BUCKET).isin(buckets.map(Int.box): _*))
-        lookupCols.zipWithIndex.foldLeft(pruned) { case (d, (pk, i)) =>
-          d.filter(col(pk).isin(keyRows.map(_.get(i)).distinct: _*))
-        }.join(broadcast(keys), lookupCols, "left_semi")
-      })
-  }
-
-  /** A bounded lookup key frame's distinct key tuples, in `lookupCols`
-    * order — ONE collect, de-duplicated on the driver (contract-bounded
-    * like the `touched`-buckets collect in applyBatch) — and the sorted
-    * bucket ids they map to through [[bucketIdsOf]], which runs no job.
-    * The literals are typed as the caller's key columns, which the hash
-    * then sees exactly as the writer did. `bucketCols` ⊆ `lookupCols`.
-    * Shared by [[pointLookup]] and [[Branch.pointLookup]]. */
-  private[cdc] def lookupBuckets(spark: SparkSession, meta: TargetMeta,
-      keys: DataFrame, lookupCols: Seq[String], bucketCols: Seq[String])
-      : (Seq[org.apache.spark.sql.Row], Seq[Int]) = {
-    val keyRows = keys.select(lookupCols.map(col): _*).collect().distinct.toSeq
-    val buckets = bucketIdsOf(spark, keyRows.map(r => bucketCols.map(c =>
-      lit(r.get(lookupCols.indexOf(c))).cast(keys.schema(c).dataType))),
-      meta.numBuckets, meta.rangeBounds).distinct.sorted
-    (keyRows, buckets)
+    val tuples = keys.select(cols.map(col): _*).collect().distinct.toSeq.map(_.toSeq)
+    def typed(i: Int, v: Any): Column = lit(v).cast(keys.schema(cols(i)).dataType)
+    def inList(i: Int): Column =
+      col(cols(i)).isin(tuples.map(_(i)).distinct.map(typed(i, _)): _*)
+    def balanced(cs: Seq[Column]): Column =
+      if (cs.size == 1) cs.head
+      else cs.splitAt(cs.size / 2) match { case (l, r) => balanced(l) || balanced(r) }
+    if (tuples.isEmpty) lit(false)
+    else if (cols.size == 1) inList(0)
+    else cols.indices.map(inList).reduce(_ && _) && balanced(tuples.map(t =>
+      cols.indices.map(i => col(cols(i)) === typed(i, t(i))).reduce(_ && _)))
   }
 
   /** [[snapshot]] for callers that must distinguish "this target was never

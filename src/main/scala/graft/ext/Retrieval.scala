@@ -474,10 +474,14 @@ object Retrieval {
         .toDF("vec_id")
       val fetched = CdcApplier.pointLookup(s, estore, keys)
         .select(col("vec_id"), col("embedding"))
+      val keyBuckets = CdcApplier.bucketIdsOf(s,
+        (candLocal.map(_._2) ++ qids).distinct.toSeq.map(k =>
+          Seq(lit(k).cast(e.schema("vec_id").dataType))), 16, None).distinct.size
       val plan = fetched.queryExecution.executedPlan.toString
-      require(plan.linesIterator.exists(l =>
-        l.contains("PartitionFilters") && l.contains("graft_bucket") && l.contains("IN")),
-        "the candidate fetch must be a bucket-pruned point lookup:\n" + plan)
+      require(plan.linesIterator.exists(l => l.contains("GraftBatchScan") &&
+          l.contains(s"buckets=$keyBuckets/") &&
+          l.contains("PushedFilters") && l.contains("vec_id")),
+        s"the candidate fetch must read exactly its keys' $keyBuckets buckets:\n" + plan)
       require(!plan.contains("embeddings"),
         "stage 2 must never scan the embeddings table:\n" + plan)
       val tgt = Similarity.withSubNorms(

@@ -2,12 +2,12 @@ package graft.plans
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Cast, DynamicPruningSubquery, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual, Literal, NamedExpression, Not}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Cast, DynamicPruningSubquery, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, HintInfo, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.ColumnShim
@@ -29,17 +29,17 @@ import graft.cdc.CdcApplier.{BUCKET, TargetMeta}
   * path, SURVEY S7/EP3; public design point: Phoenix/Astro secondary-index
   * plan rewrite).
   *
-  * TWO relation shapes route (q273): the V1 `LogicalRelation(HadoopFsRelation)`
-  * shape the Scala read paths ([[CdcApplier.snapshot]]) produce, and the
-  * connector's one scan, [[graft.sources.GraftBatchScan]], in the
-  * `DataSourceV2ScanRelation` catalog SQL (`SELECT ... FROM cat.ns.t
-  * WHERE ...`) reaches the optimizer with. The connector shape routes only
-  * a [[graft.sources.GraftBatchScan.wholeTable]] read — a plain
-  * current-state read no pushed key predicate pruned; as-of, branch,
-  * limit, change-feed and aggregate projections, whose semantics a
-  * current-state lookup must not impersonate, never route. Both shapes
-  * emit the same plan: V1 reads of the index and, for a two-hop route,
-  * the store root.
+  * ONE relation shape routes: the connector's one scan,
+  * [[graft.sources.GraftBatchScan]], in the `DataSourceV2ScanRelation`
+  * that catalog SQL (`SELECT ... FROM cat.ns.t WHERE ...`), path reads and
+  * the Scala read API ([[CdcApplier.snapshot]]) all reach the optimizer
+  * with — and only a [[graft.sources.GraftBatchScan.wholeTable]] read, a
+  * plain current-state read no pushed key predicate pruned. As-of,
+  * branch, limit, change-feed and aggregate projections, whose semantics
+  * a current-state lookup must not impersonate, never route; neither does
+  * a raw parquet read of the store directory, which serves every stored
+  * version and tombstone. The emitted plan reads the index and, for a
+  * two-hop route, the store root through V1 live reads.
   *
   * TWO predicate forms route:
   *  - point/IN (`col = lit`, `col IN (lits)`) — on any index layout;
@@ -55,9 +55,7 @@ import graft.cdc.CdcApplier.{BUCKET, TargetMeta}
   * `[Project(cols...)](Filter(conjuncts, relation(store path)))` where SOME
   * conjunct routes on a registered indexed column and every projected
   * column is a plain column of the served read (data columns +
-  * `_graft_pos`). The query's whole filter — minus the snapshot's own
-  * tombstone shapes on `_graft_deleted`, which the live read applies —
-  * re-applies ON TOP of the routed read against its current values (q289:
+  * `_graft_pos`). The query's whole filter re-applies ON TOP of the routed read against its current values (q289:
   * `o_status = 'F'` beside the routed `custkey IN (...)` routes the indexed
   * half and filters the rest, Phoenix's index-plus-filter plan), so the
   * answer is exact. A non-deterministic conjunct declines; a conjunct
@@ -123,26 +121,16 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ this
 
-  /** The store path of a routable relation, or None. V1: a single-root
-    * HadoopFsRelation (the snapshot read). V2 (q273): a catalog/path graft
-    * table whose scan reads the whole current table
+  /** The store path of a routable relation, or None: a graft table whose
+    * scan reads the whole current table
     * ([[graft.sources.GraftBatchScan.wholeTable]]) — precisely the only
     * shape a current-state lookup may replace. */
-  private def scanPath(plan: LogicalPlan): Option[String] = plan match {
-    case r: LogicalRelation => r.relation match {
-      case fs: HadoopFsRelation => fs.location.rootPaths.toList match {
-        case one :: Nil => Some(normalize(one.toString))
-        case _          => None
-      }
-      case _ => None
-    }
-    case r: DataSourceV2ScanRelation => (r.relation.table, r.scan) match {
+  private def scanPath(r: DataSourceV2ScanRelation): Option[String] =
+    (r.relation.table, r.scan) match {
       case (t: graft.sources.GraftTable, s: graft.sources.GraftBatchScan) if s.wholeTable =>
         Some(normalize(t.targetDir))
       case _ => None
     }
-    case _ => None
-  }
 
   private def conjuncts(e: Expression): Seq[Expression] = e match {
     case And(l, r) => conjuncts(l) ++ conjuncts(r)
@@ -222,16 +210,6 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
     pointRoute.orElse(rangeRoute)
   }
 
-  /** The snapshot's tombstone filter shapes on `_graft_deleted`, which
-    * every live read applies itself. */
-  private def redundant(e: Expression): Boolean = e match {
-    case IsNotNull(a: AttributeReference) => a.name == CdcApplier.DEL
-    case Not(a: AttributeReference)       => a.name == CdcApplier.DEL
-    case EqualTo(a: AttributeReference, Literal(false, _)) => a.name == CdcApplier.DEL
-    case EqualTo(Literal(false, _), a: AttributeReference) => a.name == CdcApplier.DEL
-    case _ => false
-  }
-
   /** The index side of a route: the index's live rows the routed literals
     * select, read from only the index buckets they can live in, with the
     * routed predicate below the resolve. The literals fix the bucket only
@@ -301,7 +279,7 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
 
   private def rewrite(projList: Seq[NamedExpression], cond: Expression,
       storePath: String): Option[LogicalPlan] = {
-    val kept = conjuncts(cond).filterNot(redundant)
+    val kept = conjuncts(cond)
     val spark = SparkSession.active
     val conf = spark.sparkContext.hadoopConfiguration
     for {
@@ -342,12 +320,6 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
         None
     }
 
-  /** The rule's own output: the routed store read, a dynamic-pruning
-    * filter over the registered store path. The fixed-point batch re-runs
-    * the rule on it, and it must not be consulted again. */
-  private def routed(cond: Expression): Boolean =
-    cond.exists(_.isInstanceOf[DynamicPruningSubquery])
-
   /** Counting is PER PLAN: one fired tick when any rewrite landed in this
     * apply, else one declined tick when a registered relation was consulted
     * — the seam the gates/specs assert ("exactly once per plan"), robust to
@@ -358,7 +330,7 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
     var consulted = false
     var landed = false
     def consult(p: LogicalPlan, projList: Seq[NamedExpression],
-        cond: Expression, rel: LogicalPlan): LogicalPlan =
+        cond: Expression, rel: DataSourceV2ScanRelation): LogicalPlan =
       scanPath(rel).flatMap { sp =>
         if (!indexes.keySet().stream().anyMatch(_._1 == sp)) None
         else {
@@ -369,8 +341,6 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
         }
       }.getOrElse(p)
     val out = plan.transform {
-      case p @ Project(projList, Filter(cond, rel: LogicalRelation)) if !routed(cond) =>
-        consult(p, projList, cond, rel)
       case p @ Project(projList, Filter(cond, rel: DataSourceV2ScanRelation)) =>
         consult(p, projList, cond, rel)
       // catalog SQL's SELECT-* shape: the no-op Project is already elided

@@ -138,7 +138,7 @@ object GraftViewRewrite extends Rule[LogicalPlan] {
         case _ => None
       }
     } yield {
-      val viewPlan = CdcApplier.snapshot(SparkSession.active, viewDir)
+      val viewPlan = CdcApplier.liveDir(SparkSession.active, viewDir)
         .select(g.name, "cnt").queryExecution.analyzed
       val Seq(vg, vc) = viewPlan.output
       // re-bind the original ExprIds so everything ABOVE the aggregate
@@ -233,7 +233,7 @@ object GraftViewRewrite extends Rule[LogicalPlan] {
       val (_, viewDir, exact) = hit
       val qNames = groups.map(_.name).distinct
       if (exact) {
-        val viewPlan = CdcApplier.snapshot(SparkSession.active, viewDir)
+        val viewPlan = CdcApplier.liveDir(SparkSession.active, viewDir)
           .select((qNames ++ Seq("cnt", "sum", "mn", "mx", "avg")).map(org.apache.spark.sql.functions.col): _*)
           .queryExecution.analyzed
         val byName: Map[String, Attribute] =
@@ -255,7 +255,7 @@ object GraftViewRewrite extends Rule[LogicalPlan] {
         // re-derives as the exact total over the total count in ONE double
         // division, the view's own discipline. Work is view-groups-sized;
         // the base never scans.
-        val viewPlan = CdcApplier.snapshot(SparkSession.active, viewDir)
+        val viewPlan = CdcApplier.liveDir(SparkSession.active, viewDir)
           .select((qNames ++ Seq("cnt", "sum", "mn", "mx")).map(org.apache.spark.sql.functions.col): _*)
           .queryExecution.analyzed
         val byName: Map[String, Attribute] =
@@ -343,7 +343,7 @@ object GraftViewRewrite extends Rule[LogicalPlan] {
       _ <- if (keyNames == Set(jv.joinCol, jv.dimKey)) Some(()) else None
       _ <- if (output.map(_.name).distinct.length == output.length) Some(())
            else None
-      viewPlan = CdcApplier.snapshot(SparkSession.active, jv.viewDir)
+      viewPlan = CdcApplier.liveDir(SparkSession.active, jv.viewDir)
         .drop(CdcApplier.POS).queryExecution.analyzed
       byName: Map[String, Attribute] = viewPlan.output.map(a => a.name -> a).toMap
       _ <- if (output.forall(o => byName.contains(o.name) || o.name == jv.dimKey))

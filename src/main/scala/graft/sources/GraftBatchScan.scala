@@ -5,12 +5,15 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.{expressions => ex}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.graft.ParquetReadShim
+import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarBatch, ColumnarMap, ColumnVector}
 
 import graft.cdc.CdcApplier
 import graft.cdc.CdcApplier.TargetMeta
@@ -19,7 +22,10 @@ import graft.cdc.CdcApplier.TargetMeta
   * DataSource-V2 `Batch` scan that serves every current-state read —
   * full, bucket-pruned by pushed key predicates, LIMIT-capped — and the
   * two history shapes: time travel (`asOfPos` / `VERSION AS OF`) and
-  * branch lineage (q277/q287). Only the change-feed envelope
+  * branch lineage (q277/q287). It serves SQL and the Scala read API alike:
+  * `CdcApplier.snapshot`, `snapshotAsOf`, `pointLookup` and `rangeLookup`,
+  * `Branch.snapshot` and `Branch.pointLookup` are each this scan plus a
+  * predicate ([[CdcApplier.connectorRead]]). Only the change-feed envelope
   * (`changesFrom`), which is not a stored read, keeps its own V1
   * [[GraftScan]].
   *
@@ -56,9 +62,11 @@ import graft.cdc.CdcApplier.TargetMeta
   * skipping for the pushed filters (a resolving read pushes only
   * PK-referencing predicates below the resolve — a non-key predicate could
   * skip a row group holding a key's WINNING version while an older version
-  * survives elsewhere). Spark re-evaluates every pushed predicate above
-  * the scan (the connector's standing convention), so reader-side
-  * filtering is a performance matter only.
+  * survives elsewhere); a resolving read also applies those PK predicates
+  * to its rows before the resolve, so only the matched keys enter the
+  * per-bucket map. Spark re-evaluates every pushed predicate above the
+  * scan (the connector's standing convention), so reader-side filtering
+  * is a performance matter only.
   *
   * Statistics ([[SupportsReportStatistics]]): bytes under the covered
   * buckets (q236 auto-broadcast), plus the ANALYZEd table statistics
@@ -79,9 +87,10 @@ class GraftBatchScan(
   private val hconf = spark.sparkContext.hadoopConfiguration
   private val fs = target.getFileSystem(hconf)
   CdcApplier.openTarget(fs, target)
-  /** Main's meta; a branch read also proves the branch exists. */
+  /** The table's meta; a branch read takes the branch dir's own (main's
+    * layout, the branch's schema), which also proves the branch exists. */
   private val meta = branch match {
-    case Some(name) => Some(graft.cdc.Branch.mainMeta(spark, targetDir, name))
+    case Some(name) => Some(graft.cdc.Branch.branchMeta(spark, targetDir, name))
     case None       => TargetMeta.read(hconf, target)
   }
   asOf.foreach(pos => CdcApplier.requireHistory(meta.getOrElse(
@@ -342,11 +351,12 @@ class GraftBatchScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val inner = ParquetReadShim.parquetReaderFactory(
-      spark, fileSchema, readInternal, resolveSafe(pushedPhys))
+    val safe = resolveSafe(pushedPhys)
+    val inner = ParquetReadShim.parquetReaderFactory(spark, fileSchema, readInternal, safe)
     new GraftResolvingReaderFactory(inner, mustResolve,
       pkCols.map(ord).toArray, ord(CdcApplier.POS), ord(CdcApplier.DEL),
-      readInternal, required.indices.toArray, limit)
+      readInternal, required.indices.toArray, limit,
+      if (mustResolve) GraftResolvingReaderFactory.rowFilter(safe, readInternal) else None)
   }
 
   /** This scan's rows outside a Spark plan — the V1-resolved relation
@@ -405,31 +415,79 @@ case class GraftBucketPartition(
 }
 
 /** Wraps Spark's parquet reader factory with the graft read semantics, per
-  * bucket: each side's `_graft_pos` cut, then latest-per-key resolution
-  * when the read holds versions, then the tombstone filter (after the
-  * resolve, so a newer tombstone suppresses an older upsert), the
-  * projection down to the served columns, and the LIMIT cap. Row-based by
-  * construction — resolution needs rows; the inner parquet decode stays
-  * vectorized and hands rows off the column batches. */
+  * bucket: each side's `_graft_pos` cut, then, when the read holds
+  * versions, the key predicates and latest-per-key resolution, then the
+  * tombstone filter (after the resolve, so a newer tombstone suppresses an
+  * older upsert), the projection down to the served columns, and the
+  * LIMIT cap. A one-version read with no cut and no LIMIT needs only the
+  * tombstone filter and the projection, and stays columnar: each decoded
+  * batch is served as its required column vectors, narrowed to its live
+  * rows ([[SelectedColumnVector]]) when it holds a tombstone. */
 class GraftResolvingReaderFactory(
     inner: PartitionReaderFactory, val resolve: Boolean,
     pkOrdinals: Array[Int], posOrdinal: Int, delOrdinal: Int,
-    readSchema: StructType, outOrdinals: Array[Int], limit: Option[Int])
+    readSchema: StructType, outOrdinals: Array[Int], limit: Option[Int],
+    keyFilter: Option[Expression] = None)
     extends PartitionReaderFactory {
 
-  override def supportColumnarReads(partition: InputPartition): Boolean = false
+  private def sidesOf(partition: InputPartition): Seq[(InputPartition, Option[Long])] =
+    partition.asInstanceOf[GraftBucketPartition].sides
+
+  override def supportColumnarReads(partition: InputPartition): Boolean =
+    !resolve && limit.isEmpty && sidesOf(partition).forall { case (fp, cut) =>
+      cut.isEmpty && inner.supportColumnarReads(fp)
+    }
+
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
+    val readers = sidesOf(partition).map { case (fp, _) => inner.createColumnarReader(fp) }
+    val batches = readers.iterator.flatMap(r =>
+      Iterator.continually(r).takeWhile(_.next()).map(_.get())).map(liveColumns)
+    new PartitionReader[ColumnarBatch] {
+      private var cur: ColumnarBatch = _
+      override def next(): Boolean = batches.hasNext && { cur = batches.next(); true }
+      override def get(): ColumnarBatch = cur
+      override def close(): Unit = readers.foreach(_.close())
+    }
+  }
+
+  /** A decoded batch's served columns, over its live rows only (a NULL
+    * `_graft_deleted` drops, as on the row path). */
+  private def liveColumns(b: ColumnarBatch): ColumnarBatch = {
+    val del = b.column(delOrdinal)
+    val cols = outOrdinals.map(b.column)
+    val n = b.numRows
+    val sel = new Array[Int](n)
+    var live = 0
+    var i = 0
+    while (i < n) {
+      if (!del.isNullAt(i) && !del.getBoolean(i)) { sel(live) = i; live += 1 }
+      i += 1
+    }
+    if (live == n) new ColumnarBatch(cols, n)
+    else {
+      val kept = java.util.Arrays.copyOf(sel, live)
+      new ColumnarBatch(cols.map(c => new SelectedColumnVector(c, kept): ColumnVector), live)
+    }
+  }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     def proj(ords: Array[Int]): UnsafeProjection = UnsafeProjection.create(
       ords.toIndexedSeq.map(i =>
         BoundReference(i, readSchema(i).dataType, nullable = true)))
-    val sides = partition.asInstanceOf[GraftBucketPartition].sides
+    val sides = sidesOf(partition)
     val readers = sides.map { case (fp, _) => inner.createReader(fp) }
-    val versions = readers.iterator.zip(sides.iterator.map(_._2)).flatMap {
+    val cutRows = readers.iterator.zip(sides.iterator.map(_._2)).flatMap {
       case (r, cut) =>
         val rows = Iterator.continually(r).takeWhile(_.next()).map(_.get())
         cut.fold(rows)(p => rows.filter(row =>
           !row.isNullAt(posOrdinal) && row.getLong(posOrdinal) <= p))
+    }
+    // a key's versions share its PK, so a PK-only predicate applied before
+    // the resolve keeps or drops all of them together: only the matched
+    // keys enter the per-bucket map
+    val versions = keyFilter.fold(cutRows) { f =>
+      val pred = ex.Predicate.createInterpreted(f)
+      cutRows.filter(pred.eval)
     }
     val outProj = proj(outOrdinals)
     val live = (if (resolve) latestPerKey(versions, proj(pkOrdinals)) else versions)
@@ -461,4 +519,60 @@ class GraftResolvingReaderFactory(
     }
     winners.values.iterator.asScala.map(_._2)
   }
+}
+
+object GraftResolvingReaderFactory {
+  /** The conjunction of the pushed filters that translate exactly into a
+    * predicate over `schema`'s ordinals; the rest stay with Spark's
+    * filter above the scan, which re-evaluates every pushed filter. */
+  def rowFilter(filters: Array[Filter], schema: StructType): Option[Expression] = {
+    def ref(c: String): Expression = {
+      val i = schema.fieldIndex(c)
+      BoundReference(i, schema(i).dataType, nullable = true)
+    }
+    def value(c: String, v: Any): Literal = Literal.create(v, schema(c).dataType)
+    def expr(f: Filter): Expression = f match {
+      case sources.EqualTo(c, v)            => ex.EqualTo(ref(c), value(c, v))
+      case sources.EqualNullSafe(c, v)      => ex.EqualNullSafe(ref(c), value(c, v))
+      case sources.In(c, vs)                => ex.InSet(ref(c), vs.map(value(c, _).value).toSet)
+      case sources.IsNull(c)                => ex.IsNull(ref(c))
+      case sources.IsNotNull(c)             => ex.IsNotNull(ref(c))
+      case sources.GreaterThan(c, v)        => ex.GreaterThan(ref(c), value(c, v))
+      case sources.GreaterThanOrEqual(c, v) => ex.GreaterThanOrEqual(ref(c), value(c, v))
+      case sources.LessThan(c, v)           => ex.LessThan(ref(c), value(c, v))
+      case sources.LessThanOrEqual(c, v)    => ex.LessThanOrEqual(ref(c), value(c, v))
+      case sources.And(l, r)                => ex.And(expr(l), expr(r))
+      case sources.Or(l, r)                 => ex.Or(expr(l), expr(r))
+      case sources.Not(c)                   => ex.Not(expr(c))
+      case other => throw new IllegalArgumentException(s"no row form for $other")
+    }
+    filters.flatMap(f => scala.util.Try(expr(f)).toOption).reduceOption(ex.And(_, _))
+  }
+}
+
+/** Row `i` of this vector is row `sel(i)` of `base` — a column batch's
+  * live rows without copying them. The base's owner closes it. */
+private final class SelectedColumnVector(base: ColumnVector, sel: Array[Int])
+    extends ColumnVector(base.dataType()) {
+  private val children = scala.collection.mutable.Map.empty[Int, ColumnVector]
+  override def close(): Unit = ()
+  override def hasNull: Boolean = base.hasNull && numNulls > 0
+  override def numNulls: Int = sel.count(base.isNullAt)
+  override def isNullAt(i: Int): Boolean = base.isNullAt(sel(i))
+  override def getBoolean(i: Int): Boolean = base.getBoolean(sel(i))
+  override def getByte(i: Int): Byte = base.getByte(sel(i))
+  override def getShort(i: Int): Short = base.getShort(sel(i))
+  override def getInt(i: Int): Int = base.getInt(sel(i))
+  override def getLong(i: Int): Long = base.getLong(sel(i))
+  override def getFloat(i: Int): Float = base.getFloat(sel(i))
+  override def getDouble(i: Int): Double = base.getDouble(sel(i))
+  override def getArray(i: Int): ColumnarArray = base.getArray(sel(i))
+  override def getMap(i: Int): ColumnarMap = base.getMap(sel(i))
+  override def getDecimal(i: Int, precision: Int, scale: Int): org.apache.spark.sql.types.Decimal =
+    base.getDecimal(sel(i), precision, scale)
+  override def getUTF8String(i: Int): org.apache.spark.unsafe.types.UTF8String =
+    base.getUTF8String(sel(i))
+  override def getBinary(i: Int): Array[Byte] = base.getBinary(sel(i))
+  override def getChild(ordinal: Int): ColumnVector =
+    children.getOrElseUpdate(ordinal, new SelectedColumnVector(base.getChild(ordinal), sel))
 }

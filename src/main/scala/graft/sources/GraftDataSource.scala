@@ -23,8 +23,8 @@ import graft.cdc.CdcApplier.TargetMeta
 /** DataSource V2 connector serving graft CDC targets to plain SQL:
   * `spark.read.format("graft").load(targetDir)` (and, through
   * [[graft.catalog.Catalog.map]], any mapped `sparkTableName`). The engine's
-  * Scala read paths (`pointLookup`/`rangeLookup`/`snapshot`) already
-  * bucket-prune and resolve merge-on-read; this connector gives a SQL user
+  * Scala read paths (`snapshot`/`pointLookup`/`rangeLookup`, as-of and
+  * branch reads) are this connector plus a predicate, so a SQL user gets
   * the same properties without calling them:
   *
   *  - '''Filter pushdown''' ([[SupportsPushDownFilters]]): PK equality /
@@ -120,7 +120,8 @@ class GraftDataSource extends TableProvider with RelationProvider
     val path = GraftDataSource.pathOf(options)
     if (GraftDataSource.changesFromOf(options).isDefined)
       GraftTable.changesSchema(SparkSession.active, path)
-    else GraftTable.tableSchema(SparkSession.active, path)
+    else GraftTable.tableSchema(SparkSession.active, path,
+      GraftDataSource.branchOf(options))
   }
 
   override def getTable(
@@ -477,16 +478,21 @@ object GraftTable {
     * introspection, same surface as [[CdcApplier.snapshot]]); layout
     * columns (`_graft_deleted`, `graft_bucket`) are implementation detail.
     * Prefers the schema persisted in `.graft_meta` (no file listing);
-    * falls back to mergeSchema parquet inference for pre-upgrade targets. */
-  private[graft] def tableSchema(spark: SparkSession, targetDir: String): StructType = {
-    val target = new Path(targetDir)
+    * falls back to mergeSchema parquet inference for pre-upgrade targets.
+    * A branch read serves the branch dir's own meta, which
+    * [[graft.cdc.Branch.create]] copies from main and staged batches
+    * evolve; an unknown branch is refused. */
+  private[graft] def tableSchema(spark: SparkSession, targetDir: String,
+      branch: Option[String] = None): StructType = {
+    branch.foreach(graft.cdc.Branch.mainMeta(spark, targetDir, _))
+    val target = new Path(branch.fold(targetDir)(graft.cdc.Branch.branchDir(targetDir, _)))
     val hconf = spark.sparkContext.hadoopConfiguration
     val fs = target.getFileSystem(hconf)
     CdcApplier.openTarget(fs, target)
     val stored = TargetMeta.read(hconf, target).flatMap(_.schemaJson) match {
       case Some(j) => DataType.fromJson(j).asInstanceOf[StructType]
       case None if CdcApplier.bucketIds(fs, target).nonEmpty =>
-        spark.read.option("mergeSchema", true).parquet(targetDir).schema
+        spark.read.option("mergeSchema", true).parquet(target.toString).schema
       case None =>
         throw new IllegalStateException(s"no graft table state at $targetDir")
     }
@@ -727,15 +733,46 @@ object GraftScan {
 
   private val MaxTuples = 1024 // pruning is worth a bounded driver loop only
 
+  /** A set of candidate bucket-key tuples: a bounded value set per
+    * constrained bucket column, standing for their cross product. */
+  private type Box = Map[String, Set[Any]]
+
+  /** Boxes whose union covers every row `f` passes, or None when `f`
+    * bounds no bucket column. A disjunction concatenates its sides' boxes,
+    * so `(a=1 AND b=2) OR (a=3 AND b=4)` is exactly its two tuples. */
+  private def boxes(f: Filter, cols: Set[String]): Option[Seq[Box]] = f match {
+    case Or(l, r)  => for (a <- boxes(l, cols); b <- boxes(r, cols)) yield a ++ b
+    case And(l, r) => both(boxes(l, cols), boxes(r, cols))
+    case leaf => leaf.references match {
+      case Array(c) if cols(c) => valueSet(leaf, c).map(vs => Seq(Map(c -> vs.toSet)))
+      case _                   => None
+    }
+  }
+
+  /** A conjunction's boxes: each pair intersects per column. Two
+    * disjunctions whose pairs exceed MaxTuples keep the side with fewer
+    * boxes, which alone still covers the conjunction. */
+  private def both(l: Option[Seq[Box]], r: Option[Seq[Box]]): Option[Seq[Box]] =
+    (l, r) match {
+      case (Some(a), Some(b)) if a.size == 1 || b.size == 1 ||
+          a.size.toLong * b.size <= MaxTuples =>
+        Some(for (x <- a; y <- b) yield x ++ y.map { case (c, vs) =>
+          c -> x.get(c).fold(vs)(xs => if (xs.size <= vs.size) xs.filter(vs) else vs.filter(xs))
+        })
+      case (Some(a), Some(b)) => Some(if (a.size <= b.size) a else b)
+      case _                  => l.orElse(r)
+    }
+
   /** Bytes of the files directly under `dirs` (absent dirs count 0). */
   private[sources] def bytesUnder(fs: org.apache.hadoop.fs.FileSystem,
       dirs: Seq[Path]): Long =
     dirs.map(d => if (fs.exists(d)) fs.listStatus(d).map(_.getLen).sum else 0L).sum
 
   /** Map pushed conjuncts to the covered bucket ids, or `all` when the
-    * predicates don't bound the bucket key. Hash layouts need a bounded
-    * value set for EVERY bucket column (the cross product is the candidate
-    * tuple set, each hashed through the writer's own expression); range
+    * predicates don't bound the bucket key. Hash layouts need every
+    * candidate [[Box]] to bound EVERY bucket column, each box's cross
+    * product within MaxTuples; the boxes' tuples (however many
+    * disjuncts) are hashed through the writer's own expression; range
     * layouts turn interval endpoints into the covering contiguous bucket
     * range by pure driver arithmetic over the persisted split points.
     * Defensive: any evaluation surprise falls back to no pruning. */
@@ -775,15 +812,13 @@ object GraftScan {
           all.filter(covered.contains)
         }
       case None =>
-        // one bounded value set per bucket column (intersect repeats)
-        val sets = bucketCols.map { c =>
-          val found = pushed.flatMap(valueSet(_, c))
-          if (found.isEmpty) return all
-          found.reduce((a, b) => a.intersect(b))
-        }
-        if (sets.map(_.size.toLong).product > MaxTuples) return all
-        val tuples = sets.foldLeft(Seq(Seq.empty[Any]))((acc, s) =>
-          acc.flatMap(t => s.map(t :+ _)))
+        val cols = bucketCols.toSet
+        val bs = pushed.map(boxes(_, cols)).foldLeft(Option.empty[Seq[Box]])(both)
+          .getOrElse(return all)
+        if (bs.exists(b => !cols.subsetOf(b.keySet) ||
+            bucketCols.map(b(_).size.toLong).product > MaxTuples)) return all
+        val tuples = bs.flatMap(b => bucketCols.foldLeft(Seq(Seq.empty[Any]))((acc, c) =>
+          acc.flatMap(t => b(c).toSeq.map(t :+ _)))).distinct
         val litTuples = tuples.map(t =>
           bucketCols.zip(t).map { case (c, v) => typedLit(v, schema, c) })
         val ids = CdcApplier.bucketIdsOf(
@@ -892,6 +927,8 @@ object GraftAggScan {
       fs.listStatus(new Path(target, s"${CdcApplier.BUCKET}=$b"))
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
     }
+    val aggCols = agg.aggregateExpressions.toSeq
+      .flatMap(_.references().map(_.fieldNames.mkString("."))).distinct
     val aggKey = aggSchema.catalogString + "|" +
       (agg.groupByExpressions ++ agg.aggregateExpressions)
         .map(_.describe()).mkString(",")
@@ -907,6 +944,16 @@ object GraftAggScan {
         val rdr = ParquetFileReader.open(HadoopInputFile.fromStatus(st, hconf))
         try {
           val footer = rdr.getFooter
+          // the footer reader finds a column's chunk at its ordinal in the
+          // served schema: a file whose chunk there is another column (a
+          // file written before an additive evolution, a served column
+          // missing) would answer from the wrong statistics — refuse
+          val chunks = footer.getBlocks.asScala.headOption
+            .map(_.getColumns.asScala.map(_.getPath.toDotString).toIndexedSeq)
+            .getOrElse(IndexedSeq.empty)
+          if (chunks.nonEmpty &&
+              !aggCols.forall(c => chunks.lift(fullSchema.fieldIndex(c)).contains(c)))
+            return None
           val allLive = footer.getBlocks.asScala.forall { blk =>
             blk.getColumns.asScala.find(_.getPath.toDotString == CdcApplier.DEL)
               .exists { c =>

@@ -548,19 +548,21 @@ object StreamingPipeline {
       * a reader that lands between two of a batch's sequential publishes
       * sees the mismatch and retries instead of returning a torn view.
       *
-      * The pin is on FILE SIGNATURES, not positions: each snapshot's
-      * planned `inputFiles` must hash to the signature the marker recorded
-      * for its table. Position/marker checks alone are not airtight — two
-      * q115-hunted races get through them: (1) data swaps BEFORE the
-      * high-water file advances, so a reader can see table A's new data
-      * and table B's old under clean position checks; (2) Spark's
-      * session-global FileStatusCache can serve a reader a PRE-publish
-      * listing repopulated after the applier's refreshByPath. Equal
-      * signatures close both: parquet publishes mint fresh file names, so
-      * the signature uniquely identifies each table's data version, and a
-      * stale or mid-swap plan cannot match the marker's. Each attempt also
-      * refreshes the table paths first so a single reader converges
-      * without burning retries on its own cache.
+      * The pin is on FILE SIGNATURES, not positions: each table's live
+      * data files, listed straight from the filesystem
+      * ([[liveDataFiles]]), must hash to the signature the marker recorded
+      * for its table, and its snapshot is a live read ([[CdcApplier.liveRead]])
+      * of exactly those files — so the snapshot's `inputFiles` is that set,
+      * and a caller re-verifies it against the marker after materializing.
+      * Position/marker checks alone are not airtight — two q115-hunted
+      * races get through them: (1) data swaps BEFORE the high-water file
+      * advances, so a reader can see table A's new data and table B's old
+      * under clean position checks; (2) Spark's session-global
+      * FileStatusCache can serve a PRE-publish listing repopulated after
+      * the applier's refreshByPath. Equal signatures over a direct listing
+      * close both: parquet publishes mint fresh file names, so the
+      * signature uniquely identifies each table's data version, and a
+      * mid-swap listing cannot match the marker's.
       *
       * Returns (batchId, table -> snapshot); tables with no published
       * state yet (no batch, or filtered-only traffic) are ABSENT from the
@@ -597,21 +599,24 @@ object StreamingPipeline {
             // all-or-none read; persistent corruption still propagates
             // once the retry budget is exhausted.
             scala.util.Try {
+              // each table's live file set, listed straight from the
+              // filesystem, must hash to the marker's recorded signature
+              // (a never-published table is the empty set — consistently
+              // absent, and still signature-checked); the snapshot then
+              // reads exactly those files
+              val files = tables.map { case (t, dir) =>
+                CdcApplier.openTarget(new Path(dir).getFileSystem(conf), new Path(dir))
+                t -> liveDataFiles(spark, dir)
+              }
+              val filesPinned = tables.forall { case (t, _) =>
+                positions.get(t).forall { case (_, expected) => fileSig(files(t)) == expected }
+              }
               val snaps = tables.flatMap { case (t, dir) =>
                 // drop any stale shared file-listing before planning
                 spark.catalog.refreshByPath(dir)
-                CdcApplier.snapshotIfBootstrapped(spark, dir).map(t -> _)
-              }
-              // each snapshot's planned file set must hash to the marker's
-              // recorded signature (a never-published table is the empty
-              // set — consistently absent, and still signature-checked)
-              val filesPinned = tables.forall { case (t, dir) =>
-                val sig = fileSig(snaps.get(t) match {
-                  case Some(df) =>
-                    df.inputFiles.map(f => new Path(f).toUri.getPath).toSet
-                  case None => Set.empty[String]
-                })
-                positions.get(t).forall { case (_, expected) => sig == expected }
+                val meta = CdcApplier.TargetMeta.read(conf, new Path(dir))
+                if (files(t).isEmpty && !meta.exists(_.schemaJson.isDefined)) None
+                else Some(t -> CdcApplier.liveRead(spark, meta, dir, files(t).toSeq.sorted))
               }
               val pinned = filesPinned && tables.forall { case (t, dir) =>
                 readHighWater(spark, dir).getOrElse(Long.MinValue) ==

@@ -20,6 +20,12 @@ class CdcApplierSpec extends AnyFunSuite {
 
   import spark.implicits._
 
+  /** `buckets=k/n` of the plan's connector scan with k < n: the read
+    * touched a strict subset of the table's bucket directories. */
+  private def strictlyPruned(p: String): Boolean =
+    """GraftBatchScan \S+ runtime-filterable buckets=(\d+)/(\d+)""".r.findFirstMatchIn(p)
+      .exists(m => m.group(1).toInt < m.group(2).toInt)
+
   private val pk = Seq("sn", "id")
   private def opts = CdcApplier.Options(pk)
 
@@ -356,10 +362,7 @@ class CdcApplierSpec extends AnyFunSuite {
     // ...and is bucket-pruned + row-group-pruned on the prefix column
     val p = scan.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    // one lookup key → the literal bucket predicate may render as IN or =
-    assert(p.linesIterator.exists(l =>
-        l.contains("PartitionFilters") && l.contains("graft_bucket")),
-      s"prefix lookup must prune bucket dirs:\n$p")
+    assert(strictlyPruned(p), s"prefix lookup must prune bucket dirs:\n$p")
     assert(p.linesIterator.exists(l => l.contains("PushedFilters") &&
         (l.contains("In(sn") || l.contains("EqualTo(sn"))),
       s"prefix column literal filter must reach PushedFilters:\n$p")
@@ -819,8 +822,7 @@ class CdcApplierSpec extends AnyFunSuite {
     val scan = CdcApplier.rangeLookup(spark, target, 15L, 25L)
     val p = scan.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(p.linesIterator.exists(l =>
-        l.contains("PartitionFilters") && l.contains("graft_bucket")), p)
+    assert(strictlyPruned(p), p)
     assert(p.linesIterator.exists(l => l.contains("PushedFilters") &&
         l.contains("GreaterThanOrEqual(sn") && l.contains("LessThanOrEqual(sn")), p)
     assert(scan.drop("_graft_pos").as[Student].collect().toSet ==
@@ -1055,10 +1057,16 @@ class CdcApplierSpec extends AnyFunSuite {
     val keys = Seq((1, 1)).toDF("sn", "id")
     val got = CdcApplier.pointLookup(spark, target, keys)
     assert(got.drop("_graft_pos").as[Student].collect().toSet == Set(s1v2))
-    // the scan prunes on the re-hashed bucket (single key → the IN-list
-    // collapses to an equality literal)
-    val scans = got.queryExecution.executedPlan.toString
-    assert(scans.contains("PartitionFilters: [isnotnull(graft_bucket"), scans)
+    // the scan reads exactly the key's re-hashed bucket
+    got.collect()
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(got.queryExecution.executedPlan) {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.scan.asInstanceOf[graft.sources.GraftBatchScan]
+      }
+    assert(scans.size == 1, got.queryExecution.executedPlan.toString)
+    assert(scans.head.lastPlannedBuckets ==
+      CdcApplier.bucketIdsOf(spark, Seq(Seq(lit(1), lit(1))), 3, None))
     // no-op and guard paths
     assert(CdcApplier.rebucket(spark, target, 3) == 0)
     intercept[IllegalArgumentException](CdcApplier.rebucket(spark, target, 0))

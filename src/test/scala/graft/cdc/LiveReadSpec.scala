@@ -3,6 +3,7 @@ package graft.cdc
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -10,10 +11,10 @@ import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The one live read ([[CdcApplier.liveRead]] / [[Branch.lineage]]): the
-  * latest-per-key resolve engages exactly on version-bearing layouts, on
-  * every serving path, and the branch lineage feeds fast-forward's index
-  * maintenance. */
+/** The one read: every Scala read entry point is the connector's scan plus
+  * a predicate, resolving latest-per-key inside each bucket's reader
+  * exactly on version-bearing layouts, and the branch lineage feeds
+  * fast-forward's index maintenance. */
 class LiveReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -30,10 +31,23 @@ class LiveReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private def rows(n: Int): DataFrame =
     spark.range(1, n + 1).select($"id".as("k"), ($"id" % 7).as("v"))
 
-  private def windowed(df: DataFrame): Boolean = {
-    df.collect()
-    collect(df.queryExecution.executedPlan) { case w: WindowExec => w }.nonEmpty
+  /** Execute `df` and return the keys it served and its one scan: the
+    * executed plan holds exactly one `GraftBatchScan` leaf, no file scan,
+    * no window and no exchange. */
+  private def served(df: DataFrame, what: String): (Set[Long], BatchScanExec) = {
+    val got = df.collect().map(_.getAs[Long]("k")).toSet
+    val plan = df.queryExecution.executedPlan
+    val scans = collect(plan) { case b: BatchScanExec => b }
+    assert(scans.size == 1 && scans.head.scan.isInstanceOf[graft.sources.GraftBatchScan],
+      s"$what: $plan")
+    assert(collect(plan) { case f: FileSourceScanExec => f }.isEmpty, s"$what: $plan")
+    assert(collect(plan) { case w: WindowExec => w }.isEmpty, s"$what: $plan")
+    assert(collect(plan) { case e: Exchange => e }.isEmpty, s"$what: $plan")
+    (got, scans.head)
   }
+
+  private def resolves(scan: BatchScanExec): Boolean =
+    scan.readerFactory.asInstanceOf[graft.sources.GraftResolvingReaderFactory].resolve
 
   test("the resolve runs on mor and deletion-vector layouts only, on every read path") {
     val opts = CdcApplier.Options(Seq("k"), rangeBounds = Some(Seq(10L, 20L, 30L)))
@@ -46,17 +60,33 @@ class LiveReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     CdcApplier.applyBatchDv(spark,
       ChangeFeed.deletes(rows(40).filter($"k" === 15L), lit(1000L)), dv, opts)
 
-    def reads(t: String): Seq[(String, DataFrame)] = Seq(
-      "snapshot" -> CdcApplier.snapshot(spark, t),
-      "pointLookup" -> CdcApplier.pointLookup(spark, t, Seq(3L, 15L).toDF("k")),
-      "rangeLookup" -> CdcApplier.rangeLookup(spark, t, 5L, 25L))
-    for ((name, df) <- reads(cow))
-      assert(!windowed(df), s"plain copy-on-write $name must not resolve")
-    for ((layout, t) <- Seq("mor" -> mor, "dv" -> dv); (name, df) <- reads(t))
-      assert(windowed(df), s"$layout $name must resolve latest-per-key")
-    // and the resolve masks the deleted key on every dv path
-    for ((name, df) <- reads(dv))
-      assert(df.filter($"k" === 15L).isEmpty, s"dv $name serves a masked row")
+    // the Scala read API: one connector scan per read, resolving inside
+    // each bucket's reader exactly on mor and dv; the lookups read a strict
+    // bucket subset; the dv-masked key is absent on every path
+    def reads(t: String): Seq[(String, DataFrame, Option[String])] = Seq(
+      ("snapshot", CdcApplier.snapshot(spark, t), None),
+      ("pointLookup", CdcApplier.pointLookup(spark, t, Seq(3L, 15L).toDF("k")),
+        Some("buckets=2/4")),
+      ("rangeLookup", CdcApplier.rangeLookup(spark, t, 2L, 25L), Some("buckets=3/4")))
+    for ((layout, t) <- Seq("cow" -> cow, "mor" -> mor, "dv" -> dv);
+         (name, df, pruned) <- reads(t)) {
+      val (got, scan) = served(df, s"$layout $name")
+      assert(resolves(scan) == (layout != "cow"), s"$layout $name resolves per bucket")
+      pruned.foreach(b => assert(scan.toString.contains(b), s"$layout $name: $scan"))
+      assert(got.contains(3L) && got.contains(15L) == (layout != "dv"), s"$layout $name: $got")
+    }
+    // the history reads resolve too: as-of and the branch lineage
+    val (asOf, asOfScan) = served(CdcApplier.snapshotAsOf(spark, mor, 400L), "snapshotAsOf")
+    assert(resolves(asOfScan) && asOf == (1L to 40L).toSet, asOf.toString)
+    Branch.create(spark, mor, "b")
+    Branch.applyBatch(spark, mor, "b",
+      ChangeFeed.deletes(rows(40).filter($"k" === 3L), lit(900L)))
+    val (branch, branchScan) = served(Branch.snapshot(spark, mor, "b"), "Branch.snapshot")
+    assert(resolves(branchScan) && branch == (1L to 40L).toSet - 3L, branch.toString)
+    val (probe, probeScan) = served(
+      Branch.pointLookup(spark, mor, "b", Seq(3L, 15L).toDF("k")), "Branch.pointLookup")
+    assert(resolves(probeScan) && probe == Set(15L), probe.toString)
+    assert(probeScan.toString.contains("buckets=2/4"), probeScan.toString)
 
     // the connector's pruned read resolves inside each bucket's reader: no
     // window and no exchange on any layout, the resolve on mor and dv only

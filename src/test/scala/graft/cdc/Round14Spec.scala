@@ -218,7 +218,7 @@ class Round14Spec extends AnyFunSuite {
       "routed and unrouted answers must be identical")
   }
 
-  test("indexroute: two-hop routes run at execution and prune store buckets (V1 leg)") {
+  test("indexroute: two-hop routes run at execution, prune store buckets (snapshot)") {
     val base = Files.createTempDirectory("graft_r14").toString
     val (store, index) = (base + "/store", base + "/index")
     // `w` lives only on the store, so projecting it forces the two-hop route
@@ -286,8 +286,8 @@ class Round14Spec extends AnyFunSuite {
       .select($"a", $"b").collect())
     assert(rows.map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq == Seq((1L, 0L), (2L, 1L)),
       "the lookup must match the key tuples exactly")
-    // the keys' broadcast and the scan: no key-frame collects or bucket probes
-    assert(jobs == 2, s"one broadcast and one scan job: $jobs")
+    // the scan alone: no key-frame collects, bucket probes or broadcast
+    assert(jobs == 1, s"one scan job: $jobs")
   }
 
   test("Branch.pointLookup: a local key frame maps to buckets with no job") {
@@ -299,13 +299,13 @@ class Round14Spec extends AnyFunSuite {
       ChangeFeed.updates(rows(40).filter($"k" === 3), Map("v" -> lit(9.0)), lit(200L)))
     val keys = Seq(3L, 7L, 3L).toDF("k")
     val (df, planJobs) = jobsDuring(Branch.pointLookup(spark, t, "aud", keys))
-    // one job: the branch side's mergeSchema inference over its delta
-    // files; the bucket ids come from the collected keys (no distinct job)
-    assert(planJobs == 1, s"no bucket-id job while planning: $planJobs jobs")
+    // no job: the branch serves its own meta's schema (no inference) and
+    // the bucket ids come from the collected keys (no distinct job)
+    assert(planJobs == 0, s"no job while planning: $planJobs jobs")
     val (got, jobs) = jobsDuring(df.select($"k", $"v").as[(Long, Double)].collect())
     // the branch's staged value wins for k=3; k=7 serves main's row
     assert(got.toSeq.sorted == Seq((3L, 9.0), (7L, 14.0)), got.toSeq)
-    assert(jobs == 3, s"the lookup's execution: $jobs jobs")
+    assert(jobs == 1, s"the lookup's execution: $jobs jobs")
   }
 
   // ---- state-preserving publish: atomic theft refusal (ADVICE r13) -------
