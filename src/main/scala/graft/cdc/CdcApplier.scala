@@ -646,6 +646,15 @@ object CdcApplier {
       org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType]
         .fields.map(_.copy(nullable = true))))
 
+  /** What a stored table's data files hold: the persisted schema, else
+    * (pre-upgrade) the files' merged footers, without the bucket column
+    * (the directory, never in the files), read as fully nullable. */
+  private[graft] def storedFileSchema(
+      spark: SparkSession, meta: Option[TargetMeta], dir: String): StructType =
+    StructType(storedSchema(meta)
+      .getOrElse(spark.read.option("mergeSchema", true).parquet(dir).schema)
+      .fields.filterNot(_.name == BUCKET).map(_.copy(nullable = true)))
+
   /** Stored-table read against the persisted schema
     * (`.graft_meta.schemaJson`, which creation, additive evolution,
     * widening and MOR appends keep current), so no read plans a footer
@@ -675,16 +684,14 @@ object CdcApplier {
     else readStored(spark, meta, paths, if (paths == Seq(dir)) None else Some(dir))
 
   /** The live rows of an EXPLICIT path set ([[storedSlice]] resolved by
-    * [[live]]) as a V1 parquet read: the epoch pin's exact file set, the
-    * coercing sink's touched buckets, the index seed's bucket slice, and
+    * [[live]]) as a V1 parquet read: the epoch pin's exact file set and
     * the subtrees optimizer rules splice into a plan after V2 pushdown has
     * run. Every other read of a table goes through the connector's one
-    * scan ([[connectorRead]]). */
+    * scan ([[connectorRead]], [[storedVersions]]). */
   private[graft] def liveRead(
       spark: SparkSession, meta: Option[TargetMeta], targetDir: String,
-      paths: Seq[String], below: DataFrame => DataFrame = identity,
-      keepBucket: Boolean = false): DataFrame =
-    live(storedSlice(spark, meta, targetDir, paths), meta, below, keepBucket)
+      paths: Seq[String], below: DataFrame => DataFrame = identity): DataFrame =
+    live(storedSlice(spark, meta, targetDir, paths), meta, below)
 
   /** [[liveRead]] of a whole table directory, after [[openTarget]]: the
     * read an optimizer rule splices in after V2 pushdown has run, where an
@@ -720,24 +727,57 @@ object CdcApplier {
 
   /** Stored versions → live rows: logicalize (so `below` and the result
     * speak LOGICAL names), apply `below`, resolve latest-per-key when the
-    * layout holds versions ([[needsResolve]]), drop tombstones and
-    * `_graft_deleted`. `_graft_pos` stays; `graft_bucket` stays only with
-    * `keepBucket`. `below` must not change a key's latest version — on a
-    * version-bearing layout only PK-referencing filters qualify (a key's
-    * versions agree on its PK). Key columns never rename, so the physical
-    * PK partitions the resolve. */
+    * layout holds versions ([[needsResolve]]), drop tombstones,
+    * `_graft_deleted` and `graft_bucket`. `_graft_pos` stays. `below` must
+    * not change a key's latest version — on a version-bearing layout only
+    * PK-referencing filters qualify (a key's versions agree on its PK).
+    * Key columns never rename, so the physical PK partitions the resolve:
+    * a window where the newest `_graft_pos` wins (replay duplicates are
+    * value-identical, so the row_number tie is harmless). Only the epoch
+    * pin, the index route's two sides and [[liveDir]] resolve here; every
+    * other read resolves inside [[graft.sources.GraftBatchScan]]'s reader. */
   private[graft] def live(versions: DataFrame, meta: Option[TargetMeta],
-      below: DataFrame => DataFrame = identity,
-      keepBucket: Boolean = false): DataFrame = {
+      below: DataFrame => DataFrame = identity): DataFrame = {
     val filtered = below(logicalize(versions, meta))
     val resolved =
-      if (needsResolve(meta))
-        resolveOnRead(filtered, meta.flatMap(_.pkCols).getOrElse(
-          throw new IllegalStateException("version-bearing layout has no persisted PK")))
-      else filtered
-    val rows = resolved.filter(!col(DEL))
-    if (keepBucket) rows.drop(DEL) else rows.drop(DEL, BUCKET)
+      if (needsResolve(meta)) {
+        val pk = meta.flatMap(_.pkCols).getOrElse(
+          throw new IllegalStateException("version-bearing layout has no persisted PK"))
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(pk.map(col): _*).orderBy(col(POS).desc)
+        filtered.withColumn("_graft_rn", row_number().over(w))
+          .filter(col("_graft_rn") === 1).drop("_graft_rn")
+      } else filtered
+    resolved.filter(!col(DEL)).drop(DEL, BUCKET)
   }
+
+  /** The applier's read of its own stored versions: one
+    * [[graft.sources.GraftBatchScan]] in its applier mode, framed so the
+    * plan shows the scan. The STORED frame — every stored column under its
+    * physical name (dropped ones too), `_graft_pos`, `_graft_deleted` with
+    * tombstones kept, `graft_bucket` — resolved latest-per-key inside each
+    * bucket's reader when the layout holds versions, when `cut` applies
+    * (rows at or below it; no history guard — the caller checks its own
+    * floors), or on the caller's on-disk `dv-` evidence. `buckets` bounds
+    * the read; None reads every bucket. */
+  private[graft] def storedVersions(spark: SparkSession, targetDir: String,
+      buckets: Option[Seq[Int]] = None, cut: Option[Long] = None,
+      dvEvidence: Boolean = false): DataFrame = {
+    val scan = new graft.sources.GraftBatchScan(spark, targetDir, new StructType(),
+      new StructType(), Array.empty, asOf = cut, buckets = buckets,
+      applier = true, dvEvidence = dvEvidence)
+    org.apache.spark.sql.graft.ParquetReadShim.scanFrame(spark,
+      new graft.sources.GraftTable(targetDir, scan.readSchema()), scan)
+  }
+
+  /** The live form of a [[storedVersions]] bucket-set read, for the
+    * coercing sink's replicated buckets and the index seed's slice:
+    * tombstones drop, columns take their LOGICAL names; `_graft_pos` and
+    * `graft_bucket` stay. */
+  private[graft] def liveBuckets(
+      spark: SparkSession, targetDir: String, buckets: Seq[Int]): DataFrame =
+    logicalize(storedVersions(spark, targetDir, Some(buckets)).filter(!col(DEL)).drop(DEL),
+      TargetMeta.read(spark.sparkContext.hadoopConfiguration, new Path(targetDir)))
 
   /** Read the live table state: tombstones filtered, layout columns dropped
     * (`_graft_pos` retained for offset introspection). A target whose every
@@ -971,19 +1011,6 @@ object CdcApplier {
       FileStats.appendSidecars(fs, files.groupBy(_.getParent)))
   }
 
-  /** Latest-per-key resolution for merge-on-read layouts: within each PK,
-    * the newest `_graft_pos` wins. Replayed batches append value-identical
-    * (key, pos) duplicates; any of them is the same winner, so the
-    * row_number tie is harmless. The window form, for the applier's own
-    * raw-version reads and the explicit-path [[live]] reads; the serving
-    * reads resolve per bucket inside the connector's reader. */
-  private[graft] def resolveOnRead(df: DataFrame, pkCols: Seq[String]): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(pkCols.map(col): _*).orderBy(col(POS).desc)
-    df.withColumn("_graft_rn", row_number().over(w))
-      .filter(col("_graft_rn") === 1).drop("_graft_rn")
-  }
-
   /** `true` iff this layout's buckets can hold MORE THAN ONE version of a
     * key, so every reader must resolve latest-per-key: merge-on-read delta
     * chains, and copy-on-write layouts with outstanding deletion vectors
@@ -1010,8 +1037,8 @@ object CdcApplier {
     *
     * Crash safety: deltas land in a tmp dir, then move file-by-file
     * (atomic renames) into the live bucket dirs. A crash mid-move followed
-    * by a replay re-appends value-identical (key, pos) rows, which
-    * [[resolveOnRead]] collapses — convergence holds. */
+    * by a replay re-appends value-identical (key, pos) rows, which every
+    * reader's latest-per-key resolve collapses — convergence holds. */
   def applyBatchMor(
       spark: SparkSession, changes: DataFrame, targetDir: String, opts: Options): Seq[Int] =
     withCommitTicketRecorded(spark, targetDir, (r: Seq[Int]) => Some(r))(
@@ -1539,12 +1566,11 @@ object CdcApplier {
       else {
         val pkCols = meta.pkCols.getOrElse(
           throw new IllegalStateException(s"mor layout at $targetDir has no persisted PK"))
-        val raw = readStored(spark, Some(meta), Seq(targetDir))
-        val dataCols = raw.columns.filterNot(c =>
+        val cur = storedVersions(spark, targetDir).as("c")
+        val asof = storedVersions(spark, targetDir, cut = Some(pos)).as("a")
+        val dataCols = cur.columns.filterNot(c =>
           c == POS || c == DEL || c == BUCKET).toSeq
         def img(side: String) = struct(dataCols.map(c => col(s"$side.$c").as(c)): _*)
-        val asof = resolveOnRead(raw.filter(col(POS) <= pos), pkCols).as("a")
-        val cur = resolveOnRead(raw, pkCols).as("c")
         val joinCond = pkCols.map(k => col(s"a.$k") <=> col(s"c.$k")).reduce(_ && _)
         val aLive = col(s"a.$DEL").isNotNull && !col(s"a.$DEL")
         val cLive = col(s"c.$DEL").isNotNull && !col(s"c.$DEL")
@@ -1725,18 +1751,22 @@ object CdcApplier {
       throw new IllegalStateException(s"mor layout at $targetDir has no persisted PK"))
     val buckets = bucketIds(fs, target)
     if (buckets.isEmpty) return Seq.empty
-    val raw = readStored(spark, Some(meta), Seq(targetDir))
-    // the as-of floor: every position at or below this loses its history
-    val maxPos = raw.agg(max(col(POS))).collect()(0).getLong(0)
-    // tags pin history (q256): refuse rather than strand a named ref
-    requireTagsAnswerable(meta, maxPos, "compactMor")
-    // q276: the compacted image is ONE version per key — write each bucket
-    // sorted (the same one-task-per-bucket bound as every per-bucket path)
-    // so the post-compaction table can report ordering and serve
-    // resolve-free streaming reads until the next delta lands
+    // q276: the compacted image is ONE version per key (each key's newest,
+    // tombstones kept, resolved per bucket) — write each bucket sorted (the
+    // same one-task-per-bucket bound as every per-bucket path) so the
+    // post-compaction table can report ordering and serve resolve-free
+    // streaming reads until the next delta lands
     val sortCols = sortColsOf(meta.bucketCols.getOrElse(pkCols), pkCols)
-    val tmp = stage(resolveOnRead(raw, pkCols), stagingDir(target, Staging.Apply),
+    val tmp = stage(storedVersions(spark, targetDir), stagingDir(target, Staging.Apply),
       Some(sortCols), buckets)
+    // the as-of floor: every position at or below this loses its history.
+    // With tombstones kept, the newest versions' max position is the raw
+    // max; it is read back from the staged image's position column.
+    val maxPos = spark.read.schema(new StructType().add(POS, LongType))
+      .parquet(tmp.toString).agg(max(col(POS))).collect()(0).getLong(0)
+    // tags pin history (q256): refuse rather than strand a named ref
+    try requireTagsAnswerable(meta, maxPos, "compactMor")
+    catch { case e: IllegalStateException => fs.delete(tmp, true); throw e }
     // Floor BEFORE the bucket publish: a crash in between leaves intact
     // history with a floor that refuses as-of reads of it — safe-
     // conservative. The reverse order would leave collapsed data with a
@@ -1784,8 +1814,8 @@ object CdcApplier {
       throw new IllegalStateException(s"no graft table state at $targetDir"))
     if (!meta.storage.contains("mor"))
       throw new IllegalStateException(s"$targetDir is not a mor layout")
-    val pkCols = meta.pkCols.getOrElse(
-      throw new IllegalStateException(s"mor layout at $targetDir has no persisted PK"))
+    if (meta.pkCols.isEmpty)
+      throw new IllegalStateException(s"mor layout at $targetDir has no persisted PK")
     val buckets = bucketIds(fs, target)
     if (buckets.isEmpty) return Seq.empty
     val raw = readStored(spark, Some(meta), Seq(targetDir))
@@ -1795,7 +1825,9 @@ object CdcApplier {
     val oldMax = oldMaxRow.getLong(0)
     // tags pin history (q256): refuse rather than strand a named ref
     requireTagsAnswerable(meta, oldMax, "vacuumMor")
-    val merged = resolveOnRead(old, pkCols)
+    // the collapsed part: each key's newest version below the window,
+    // resolved per bucket (retainFromPos > oldMax, so the cut cannot wrap)
+    val merged = storedVersions(spark, targetDir, cut = Some(retainFromPos - 1))
       .unionByName(raw.filter(col(POS) >= retainFromPos))
     val tmp = stage(merged, stagingDir(target, Staging.Apply))
     // floor before publish — same crash-ordering rule as [[compactMor]].
@@ -1946,11 +1978,12 @@ object CdcApplier {
         recoverBuckets(fs, target)
         fs.listStatus(target).exists(_.getPath.getName.startsWith(s"$BUCKET="))
       }
+      // the stored frame's schema ([[storedVersions]] serves it)
       val stored =
-        if (hasState) Some(readStored(spark, meta, Seq(targetDir)))
+        if (hasState) Some(storedFileSchema(spark, meta, targetDir).add(BUCKET, IntegerType))
         else None
       stored.foreach(s =>
-        checkSchemaDrift(s.schema, resolved.schema, opts.pkCols, allowWidening = true,
+        checkSchemaDrift(s, resolved.schema, opts.pkCols, allowWidening = true,
           dropped = meta.flatMap(_.drops).getOrElse(Seq.empty).toSet))
 
       // Additive evolution (S4): new non-key incoming columns surface as
@@ -1958,7 +1991,7 @@ object CdcApplier {
       // are rewritten in that (rare, DDL-driven) batch — a partial rewrite
       // would leave mixed per-bucket schemas.
       val newFields = stored.toSeq.flatMap { s =>
-        val have = s.columns.toSet
+        val have = s.fieldNames.toSet
         resolved.schema.fields.filterNot(f => have(f.name) || f.name == KIND)
       }
       // Type-widening evolution (S4/q253, the other lossless DDL): a
@@ -1968,7 +2001,7 @@ object CdcApplier {
       // The REVERSE mismatch (incoming narrower than stored — an
       // old-schema batch replayed after the widen) upcasts the batch
       // instead: replay convergence must survive a widen.
-      val storedTypes = stored.map(_.schema.fields.map(f => f.name -> f.dataType).toMap)
+      val storedTypes = stored.map(_.fields.map(f => f.name -> f.dataType).toMap)
         .getOrElse(Map.empty)
       val widened = resolved.schema.fields.filter(f =>
         storedTypes.get(f.name).exists(t =>
@@ -1982,10 +2015,27 @@ object CdcApplier {
         if (newFields.nonEmpty || widened.nonEmpty)
           (bucketIds(fs, target) ++ touched).distinct.sorted
         else touched.toIndexedSeq
+      // q275: outstanding deletion vectors make `current` multi-version
+      // (masked row + its tombstone) — the merge's full-outer join assumes
+      // one row per key, so the scan resolves; the rewrite FOLDS the
+      // touched buckets' vectors in passing. The gate is the meta `dv` flag
+      // OR on-disk evidence: applyBatchDv publishes its tombstone renames
+      // strictly BEFORE the flag (the stale-LOW discipline), so in that
+      // documented crash window dv-* files are visible with the flag
+      // absent — trusting the flag alone would feed merge a
+      // two-rows-per-key `current` and duplicate rows into the rewrite.
+      // Cost of the evidence check: one driver-side listing per rewritten
+      // bucket, dwarfed by the rewrite itself.
+      val dvOnDisk = meta.exists(_.dv.exists(_ > 0)) ||
+        (meta.isDefined && rewrite.exists { b =>
+          val d = new Path(target, s"$BUCKET=$b")
+          fs.exists(d) &&
+            fs.listStatus(d).exists(_.getPath.getName.startsWith("dv-"))
+        })
       val current = stored match {
-        case Some(s) =>
+        case Some(_) =>
           val base = widened.foldLeft(
-            s.filter(col(BUCKET).isin(rewrite.map(Int.box): _*)))(
+            storedVersions(spark, targetDir, Some(rewrite), dvEvidence = dvOnDisk))(
             (df, f) => df.withColumn(f.name, col(f.name).cast(f.dataType)))
           newFields.foldLeft(base)(
             (df, f) => df.withColumn(f.name, lit(null).cast(f.dataType)))
@@ -2002,27 +2052,7 @@ object CdcApplier {
             java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
       }
 
-      // q275: outstanding deletion vectors make `current` multi-version
-      // (masked row + its tombstone) — the merge's full-outer join assumes
-      // one row per key, so resolve first; the rewrite FOLDS the touched
-      // buckets' vectors in passing. The gate is the meta `dv` flag OR
-      // on-disk evidence: applyBatchDv publishes its tombstone renames
-      // strictly BEFORE the flag (the stale-LOW discipline), so in that
-      // documented crash window dv-* files are visible with the flag
-      // absent — trusting the flag alone would feed merge a
-      // two-rows-per-key `current` and duplicate rows into the rewrite.
-      // Cost of the evidence check: one driver-side listing per rewritten
-      // bucket, dwarfed by the rewrite itself.
-      val dvOnDisk = meta.exists(_.dv.exists(_ > 0)) ||
-        (meta.isDefined && rewrite.exists { b =>
-          val d = new Path(target, s"$BUCKET=$b")
-          fs.exists(d) &&
-            fs.listStatus(d).exists(_.getPath.getName.startsWith("dv-"))
-        })
-      val currentFolded =
-        if (dvOnDisk) resolveOnRead(current, pkOrder)
-        else current
-      val merged = merge(currentFolded, resolvedWide, opts)
+      val merged = merge(current, resolvedWide, opts)
       // q262: a fresh layout (and any evolution, which rewrites EVERY
       // bucket) publishes its buckets sorted and records that in meta; an
       // existing sorted layout is maintained (every rewrite path here
@@ -2141,13 +2171,9 @@ object CdcApplier {
       return Seq.empty
     }
 
-    val selected = all.filter(col(BUCKET).isin(touched.map(Int.box): _*))
-    val resolved =
-      if (dvOutstanding)
-        resolveOnRead(selected, metaNow.pkCols.getOrElse(
-          throw new IllegalStateException(
-            s"dv-bearing layout at $targetDir has no persisted PK")))
-      else selected
+    // the touched buckets' newest versions: the scan resolves (folding the
+    // vectors) whenever the layout holds versions
+    val resolved = storedVersions(spark, targetDir, Some(touched))
     // q262: maintain the layout's recorded file order through the rewrite
     val tmp = stage(resolved.filter(!compactable), stagingDir(target, Staging.Compact),
       metaNow.sorted, touched)

@@ -63,7 +63,7 @@ object CoercingSink {
     * activation over an existing primary) is backfilled in full. */
   def replicateBuckets(
       spark: SparkSession, targetDir: String, secondaryDir: String, buckets: Seq[Int]): Unit = {
-    import CdcApplier.{BUCKET, POS}
+    import CdcApplier.POS
     val hconf = spark.sparkContext.hadoopConfiguration
     val secondary = new Path(secondaryDir)
     val fs = secondary.getFileSystem(hconf)
@@ -78,10 +78,7 @@ object CoercingSink {
     // the primary's live rows (version-bearing layouts resolved, so the
     // replica never carries superseded images or masked rows), bucket kept
     // for the replica's layout
-    val touched = CdcApplier.liveRead(spark,
-      CdcApplier.TargetMeta.read(hconf, new Path(targetDir)), targetDir, Seq(targetDir),
-      below = _.filter(col(BUCKET).isin(effective.map(Int.box).toIndexedSeq: _*)),
-      keepBucket = true).drop(POS)
+    val touched = CdcApplier.liveBuckets(spark, targetDir, effective).drop(POS)
     val tmp = CdcApplier.stage(coerce(touched),
       CdcApplier.stagingDir(secondary, CdcApplier.Staging.Apply))
     CdcApplier.publishBuckets(fs, secondary, tmp, effective)

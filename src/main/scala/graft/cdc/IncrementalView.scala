@@ -544,7 +544,12 @@ object IncrementalView {
       count(when(col("table") === dimTable, 1)).as("nd"),
       max(col("next_position")).as("mx")).collect()(0)
     val (nFact, nDim) = (probe.getLong(0), probe.getLong(1))
-    if (nFact == 0 && nDim == 0) return
+    // a batch of only other tables' rows changes nothing here, but its
+    // positions are consumed: the watermark still advances past them
+    if (nFact == 0 && nDim == 0) {
+      if (!probe.isNullAt(2)) advanceJoinViewPosition(spark, viewDir, probe.getLong(2))
+      return
+    }
     def parse(table: String, schema: org.apache.spark.sql.types.StructType) =
       batch.filter(col("table") === table)
         .select(col("op"), col("next_position"),
@@ -567,14 +572,32 @@ object IncrementalView {
     val hconf = spark.sparkContext.hadoopConfiguration
     def bootstrapped(d: String) =
       CdcApplier.bucketIds(new Path(d).getFileSystem(hconf), new Path(d)).nonEmpty
-    if (!bootstrapped(factDir) || !bootstrapped(dimDir)) return
     // view position: the batch's max envelope position — non-decreasing
     // across batches by the feed contract, stable across replays (already
     // computed by the fused probe above)
     val pos = probe.getLong(2)
-    maintainJoinView(spark, factDir, dimDir, viewDir, pos,
-      keysOf(fb, factKey), keysOf(db, dimKey), factKey, joinCol, dimKey)
+    if (bootstrapped(factDir) && bootstrapped(dimDir))
+      maintainJoinView(spark, factDir, dimDir, viewDir, pos,
+        keysOf(fb, factKey), keysOf(db, dimKey), factKey, joinCol, dimKey)
+    advanceJoinViewPosition(spark, viewDir, pos)
   }
+
+  private def joinViewPositionPath(viewDir: String) = new Path(viewDir, ".graft_view_pos")
+
+  /** The highest envelope `next_position` a join view's micro-batches
+    * have been applied through ([[applyJoinViewBatch]], written after
+    * each batch — also one holding only other tables' rows). None before
+    * the first batch. */
+  def joinViewPosition(spark: SparkSession, viewDir: String): Option[Long] =
+    AtomicFile.read(spark.sparkContext.hadoopConfiguration, joinViewPositionPath(viewDir))
+      .map(_.trim.toLong)
+
+  /** Raise the join view's watermark to `pos`; a replayed older batch
+    * never lowers it. */
+  private def advanceJoinViewPosition(spark: SparkSession, viewDir: String, pos: Long): Unit =
+    if (joinViewPosition(spark, viewDir).forall(_ < pos))
+      AtomicFile.write(spark.sparkContext.hadoopConfiguration,
+        joinViewPositionPath(viewDir), pos.toString)
 
   /** Streaming JOIN-view topology: the q174 algebra under the streaming
     * contract — one checkpointed foreachBatch keeps both primaries current

@@ -192,7 +192,6 @@ object IndexLifecycle {
         lines.drop(1).filter(_.nonEmpty).map(_.toInt).toSet
       case None => Set.empty
     }
-    val metaNow = TargetMeta.read(hconf, store).get
     val todo = CdcApplier.bucketIds(fs, store).filterNot(done).take(maxBuckets)
     // The whole ≤maxBuckets slice seeds as ONE apply (optimization round
     // 15): per-bucket applies each rewrote every index bucket the slice's
@@ -203,8 +202,7 @@ object IndexLifecycle {
     // lands AFTER the apply, so a crash mid-slice re-seeds the slice,
     // which is idempotent (same keys, same positions).
     if (todo.nonEmpty) {
-      val live = CdcApplier.liveRead(spark, Some(metaNow), storeDir,
-        todo.map(b => s"$storeDir/$BUCKET=$b"))
+      val live = CdcApplier.liveBuckets(spark, storeDir, todo)
       // seed rows apply AT THEIR OWN POSITIONS: a change that raced the
       // seed (already maintained into the index at position p) re-applies
       // value-identical at the same p — LWW folds it; a LATER change

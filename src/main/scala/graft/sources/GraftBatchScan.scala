@@ -9,10 +9,11 @@ import org.apache.spark.sql.catalyst.{expressions => ex}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics, SupportsRuntimeFiltering}
+import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
 import org.apache.spark.sql.graft.ParquetReadShim
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{IntegerType, StructType}
 import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarBatch, ColumnarMap, ColumnVector}
 
 import graft.cdc.CdcApplier
@@ -73,12 +74,30 @@ import graft.cdc.CdcApplier.TargetMeta
   * (q278) and `KeyGroupedPartitioning` (q255) only on a [[wholeTable]]
   * read — the table-level numbers and the full bucket layout describe
   * nothing narrower.
+  *
+  * The applier's bucket-set mode (`applier`, `buckets`, `dvEvidence`;
+  * constructor-only, no read option): the applier's own version reads —
+  * `compactMor`, `vacuumMor`'s collapsed part, `rollback`'s two sides,
+  * `compact`'s rewrite, the copy-on-write merge's current side and the
+  * bucket-slice readers ([[CdcApplier.storedVersions]]). It serves the
+  * STORED frame under physical names: every stored column (dropped ones
+  * too — a drop is meta-only), `_graft_pos`, `_graft_deleted` with
+  * tombstones KEPT (the replay guard a rewrite must carry), and
+  * `graft_bucket` from the partition's bucket id (a constant vector when
+  * columnar, as Spark's file scan serves partition values); `fullSchema`,
+  * `required` and `pushed` are unused. Bucket ids without a directory
+  * plan nothing; `asOf` cuts without the serving history guard; and
+  * `dvEvidence` (on-disk `dv-` files the caller listed) forces the resolve
+  * that serving reads leave to the meta flag (the documented
+  * [[CdcApplier.applyBatchDv]] crash window). No runtime filtering, no
+  * reported ordering or partitioning.
   */
 class GraftBatchScan(
     spark: SparkSession, targetDir: String, fullSchema: StructType,
     required: StructType, pushed: Array[Filter], spjCapable: Boolean = false,
     asOf: Option[Long] = None, limit: Option[Int] = None,
-    branch: Option[String] = None)
+    branch: Option[String] = None, buckets: Option[Seq[Int]] = None,
+    applier: Boolean = false, dvEvidence: Boolean = false)
     extends Scan with Batch with SupportsRuntimeFiltering with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
@@ -93,9 +112,10 @@ class GraftBatchScan(
     case Some(name) => Some(graft.cdc.Branch.branchMeta(spark, targetDir, name))
     case None       => TargetMeta.read(hconf, target)
   }
-  asOf.foreach(pos => CdcApplier.requireHistory(meta.getOrElse(
-    throw new IllegalStateException(s"no graft table state at $targetDir")),
-    targetDir, pos, "asOfPos"))
+  if (!applier)
+    asOf.foreach(pos => CdcApplier.requireHistory(meta.getOrElse(
+      throw new IllegalStateException(s"no graft table state at $targetDir")),
+      targetDir, pos, "asOfPos"))
 
   /** Each side's directory and the `_graft_pos` cut its rows must pass. */
   private val sides: Seq[(Path, Option[Long])] = branch match {
@@ -117,10 +137,15 @@ class GraftBatchScan(
   /** Latest-per-key resolution required? MOR delta chains (unless proven
     * compacted), dv-bearing COW, and every history read (a cut version
     * chain, or main plus a branch's deltas) — [[CdcApplier.needsResolve]]'s
-    * rule, refined by the compaction proof this scan can additionally use. */
+    * rule, refined by the compaction proof this scan can additionally use —
+    * and an applier read holding on-disk `dv-` evidence. */
   private val mustResolve =
-    (isMor && !morCompacted) || dvOutstanding || sides.exists(_._2.isDefined)
+    (isMor && !morCompacted) || dvOutstanding || sides.exists(_._2.isDefined) ||
+      dvEvidence
   private val pkCols: Seq[String] = meta.flatMap(_.pkCols).getOrElse(Seq.empty)
+  if (mustResolve && pkCols.isEmpty)
+    throw new IllegalStateException(
+      s"version-bearing read of $targetDir: the layout has no persisted PK")
   private val bucketCols: Seq[String] =
     meta.flatMap(m => m.bucketCols.orElse(m.pkCols)).getOrElse(Seq.empty)
 
@@ -130,15 +155,17 @@ class GraftBatchScan(
     sides.flatMap(s => CdcApplier.bucketIds(fs, s._1)).distinct.sorted
 
   /** The buckets the pushed predicates cover — computed once, here. */
-  private val staticBuckets: Seq[Int] =
-    GraftScan.coveredBuckets(meta, fullSchema, pushed, allBuckets)
+  private val staticBuckets: Seq[Int] = buckets match {
+    case Some(bs) => allBuckets.filter(bs.toSet)
+    case None     => GraftScan.coveredBuckets(meta, fullSchema, pushed, allBuckets)
+  }
 
   /** A plain current-state read of the whole table: no history, no limit,
     * and no pushed predicate bounded the bucket key. The only shape that
     * ANALYZEd statistics and the bucket layout describe, and the only one
     * a current-state index route may replace ([[graft.plans.GraftIndexRoute]]). */
   def wholeTable: Boolean =
-    asOf.isEmpty && branch.isEmpty && limit.isEmpty && allBuckets.nonEmpty &&
+    !applier && asOf.isEmpty && branch.isEmpty && limit.isEmpty && allBuckets.nonEmpty &&
       staticBuckets.size == allBuckets.size
 
   /** The covered buckets of the CURRENT execution: the static coverage,
@@ -170,7 +197,7 @@ class GraftBatchScan(
     * query projecting none of the key columns must still plan), and the
     * pruning arithmetic needs a value set for every bucket column anyway. */
   override def filterAttributes(): Array[NamedReference] =
-    if (bucketCols.nonEmpty && bucketCols.forall(required.fieldNames.contains))
+    if (!applier && bucketCols.nonEmpty && bucketCols.forall(required.fieldNames.contains))
       bucketCols.map(c => Expressions.column(c)).toArray
     else Array.empty
 
@@ -187,15 +214,7 @@ class GraftBatchScan(
     * BUCKET column is the directory, never in the files). Read as fully
     * nullable — a file written before an additive evolution lacks the new
     * columns and the reader surfaces NULL. */
-  private val fileSchema: StructType = {
-    val stored = meta.flatMap(_.schemaJson) match {
-      case Some(j) => DataType.fromJson(j).asInstanceOf[StructType]
-      case None =>
-        spark.read.option("mergeSchema", true).parquet(targetDir).schema
-    }
-    StructType(stored.fields.filterNot(_.name == CdcApplier.BUCKET)
-      .map(_.copy(nullable = true)))
-  }
+  private val fileSchema: StructType = CdcApplier.storedFileSchema(spark, meta, targetDir)
 
   /** LOGICAL query name → the PHYSICAL name files/footers/sidecars carry
     * (q258 column mapping; identity when the table has no renames). */
@@ -217,7 +236,7 @@ class GraftBatchScan(
     * always (the tombstone filter). Field lookups are by PHYSICAL name; the
     * output's ordinal contract makes the logical/physical naming moot at
     * runtime (InternalRows carry no names). */
-  private val readInternal: StructType = {
+  private val readInternal: StructType = if (applier) fileSchema else {
     val have = required.fieldNames.toSet
     val extras = (if (mustResolve) pkCols :+ CdcApplier.POS else Seq.empty) ++
       Seq(CdcApplier.DEL)
@@ -226,14 +245,20 @@ class GraftBatchScan(
   }
   private def ord(c: String): Int = readInternal.fieldNames.indexOf(c)
 
-  override def readSchema(): StructType = required
+  /** The served columns: the query's, or the applier's stored frame (the
+    * file schema, then the bucket id). */
+  private val served: StructType =
+    if (applier) fileSchema.add(CdcApplier.BUCKET, IntegerType) else required
+
+  override def readSchema(): StructType = served
   override def toBatch: Batch = this
 
   override def description(): String =
-    s"GraftBatchScan $targetDir runtime-filterable " +
+    s"GraftBatchScan $targetDir ${if (applier) "applier" else "runtime-filterable"} " +
       s"buckets=${activeBuckets.size}/${allBuckets.size}" +
       (if (lastPlannedFiles._2 >= 0)
         s" files=${lastPlannedFiles._1}/${lastPlannedFiles._2}" else "") +
+      (if (applier && mustResolve) " resolving" else "") +
       limit.fold("")(n => s" limit=$n") +
       asOf.fold("")(p => s" asOfPos=$p") +
       branch.fold("")(b => s" branch=$b") +
@@ -287,7 +312,7 @@ class GraftBatchScan(
     // live MOR delta chains, dv-bearing COW and history reads refuse; a
     // COMPACTED mor (q276 — `sorted` set by compactMor, cleared by any
     // delta) streams in file order and MAY report, exactly like sorted COW
-    if (mustResolve || sortedPhys.isEmpty) (Seq.empty, Map.empty)
+    if (applier || mustResolve || sortedPhys.isEmpty) (Seq.empty, Map.empty)
     else {
       val logicalSorted = sortedPhys.map(c => CdcApplier.logicalName(meta, c))
       val present = logicalSorted.takeWhile(required.fieldNames.contains)
@@ -355,8 +380,9 @@ class GraftBatchScan(
     val inner = ParquetReadShim.parquetReaderFactory(spark, fileSchema, readInternal, safe)
     new GraftResolvingReaderFactory(inner, mustResolve,
       pkCols.map(ord).toArray, ord(CdcApplier.POS), ord(CdcApplier.DEL),
-      readInternal, required.indices.toArray, limit,
-      if (mustResolve) GraftResolvingReaderFactory.rowFilter(safe, readInternal) else None)
+      readInternal, (if (applier) readInternal.indices else required.indices).toArray, limit,
+      if (mustResolve) GraftResolvingReaderFactory.rowFilter(safe, readInternal) else None,
+      applier)
   }
 
   /** This scan's rows outside a Spark plan — the V1-resolved relation
@@ -422,12 +448,14 @@ case class GraftBucketPartition(
   * LIMIT cap. A one-version read with no cut and no LIMIT needs only the
   * tombstone filter and the projection, and stays columnar: each decoded
   * batch is served as its required column vectors, narrowed to its live
-  * rows ([[SelectedColumnVector]]) when it holds a tombstone. */
+  * rows ([[SelectedColumnVector]]) when it holds a tombstone. The
+  * applier's read (`applier`) keeps tombstones and appends the bucket id
+  * as a last column. */
 class GraftResolvingReaderFactory(
     inner: PartitionReaderFactory, val resolve: Boolean,
     pkOrdinals: Array[Int], posOrdinal: Int, delOrdinal: Int,
     readSchema: StructType, outOrdinals: Array[Int], limit: Option[Int],
-    keyFilter: Option[Expression] = None)
+    keyFilter: Option[Expression] = None, applier: Boolean = false)
     extends PartitionReaderFactory {
 
   private def sidesOf(partition: InputPartition): Seq[(InputPartition, Option[Long])] =
@@ -439,15 +467,25 @@ class GraftResolvingReaderFactory(
     }
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
+    val bucket = partition.asInstanceOf[GraftBucketPartition].bucketId
     val readers = sidesOf(partition).map { case (fp, _) => inner.createColumnarReader(fp) }
     val batches = readers.iterator.flatMap(r =>
-      Iterator.continually(r).takeWhile(_.next()).map(_.get())).map(liveColumns)
+      Iterator.continually(r).takeWhile(_.next()).map(_.get()))
+      .map(b => if (applier) withBucket(b, bucket) else liveColumns(b))
     new PartitionReader[ColumnarBatch] {
       private var cur: ColumnarBatch = _
       override def next(): Boolean = batches.hasNext && { cur = batches.next(); true }
       override def get(): ColumnarBatch = cur
       override def close(): Unit = readers.foreach(_.close())
     }
+  }
+
+  /** A decoded batch's served columns, every row, then `bucket` as a
+    * constant column. */
+  private def withBucket(b: ColumnarBatch, bucket: Int): ColumnarBatch = {
+    val id = new ConstantColumnVector(b.numRows, IntegerType)
+    id.setInt(bucket)
+    new ColumnarBatch(outOrdinals.map(b.column) :+ id, b.numRows)
   }
 
   /** A decoded batch's served columns, over its live rows only (a NULL
@@ -471,9 +509,9 @@ class GraftResolvingReaderFactory(
   }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    def proj(ords: Array[Int]): UnsafeProjection = UnsafeProjection.create(
-      ords.toIndexedSeq.map(i =>
-        BoundReference(i, readSchema(i).dataType, nullable = true)))
+    def refs(ords: Array[Int]): Seq[Expression] = ords.toIndexedSeq.map(i =>
+      BoundReference(i, readSchema(i).dataType, nullable = true))
+    def proj(ords: Array[Int]): UnsafeProjection = UnsafeProjection.create(refs(ords))
     val sides = sidesOf(partition)
     val readers = sides.map { case (fp, _) => inner.createReader(fp) }
     val cutRows = readers.iterator.zip(sides.iterator.map(_._2)).flatMap {
@@ -489,9 +527,12 @@ class GraftResolvingReaderFactory(
       val pred = ex.Predicate.createInterpreted(f)
       cutRows.filter(pred.eval)
     }
-    val outProj = proj(outOrdinals)
+    val outProj =
+      if (applier) UnsafeProjection.create(refs(outOrdinals) :+
+        Literal(partition.asInstanceOf[GraftBucketPartition].bucketId))
+      else proj(outOrdinals)
     val live = (if (resolve) latestPerKey(versions, proj(pkOrdinals)) else versions)
-      .filter(r => !r.isNullAt(delOrdinal) && !r.getBoolean(delOrdinal))
+      .filter(r => applier || (!r.isNullAt(delOrdinal) && !r.getBoolean(delOrdinal)))
       .map(outProj(_))
     val capped = limit.fold(live)(live.take)
     new PartitionReader[InternalRow] {
@@ -503,11 +544,11 @@ class GraftResolvingReaderFactory(
   }
 
   /** The bucket is key-complete, so latest-per-key resolves READER-LOCALLY:
-    * a hashmap from the PK projection to the newest version's row
-    * ([[graft.cdc.CdcApplier.resolveOnRead]]'s semantics: newest
+    * a hashmap from the PK projection to the newest version's row (newest
     * `_graft_pos` wins; replay duplicates are value-identical, so the
-    * first-seen tie winner is the same row). Memory is the bucket's
-    * RESOLVED working set. */
+    * first-seen tie winner is the same row — the rule
+    * [[graft.cdc.CdcApplier.live]]'s window applies too). Memory is the
+    * bucket's RESOLVED working set. */
   private def latestPerKey(rows: Iterator[InternalRow], keyProj: UnsafeProjection)
       : Iterator[InternalRow] = {
     val winners = new java.util.HashMap[UnsafeRow, (Long, InternalRow)]()

@@ -2,10 +2,14 @@ package org.apache.spark.sql.graft
 
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.classic.Dataset
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.execution.datasources.{FilePartition, InMemoryFileIndex, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -22,7 +26,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (additive evolution), vectorized decode, and row-group skipping for the
   * pushed filters. Only the PARTITION PLANNING stays graft-side: one input
   * partition per bucket directory, because a bucket is key-complete and
-  * that is what makes reader-local merge-on-read resolution sound.
+  * that is what makes reader-local merge-on-read resolution sound. The
+  * applier's own reads frame a built scan directly ([[scanFrame]]:
+  * `Dataset.ofRows` is `private[sql]`).
   */
 object ParquetReadShim {
   /** Spark's parquet reader factory for (dataSchema → readDataSchema) with
@@ -40,6 +46,19 @@ object ParquetReadShim {
       classic, classic.sessionState.newHadoopConf(), index,
       dataSchema, readDataSchema, new StructType(), filters,
       CaseInsensitiveStringMap.empty()).createReaderFactory()
+  }
+
+  /** A frame over an already-built scan: the scan's own
+    * `DataSourceV2ScanRelation` leaf, planned by Spark's V2 strategy into
+    * a `BatchScanExec` (no RDD wrapper hides it from the plan). The graft
+    * applier's version reads ride this; serving reads take the ordinary
+    * `DataFrameReader` route, whose pushdown builds the scan. */
+  def scanFrame(spark: SparkSession, table: Table, scan: Scan): DataFrame = {
+    val output = DataTypeUtils.toAttributes(scan.readSchema())
+    val relation = DataSourceV2Relation(
+      table, output, None, None, CaseInsensitiveStringMap.empty())
+    Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      DataSourceV2ScanRelation(relation, scan, output))
   }
 
   /** One FilePartition over one bucket directory's files. */

@@ -231,4 +231,33 @@ class OptR15Spec extends AnyFunSuite {
     assert(got == expect)
     IndexLifecycle.dropIndex(spark, store, "v")
   }
+
+  test("join view: a batch of only other tables' rows still advances the position watermark") {
+    val root = Files.createTempDirectory("graft_optr15j").toString
+    val (fact, dim, view) = (s"$root/o", s"$root/c", s"$root/v")
+    val factSchema = StructType(Seq(StructField("o_orderkey", LongType),
+      StructField("o_custkey", LongType)))
+    val dimSchema = StructType(Seq(StructField("c_custkey", LongType),
+      StructField("c_name", org.apache.spark.sql.types.StringType)))
+    def envelope(rows: Seq[(String, Long, String)]) =
+      rows.toDF("table", "next_position", "after_json")
+        .select(lit("insert").as("op"), $"table", $"next_position",
+          lit(null).cast("string").as("before_json"), $"after_json")
+    def apply(rows: Seq[(String, Long, String)]): Unit =
+      IncrementalView.applyJoinViewBatch(spark, envelope(rows),
+        "orders", factSchema, "customer", dimSchema, fact, dim, view,
+        Seq("o_orderkey"), Seq("c_custkey"), "o_orderkey", "o_custkey", "c_custkey")
+    apply(Seq(
+      ("orders", 10L, """{"o_orderkey":1,"o_custkey":7}"""),
+      ("customer", 20L, """{"c_custkey":7,"c_name":"a"}""")))
+    assert(IncrementalView.joinViewPosition(spark, view).contains(20L))
+    assert(CdcApplier.snapshot(spark, view).count() == 1L)
+    // only another table's rows: nothing to maintain, positions consumed
+    apply(Seq(("lineitem", 30L, "{}"), ("lineitem", 40L, "{}")))
+    assert(IncrementalView.joinViewPosition(spark, view).contains(40L))
+    // a replayed older batch never lowers it
+    apply(Seq(("lineitem", 30L, "{}")))
+    assert(IncrementalView.joinViewPosition(spark, view).contains(40L))
+    assert(CdcApplier.snapshot(spark, view).count() == 1L)
+  }
 }
