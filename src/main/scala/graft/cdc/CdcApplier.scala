@@ -683,27 +683,30 @@ object CdcApplier {
           throw new IllegalStateException(s"no graft table state at $dir")))
     else readStored(spark, meta, paths, if (paths == Seq(dir)) None else Some(dir))
 
-  /** The live rows of an EXPLICIT path set ([[storedSlice]] resolved by
-    * [[live]]) as a V1 parquet read: the epoch pin's exact file set and
-    * the subtrees optimizer rules splice into a plan after V2 pushdown has
-    * run. Every other read of a table goes through the connector's one
-    * scan ([[connectorRead]], [[storedVersions]]). */
-  private[graft] def liveRead(
-      spark: SparkSession, meta: Option[TargetMeta], targetDir: String,
-      paths: Seq[String], below: DataFrame => DataFrame = identity): DataFrame =
-    live(storedSlice(spark, meta, targetDir, paths), meta, below)
-
-  /** [[liveRead]] of a whole table directory, after [[openTarget]]: the
-    * read an optimizer rule splices in after V2 pushdown has run, where an
-    * unpushed connector relation cannot be planned. A table with no bucket
-    * dirs left is an empty frame. */
-  private[graft] def liveDir(spark: SparkSession, dir: String): DataFrame = {
-    val target = new Path(dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = target.getFileSystem(hconf)
-    openTarget(fs, target)
-    liveRead(spark, TargetMeta.read(hconf, target), dir,
-      if (bucketIds(fs, target).nonEmpty) Seq(dir) else Nil)
+  /** The live rows of an EXPLICIT file set, as a V1 parquet read: the
+    * epoch pin's exact files ([[graft.streaming.StreamingPipeline]]'s
+    * `consistentSnapshot`, whose snapshot's `inputFiles` must be that
+    * set). [[storedSlice]], logicalized (the result speaks LOGICAL names),
+    * resolved latest-per-key when the layout holds versions
+    * ([[needsResolve]]), then tombstones, `_graft_deleted` and
+    * `graft_bucket` drop; `_graft_pos` stays. Key columns never rename, so
+    * the physical PK partitions the resolve: a window where the newest
+    * `_graft_pos` wins (replay duplicates are value-identical, so the
+    * row_number tie is harmless). Every other read of a table resolves
+    * inside [[graft.sources.GraftBatchScan]]'s reader. */
+  private[graft] def liveRead(spark: SparkSession, meta: Option[TargetMeta],
+      targetDir: String, paths: Seq[String]): DataFrame = {
+    val versions = logicalize(storedSlice(spark, meta, targetDir, paths), meta)
+    val resolved =
+      if (needsResolve(meta)) {
+        val pk = meta.flatMap(_.pkCols).getOrElse(
+          throw new IllegalStateException("version-bearing layout has no persisted PK"))
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(pk.map(col): _*).orderBy(col(POS).desc)
+        versions.withColumn("_graft_rn", row_number().over(w))
+          .filter(col("_graft_rn") === 1).drop("_graft_rn")
+      } else versions
+    resolved.filter(!col(DEL)).drop(DEL, BUCKET)
   }
 
   /** The persisted meta a read entry point checks its guards against,
@@ -725,32 +728,6 @@ object CdcApplier {
       options: (String, String)*): DataFrame =
     spark.read.format("graft").options(options.toMap).load(targetDir)
 
-  /** Stored versions → live rows: logicalize (so `below` and the result
-    * speak LOGICAL names), apply `below`, resolve latest-per-key when the
-    * layout holds versions ([[needsResolve]]), drop tombstones,
-    * `_graft_deleted` and `graft_bucket`. `_graft_pos` stays. `below` must
-    * not change a key's latest version — on a version-bearing layout only
-    * PK-referencing filters qualify (a key's versions agree on its PK).
-    * Key columns never rename, so the physical PK partitions the resolve:
-    * a window where the newest `_graft_pos` wins (replay duplicates are
-    * value-identical, so the row_number tie is harmless). Only the epoch
-    * pin, the index route's two sides and [[liveDir]] resolve here; every
-    * other read resolves inside [[graft.sources.GraftBatchScan]]'s reader. */
-  private[graft] def live(versions: DataFrame, meta: Option[TargetMeta],
-      below: DataFrame => DataFrame = identity): DataFrame = {
-    val filtered = below(logicalize(versions, meta))
-    val resolved =
-      if (needsResolve(meta)) {
-        val pk = meta.flatMap(_.pkCols).getOrElse(
-          throw new IllegalStateException("version-bearing layout has no persisted PK"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(pk.map(col): _*).orderBy(col(POS).desc)
-        filtered.withColumn("_graft_rn", row_number().over(w))
-          .filter(col("_graft_rn") === 1).drop("_graft_rn")
-      } else filtered
-    resolved.filter(!col(DEL)).drop(DEL, BUCKET)
-  }
-
   /** The applier's read of its own stored versions: one
     * [[graft.sources.GraftBatchScan]] in its applier mode, framed so the
     * plan shows the scan. The STORED frame — every stored column under its
@@ -768,6 +745,24 @@ object CdcApplier {
       applier = true, dvEvidence = dvEvidence)
     org.apache.spark.sql.graft.ParquetReadShim.scanFrame(spark,
       new graft.sources.GraftTable(targetDir, scan.readSchema()), scan)
+  }
+
+  /** The connector's current-state scan of `dir` as a plan leaf, for the
+    * reads an optimizer rule splices in after V2 pushdown has run
+    * ([[graft.plans.GraftIndexRoute]], [[graft.plans.GraftViewRewrite]]):
+    * the `DataSourceV2ScanRelation` over one [[graft.sources.GraftBatchScan]]
+    * that pushdown would have built — `filters` pushed, then the read
+    * pruned to the LOGICAL `columns`. The caller evaluates `filters` above
+    * it, as Spark does above every pushed scan. */
+  private[graft] def scanRelation(spark: SparkSession, dir: String,
+      columns: Seq[String], filters: Seq[org.apache.spark.sql.sources.Filter])
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+    val schema = graft.sources.GraftTable.tableSchema(spark, dir)
+    val builder = new graft.sources.GraftScanBuilder(spark, dir, schema)
+    builder.pushFilters(filters.toArray)
+    builder.pruneColumns(StructType(columns.distinct.map(schema(_))))
+    org.apache.spark.sql.graft.ParquetReadShim.scanRelation(
+      new graft.sources.GraftTable(dir, schema), builder.build())
   }
 
   /** The live form of a [[storedVersions]] bucket-set read, for the

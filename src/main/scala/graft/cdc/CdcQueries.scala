@@ -43,6 +43,22 @@ object CdcQueries {
   private case class Lifecycle(orders: DataFrame, cur: DataFrame,
       batches: Seq[DataFrame])
 
+  /** Whether `plan` reads the connector's scan of the table at `dir`. */
+  private def readsDir(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      dir: String): Boolean =
+    graft.sources.GraftBatchScan.readsOf(plan)
+      .exists(_._1 == new org.apache.hadoop.fs.Path(dir).toUri.getPath)
+
+  /** Whether the executed `df` read the index at `index` and pruned its
+    * scan of the store at `store` at run time. */
+  private def routedAtRunTime(df: DataFrame, store: String, index: String): Boolean = {
+    val plan = df.queryExecution.optimizedPlan
+    readsDir(plan, index) && graft.sources.GraftBatchScan.readsOf(plan).exists {
+      case (d, scan) =>
+        d == new org.apache.hadoop.fs.Path(store).toUri.getPath && scan.runtimeFiltered
+    }
+  }
+
   private def lifecycle(s: SparkSession, dir: String): Lifecycle = {
     import s.implicits._
     val o = Tables.load(s, dir, "orders")
@@ -1322,8 +1338,8 @@ object CdcQueries {
       try {
         val q = Tables.load(s, dir, "orders")
           .groupBy($"o_orderpriority").agg(count(lit(1)).as("cnt"))
-        val opt = q.queryExecution.optimizedPlan.toString
-        require(!opt.contains("Aggregate [") && opt.contains("_graft_deleted"),
+        val opt = q.queryExecution.optimizedPlan
+        require(!opt.toString.contains("Aggregate [") && readsDir(opt, viewDir),
           "view rewrite did not fire; plan still aggregates the base:\n" + opt)
         // execute UNDER the registration; the checkpointed result is what
         // the driver hashes
@@ -1402,8 +1418,8 @@ object CdcQueries {
             min($"o_totalprice").as("mn"),
             max($"o_totalprice").as("mx"),
             avg($"o_totalprice").as("avg_price"))
-        val opt = q.queryExecution.optimizedPlan.toString
-        require(!opt.contains("Aggregate [") && opt.contains("_graft_deleted"),
+        val opt = q.queryExecution.optimizedPlan
+        require(!opt.toString.contains("Aggregate [") && readsDir(opt, viewDir),
           "stats-view rewrite did not fire; plan still aggregates the base:\n" + opt)
         q.orderBy($"o_orderpriority").localCheckpoint()
       } finally graft.plans.GraftViewRewrite.unregisterStats(
@@ -1456,16 +1472,16 @@ object CdcQueries {
           .agg(count(lit(1)).as("cnt"),
             graft.util.Sumd.sumd($"o_totalprice").as("total"))
           .select($"c_nationkey".cast("string").as("grp"), $"cnt", $"total")
-        val jopt = ja.queryExecution.optimizedPlan.toString
-        require(!jopt.contains("Join ") && jopt.contains("_graft_deleted"),
+        val jopt = ja.queryExecution.optimizedPlan
+        require(!jopt.toString.contains("Join ") && readsDir(jopt, jview),
           "join rewrite did not fire; plan still joins the bases:\n" + jopt)
         val sa = Tables.load(s, dir, "orders")
           .groupBy($"o_orderpriority")
           .agg(count(lit(1)).as("cnt"), sum($"o_totalprice").as("total"),
             min($"o_totalprice").as("mn"), max($"o_totalprice").as("mx"),
             avg($"o_totalprice").as("avg_price"))
-        val sopt = sa.queryExecution.optimizedPlan.toString
-        require(sopt.contains("_graft_deleted"),
+        val sopt = sa.queryExecution.optimizedPlan
+        require(readsDir(sopt, sview),
           "group-subset rewrite did not fire; plan still scans the base:\n" + sopt)
         ja.select($"grp", $"cnt", $"total",
             lit(null).cast("double").as("mn"), lit(null).cast("double").as("mx"),
@@ -2992,13 +3008,13 @@ object CdcQueries {
         val routed = routedDf.collect()
         require(GraftIndexRoute.fired > f0,
           "the rewrite must fire on the catalog SQL point predicate")
-        require(!routedDf.queryExecution.executedPlan.toString.contains("GraftBatchScan"),
-          "the routed plan must replace the full V2 scan with the lookup chain")
+        require(routedAtRunTime(routedDf, store, index),
+          "the routed plan must read the index and prune its store scan at run time")
         GraftIndexRoute.unregister(store, "o_custkey")
         val plainDf = query()
         val plain = plainDf.collect()
-        require(plainDf.queryExecution.executedPlan.toString.contains("GraftBatchScan"),
-          "without the route the catalog read keeps its full-coverage V2 scan")
+        require(!readsDir(plainDf.queryExecution.optimizedPlan, index),
+          "without the route no index scan remains")
         require(routed.map(_.toString).sorted.toSeq ==
           plain.map(_.toString).sorted.toSeq,
           "routed and unrouted catalog answers must be identical")
@@ -4135,16 +4151,9 @@ object CdcQueries {
           .filter($"o_custkey" >= 10L && $"o_custkey" <= 30L)
           .select($"o_orderkey", $"o_custkey", $"o_totalprice")
         // exact scan-source audit (plan STRINGS truncate long file lists):
-        // every parquet relation's root paths, classified store vs index
+        // every graft scan's table dir, classified store vs index
         def scanRoots(df: DataFrame): Seq[String] =
-          df.queryExecution.optimizedPlan.collect {
-            case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-              r.relation match {
-                case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-                  f.location.rootPaths.map(_.toUri.getPath)
-                case _ => Seq.empty[String]
-              }
-          }.flatten
+          graft.sources.GraftBatchScan.readsOf(df.queryExecution.optimizedPlan).map(_._1)
         def under(p: String, dir: String) = p == dir || p.startsWith(dir + "/")
         // the wide covered RANGE routes even under a tiny key cap — the
         // one-hop form never fetches keys to the driver
@@ -4262,21 +4271,14 @@ object CdcQueries {
              FROM q245cat.prod.orders_cidx
              WHERE o_custkey >= 10 AND o_custkey <= 30""")
         def scanRoots(df: DataFrame): Seq[String] =
-          df.queryExecution.optimizedPlan.collect {
-            case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-              r.relation match {
-                case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-                  f.location.rootPaths.map(_.toUri.getPath)
-                case _ => Seq.empty[String]
-              }
-          }.flatten
+          graft.sources.GraftBatchScan.readsOf(df.queryExecution.optimizedPlan).map(_._1)
         def under(p: String, d: String) = p == d || p.startsWith(d + "/")
         val f1 = GraftIndexRoute.fired
         val pDf = pointQ(); val routedP = pDf.collect()
         require(GraftIndexRoute.fired > f1,
           "the routed point query must fire after completion")
-        require(!pDf.queryExecution.executedPlan.toString.contains("GraftBatchScan"),
-          "the routed plan replaces the full V2 scan")
+        require(routedAtRunTime(pDf, store, idx),
+          "the routed plan reads the index and prunes its store scan at run time")
         require(scanRoots(pDf).exists(under(_, store)),
           "the non-covered projection is a two-hop route (store fetch)")
         // the covered RANGE routes uncapped (one hop, nothing driver-side)
@@ -4305,8 +4307,8 @@ object CdcQueries {
         val plainRowsC = covQ().collect()
         require(GraftIndexRoute.fired == f4,
           "after drop_index nothing may route")
-        require(plainP.queryExecution.executedPlan.toString.contains("GraftBatchScan"),
-          "after drop_index the full-coverage V2 scan returns")
+        require(!readsDir(plainP.queryExecution.optimizedPlan, idx),
+          "after drop_index no index scan remains")
         require(routedP.map(_.toString).sorted.toSeq ==
           plainRowsP.map(_.toString).sorted.toSeq,
           "routed and post-drop point answers must be identical")
@@ -4396,6 +4398,7 @@ object CdcQueries {
       s.sql(s"""CREATE TABLE q245cat.prod.orders_cidx2 (${o.schema.toDDL})
                 OPTIONS (pk 'o_orderkey', buckets '8')""")
       val store = s"$whRoot/prod/orders_cidx2"
+      val index = IndexLifecycle.indexDir(store, "o_custkey")
       val sopts = CdcApplier.Options(Seq("o_orderkey"))
       CdcApplier.applyBatch(s, ChangeFeed.inserts(o, $"o_orderkey" * 10), store, sopts)
       import graft.plans.GraftIndexRoute
@@ -4425,8 +4428,9 @@ object CdcQueries {
         val f1 = GraftIndexRoute.fired
         val routedDf = q(); val routed = routedDf.collect()
         require(GraftIndexRoute.fired > f1, "the DDL-built index must route")
-        require(!routedDf.queryExecution.executedPlan.toString
-          .contains("GraftBatchScan"), "the routed plan replaces the V2 scan")
+        val routedPlan = routedDf.queryExecution.optimizedPlan
+        require(readsDir(routedPlan, index) && !readsDir(routedPlan, store),
+          "the covered route reads the index alone")
         val li = s.sql(
           "CALL q245cat.system.indexes(table => 'prod.orders_cidx2')").collect()
         require(li.length == 1 && li(0).getString(0) == "o_custkey" &&
@@ -4436,8 +4440,8 @@ object CdcQueries {
         val f2 = GraftIndexRoute.fired
         val plainDf = q(); val plain = plainDf.collect()
         require(GraftIndexRoute.fired == f2, "after DROP INDEX nothing routes")
-        require(plainDf.queryExecution.executedPlan.toString
-          .contains("GraftBatchScan"), "the V2 scan returns after the drop")
+        require(!readsDir(plainDf.queryExecution.optimizedPlan, index),
+          "no index scan remains after the drop")
         require(routed.map(_.toString).sorted.toSeq ==
           plain.map(_.toString).sorted.toSeq,
           "routed and post-drop answers must be identical")
@@ -4571,6 +4575,7 @@ object CdcQueries {
       s.sql(s"""CREATE TABLE q245cat.prod.orders_resid (${o.schema.toDDL})
                 OPTIONS (pk 'o_orderkey', buckets '16')""")
       val store = s"$whRoot/prod/orders_resid"
+      val index = IndexLifecycle.indexDir(store, "o_custkey")
       val sopts = CdcApplier.Options(Seq("o_orderkey"))
       CdcApplier.applyBatch(s, ChangeFeed.inserts(o, $"o_orderkey" * 10), store, sopts)
       s.sql("""CALL q245cat.system.create_index(table => 'prod.orders_resid',
@@ -4593,8 +4598,8 @@ object CdcQueries {
         val routedDf = q(); val routed = routedDf.collect()
         require(GraftIndexRoute.fired > f0,
           "the routed-with-residual predicate must fire")
-        require(!routedDf.queryExecution.executedPlan.toString.contains("GraftBatchScan"),
-          "the routed plan replaces the full V2 scan")
+        require(routedAtRunTime(routedDf, store, index),
+          "the routed plan reads the index and prunes its store scan at run time")
         val d0 = GraftIndexRoute.declined
         s.sql("""SELECT o_orderkey FROM q245cat.prod.orders_resid
                  WHERE o_orderstatus = 'F'""").queryExecution.optimizedPlan
@@ -4603,8 +4608,8 @@ object CdcQueries {
         s.sql("""CALL q245cat.system.drop_index(table => 'prod.orders_resid',
                  column => 'o_custkey')""").collect()
         val plainDf = q(); val plain = plainDf.collect()
-        require(plainDf.queryExecution.executedPlan.toString.contains("GraftBatchScan"),
-          "after drop_index the full-coverage scan returns")
+        require(!readsDir(plainDf.queryExecution.optimizedPlan, index),
+          "after drop_index no index scan remains")
         require(routed.map(_.toString).sorted.toSeq ==
           plain.map(_.toString).sorted.toSeq,
           "routed-with-residual and scan answers must be identical")

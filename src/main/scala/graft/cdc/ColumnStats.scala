@@ -187,6 +187,9 @@ object ColumnStats {
     stats
   }
 
+  /** Range partitions of the histogram pass's (column, value) counts. */
+  private val RangeParts = 32
+
   /** Equi-height histograms for EVERY numeric/date column in ONE table
     * pass (q285; optimization r15, guide §2.3 "aggregate before you
     * shuffle"): the columns melt to (column-idx, value) pairs that
@@ -232,12 +235,18 @@ object ColumnStats {
       struct(lit(i).as("_i"), asD(c, kind).as("_hv"))
     }
     // the ONE table pass; materialized once (NDV-sized) — the bounds
-    // derivation and the bin-NDV aggregation both read it
+    // derivation and the bin-NDV aggregation both read it. Range-partitioned
+    // by (column, value) and stamped with its partition id, so no task
+    // sorts a column's whole distinct set, and every consumer reads the
+    // one physical partitioning (two exchanges could draw different range
+    // boundaries — [[graft.operators.Advanced.exactQuantiles]]' discipline)
     val vc = snap
       .select(explode(array(pairs: _*)).as("_s"))
       .select(col("_s._i").as("_i"), col("_s._hv").as("_hv"))
       .filter(col("_hv").isNotNull)
       .groupBy(col("_i"), col("_hv")).agg(count(lit(1)).as("_c"))
+      .repartitionByRange(RangeParts, col("_i"), col("_hv"))
+      .withColumn("_pid", spark_partition_id())
       .localCheckpoint()
     // the checkpoint's blocks are released on every exit, so repeated
     // ANALYZEs never accumulate cached RDDs
@@ -246,12 +255,19 @@ object ColumnStats {
       // [cum - c, cum); the value at rank r is the covering row's. Keep only
       // rows covering some quantile's floor/ceil rank — ≤ 2(k-1) rows per
       // column reach the driver (the contract-bounded collect class).
+      // A row's cum is its column's rows in earlier range partitions
+      // (a per-partition offset over <= RangeParts rows per column) plus
+      // the running count inside its own partition.
       import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("_i")).orderBy(col("_hv"))
-      val cum = vc
-        .withColumn("_cum",
-          sum(col("_c")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("_n", sum(col("_c")).over(Window.partitionBy(col("_i"))))
+      val offsets = vc.groupBy(col("_pid"), col("_i")).agg(sum(col("_c")).as("_pc"))
+        .withColumn("_off", coalesce(sum(col("_pc")).over(Window.partitionBy(col("_i"))
+          .orderBy(col("_pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .withColumn("_n", sum(col("_pc")).over(Window.partitionBy(col("_i"))))
+        .select(col("_pid"), col("_i"), col("_off"), col("_n"))
+      val local = Window.partitionBy(col("_pid"), col("_i")).orderBy(col("_hv"))
+        .rowsBetween(Window.unboundedPreceding, 0)
+      val cum = vc.join(broadcast(offsets), Seq("_pid", "_i"))
+        .withColumn("_cum", sum(col("_c")).over(local) + col("_off"))
       val needed = (1 until k).map { j =>
         val h = (col("_n") - lit(1L)).cast("double") * lit(j.toDouble / k)
         val loR = floor(h); val hiR = ceil(h)

@@ -1,19 +1,17 @@
 package graft.plans
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Cast, DynamicPruningSubquery, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, NamedExpression}
-import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, DynamicPruningSubquery, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, HintInfo, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graft.ColumnShim
+import org.apache.spark.sql.graft.ParquetReadShim
 
 import graft.cdc.CdcApplier
-import graft.cdc.CdcApplier.{BUCKET, TargetMeta}
+import graft.cdc.CdcApplier.TargetMeta
 
 /** AUTOMATIC secondary-index routing (q266/q273/q274) — the optimizer half
   * of q123's index machinery. The engine can MAINTAIN a secondary index (a
@@ -39,7 +37,10 @@ import graft.cdc.CdcApplier.{BUCKET, TargetMeta}
   * a current-state lookup must not impersonate, never route; neither does
   * a raw parquet read of the store directory, which serves every stored
   * version and tombstone. The emitted plan reads the index and, for a
-  * two-hop route, the store root through V1 live reads.
+  * two-hop route, the store through that same scan
+  * ([[CdcApplier.scanRelation]]): the routed predicate pushed, the read
+  * pruned to the columns the plan uses, latest-per-key resolved inside
+  * each bucket's reader.
   *
   * TWO predicate forms route:
   *  - point/IN (`col = lit`, `col IN (lits)`) — on any index layout;
@@ -67,11 +68,12 @@ import graft.cdc.CdcApplier.{BUCKET, TargetMeta}
   *
   * The rule decides from metadata and literals alone and runs no lookup:
   * it emits a plan whose lookup happens at EXECUTION — a left-semi join of
-  * the store's live read against the literal-filtered index read, the
-  * index side broadcast, and the store scan pruning its bucket directories
-  * at run time from that same broadcast (Spark's dynamic partition
-  * pruning). Two bounds remain, because a generated 50k-literal IN or a
-  * table-wide range must not become a lookup: an IN-list wider than
+  * the store's scan against the literal-filtered index scan, the index
+  * side broadcast, and the store scan pruning its buckets at run time from
+  * that same broadcast (Spark's dynamic partition pruning, through
+  * [[graft.sources.GraftBatchScan]]'s runtime filter). Two bounds remain,
+  * because a generated 50k-literal IN or a table-wide range must not
+  * become a lookup: an IN-list wider than
   * `spark.graft.indexroute.maxKeys` (default 1024) declines on the driver,
   * and a two-hop range whose index matches more than that many keys
   * declines after one bounded count over the covering index buckets — the
@@ -139,24 +141,22 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
 
   /** The routable predicate set on a registered indexed column, or None. */
   private sealed trait Form
-  private case class Points(values: Seq[Literal]) extends Form
-  private case class Range(lo: Option[Long], hi: Option[Long]) extends Form
-  private case class Route(col: AttributeReference, form: Form, indexDir: String)
+  private case class Points(keys: Int) extends Form
+  private case object Range extends Form
+  /** `conds`: the query's conjuncts that define the route. */
+  private case class Route(col: AttributeReference, form: Form, indexDir: String,
+      conds: Seq[Expression])
 
-  private def asLong(v: Any): Option[Long] = v match {
-    case n: java.lang.Number => Some(n.longValue)
-    case _                   => None
+  /** Whether a literal range bound routes: integral (rangeLookup's domain
+    * — the range-bucketed layouts are Long-keyed), and not a strict bound
+    * at the Long domain `edge`. `col > Long.MaxValue` / `col < Long.MinValue`
+    * are always-false predicates that the scan's bound arithmetic (`x + 1`)
+    * would wrap into whole-domain ranges, so they decline and the scan
+    * answers them. */
+  private def routable(v: Any, edge: Option[Long]): Boolean = v match {
+    case n: java.lang.Number => !edge.contains(n.longValue)
+    case _                   => false
   }
-
-  /** Strict-bound adjustment WITHOUT wraparound: `col > Long.MaxValue` /
-    * `col < Long.MinValue` are always-false predicates, and naive `x + 1`
-    * wraps them into whole-domain ranges — the route would then serve the
-    * ENTIRE index where the plan demands zero rows. A domain-edge strict
-    * bound declines instead (None), and the scan answers correctly. */
-  private def incExact(x: Long): Option[Long] =
-    if (x == Long.MaxValue) None else Some(x + 1)
-  private def decExact(x: Long): Option[Long] =
-    if (x == Long.MinValue) None else Some(x - 1)
 
   /** The routable predicate on a registered indexed column. Point/IN wins
     * over a range on ties; among several routable columns the name-least
@@ -164,117 +164,115 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
     * correct either way). */
   private def routeOf(cs: Seq[Expression], storePath: String): Option[Route] = {
     val points = cs.collect {
-      case EqualTo(a: AttributeReference, l @ Literal(v, _)) if v != null => (a, Seq(l))
-      case EqualTo(l @ Literal(v, _), a: AttributeReference) if v != null => (a, Seq(l))
-      case In(a: AttributeReference, vs) if vs.nonEmpty &&
-        vs.forall { case Literal(v, _) => v != null; case _ => false } =>
-        (a, vs.map(_.asInstanceOf[Literal]))
+      case e @ EqualTo(a: AttributeReference, Literal(v, _)) if v != null => (a, 1, e)
+      case e @ EqualTo(Literal(v, _), a: AttributeReference) if v != null => (a, 1, e)
+      case e @ In(a: AttributeReference, vs) if vs.nonEmpty &&
+        vs.forall { case Literal(v, _) => v != null; case _ => false } => (a, vs.size, e)
     }
-    // range conjuncts (q274): literal one-/two-sided bounds, integral only
-    // (rangeLookup's domain — the range-bucketed layouts are Long-keyed);
-    // a non-convertible bound still filters on top, never dropped
+    // range conjuncts (q274): literal one-/two-sided bounds; a bound that
+    // does not route still filters on top, never dropped
+    val (top, bottom) = (Some(Long.MaxValue), Some(Long.MinValue))
     val ranges = cs.collect {
-      case GreaterThan(a: AttributeReference, Literal(v, _)) if v != null =>
-        (a, asLong(v).flatMap(incExact).map(x => Range(Some(x), None)))
-      case GreaterThan(Literal(v, _), a: AttributeReference) if v != null =>
-        (a, asLong(v).flatMap(decExact).map(x => Range(None, Some(x))))
-      case GreaterThanOrEqual(a: AttributeReference, Literal(v, _)) if v != null =>
-        (a, asLong(v).map(x => Range(Some(x), None)))
-      case GreaterThanOrEqual(Literal(v, _), a: AttributeReference) if v != null =>
-        (a, asLong(v).map(x => Range(None, Some(x))))
-      case LessThan(a: AttributeReference, Literal(v, _)) if v != null =>
-        (a, asLong(v).flatMap(decExact).map(x => Range(None, Some(x))))
-      case LessThan(Literal(v, _), a: AttributeReference) if v != null =>
-        (a, asLong(v).flatMap(incExact).map(x => Range(Some(x), None)))
-      case LessThanOrEqual(a: AttributeReference, Literal(v, _)) if v != null =>
-        (a, asLong(v).map(x => Range(None, Some(x))))
-      case LessThanOrEqual(Literal(v, _), a: AttributeReference) if v != null =>
-        (a, asLong(v).map(x => Range(Some(x), None)))
+      case e @ GreaterThan(a: AttributeReference, Literal(v, _)) if v != null =>
+        (a, routable(v, top), e)
+      case e @ GreaterThan(Literal(v, _), a: AttributeReference) if v != null =>
+        (a, routable(v, bottom), e)
+      case e @ GreaterThanOrEqual(a: AttributeReference, Literal(v, _)) if v != null =>
+        (a, routable(v, None), e)
+      case e @ GreaterThanOrEqual(Literal(v, _), a: AttributeReference) if v != null =>
+        (a, routable(v, None), e)
+      case e @ LessThan(a: AttributeReference, Literal(v, _)) if v != null =>
+        (a, routable(v, bottom), e)
+      case e @ LessThan(Literal(v, _), a: AttributeReference) if v != null =>
+        (a, routable(v, top), e)
+      case e @ LessThanOrEqual(a: AttributeReference, Literal(v, _)) if v != null =>
+        (a, routable(v, None), e)
+      case e @ LessThanOrEqual(Literal(v, _), a: AttributeReference) if v != null =>
+        (a, routable(v, None), e)
     }
     val pointRoute = points
       .filter(p => indexes.containsKey((storePath, p._1.name)))
-      .sortBy(_._1.name).headOption.map { case (a, vs) =>
-        Route(a, Points(vs), indexes.get((storePath, a.name)))
+      .sortBy(_._1.name).headOption.map { case (a, n, e) =>
+        Route(a, Points(n), indexes.get((storePath, a.name)), Seq(e))
       }
     def rangeRoute = ranges
-      .filter(r => r._2.isDefined && indexes.containsKey((storePath, r._1.name)))
-      .groupBy(_._1.name).toSeq.sortBy(_._1).headOption.map { case (_, rs) =>
-        val a = rs.head._1
-        val merged = rs.flatMap(_._2).foldLeft(Range(None, None)) { (acc, r) =>
-          Range(
-            (acc.lo.toSeq ++ r.lo.toSeq).reduceOption(math.max(_: Long, _: Long)),
-            (acc.hi.toSeq ++ r.hi.toSeq).reduceOption(math.min(_: Long, _: Long)))
-        }
-        Route(a, merged, indexes.get((storePath, a.name)))
+      .filter(r => r._2 && indexes.containsKey((storePath, r._1.name)))
+      .groupBy(_._1.name).toSeq.sortBy(_._1).headOption.map { case (name, rs) =>
+        Route(rs.head._1, Range, indexes.get((storePath, name)), rs.map(_._3))
       }
     pointRoute.orElse(rangeRoute)
   }
 
-  /** The index side of a route: the index's live rows the routed literals
-    * select, read from only the index buckets they can live in, with the
-    * routed predicate below the resolve. The literals fix the bucket only
-    * when the index is bucketed on the routed column alone — point/IN
-    * literals map through [[CdcApplier.bucketIdsOf]] typed to the index
-    * column, a range to its contiguous covering buckets on a range layout
-    * (the arithmetic [[CdcApplier.rangeLookup]] uses). None declines
-    * (IN-list past the cap, layout ineligible). No Spark job runs. */
-  private def indexSide(spark: SparkSession, route: Route, idxMeta: TargetMeta)
-      : Option[DataFrame] = {
-    val name = route.col.name
-    if (idxMeta.bucketCols.orElse(idxMeta.pkCols) != Some(Seq(name))) return None
-    val c = col(name)
-    val (buckets, pred) = route.form match {
-      case Points(lits) =>
-        if (lits.size > maxKeys(spark)) return None
-        val t = CdcApplier.storedSchema(Some(idxMeta)).fold(route.col.dataType)(_(name).dataType)
-        val typed = lits.map(l => ColumnShim.column(if (l.dataType == t) l else Cast(l, t)))
-        (CdcApplier.bucketIdsOf(spark, typed.map(Seq(_)), idxMeta.numBuckets,
-          idxMeta.rangeBounds), c.isin(typed: _*))
-      case Range(lo, hi) =>
-        val bounds = idxMeta.rangeBounds.getOrElse(return None)
-        val (l, h) = (lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue))
-        (bounds.count(_ <= l) to bounds.count(_ <= h), c >= l && c <= h)
-    }
-    val dir = new Path(route.indexDir)
-    CdcApplier.openTarget(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
-    Some(CdcApplier.liveRead(spark, Some(idxMeta), route.indexDir, Seq(route.indexDir),
-      below = _.filter(col(BUCKET).isin(buckets.distinct: _*)).filter(pred)))
+  /** Marks the relations this rule splices in. The rule runs in a
+    * fixed-point batch and so sees its own output again, where the store's
+    * scan — a whole-table read of a registered store — must not be
+    * consulted (nor counted) as a fresh candidate. */
+  private val Spliced = TreeNodeTag[Unit]("graft.indexroute.spliced")
+
+  /** The connector's scan of `dir` ([[CdcApplier.scanRelation]]) pruned
+    * to `columns`, with the route's conjuncts pushed, marked spliced. */
+  private def splice(spark: SparkSession, dir: String, columns: Seq[String],
+      route: Route): LogicalPlan = {
+    val r = CdcApplier.scanRelation(spark, dir, columns,
+      route.conds.flatMap(ParquetReadShim.translateFilter))
+    r.setTagValue(Spliced, ())
+    r
   }
 
-  /** The two-hop store side: the store's live read over the whole table,
-    * left-semi joined below its resolve against the index side's
-    * (PK, store bucket) pairs. The bucket equality is exact by
-    * construction — the writer placed every row by that same
-    * [[CdcApplier.bucketExprCols]] — and lets the store scan prune its
-    * bucket directories at run time: a dynamic-pruning filter over the
-    * store relation reuses the join's broadcast (its build keys ARE the
-    * join's), and `onlyInBroadcast` keeps it from ever planning a second
-    * read of the index. The broadcast hint sits on the Join itself: hint
-    * wrappers are resolved before user rules run. Both the semi-join and
-    * the pruning filter reference only the PK, so they are safe below a
-    * version-bearing layout's resolve. None declines: a two-hop RANGE
-    * whose index matches more than the cap — the one data-dependent
-    * decline, and so the rule's one planning-time job. */
+  /** `e` over the same-named columns of another read. */
+  private def rebind(e: Expression, byName: Map[String, Attribute]): Expression =
+    e.transform { case a: AttributeReference => byName(a.name) }
+
+  /** The index side of a route: the index's live rows the route's
+    * conjuncts select, over the index's scan with those conjuncts pushed,
+    * whose own coverage then reads only the index buckets they can live in
+    * (as for [[CdcApplier.pointLookup]] and [[CdcApplier.rangeLookup]]).
+    * The conjuncts bound the bucket only when the index is bucketed on the
+    * routed column alone, and a range only on a range layout (on a hash
+    * layout it would read every index bucket). None declines (IN-list past
+    * the cap, layout or column type ineligible). No Spark job runs. */
+  private def indexSide(spark: SparkSession, route: Route, idxMeta: TargetMeta,
+      columns: Seq[String]): Option[LogicalPlan] = {
+    val name = route.col.name
+    if (idxMeta.bucketCols.orElse(idxMeta.pkCols) != Some(Seq(name))) return None
+    route.form match {
+      case Points(n) if n > maxKeys(spark)       => return None
+      case Range if idxMeta.rangeBounds.isEmpty => return None
+      case _ =>
+    }
+    val scan = splice(spark, route.indexDir, name +: columns, route)
+    val byName = scan.output.map(a => a.name -> a).toMap
+    if (byName(name).dataType != route.col.dataType) return None
+    Some(Filter(route.conds.map(rebind(_, byName)).reduce(And), scan))
+  }
+
+  /** The two-hop store side: the store's scan (the route's conjuncts
+    * pushed, pruned to `columns` and the PK), left-semi joined on the PK
+    * against the broadcast index side. A dynamic-pruning filter per store
+    * bucket column reuses that broadcast (`onlyInBroadcast`: never a
+    * second read of the index), and [[graft.sources.GraftBatchScan.filter]]
+    * maps its keys to their buckets at run time. The hint sits on the Join
+    * itself: hint wrappers are resolved before user rules run. None
+    * declines: a two-hop RANGE whose index matches more than the cap —
+    * the one data-dependent decline, and so the rule's one planning-time
+    * job. */
   private def storeSide(spark: SparkSession, route: Route, storePath: String,
-      storeMeta: TargetMeta, storePk: Seq[String], index: DataFrame): Option[LogicalPlan] = {
+      storeMeta: TargetMeta, storePk: Seq[String], columns: Seq[String],
+      index: LogicalPlan): Option[LogicalPlan] = {
     val cap = maxKeys(spark)
-    if (route.form.isInstanceOf[Range] && index.limit(cap + 1).count() > cap) return None
-    val keys = index.select(storePk.map(col) :+ CdcApplier.bucketExprCols(
-      storeMeta.bucketCols.getOrElse(storePk).map(col), storeMeta.numBuckets,
-      storeMeta.rangeBounds).as(BUCKET): _*)
-    val read = CdcApplier.liveRead(spark, Some(storeMeta), storePath, Seq(storePath),
-      below = _.join(keys, storePk :+ BUCKET, "left_semi"))
-    Some(read.queryExecution.analyzed.transformUp {
-      case j @ Join(_, _, LeftSemi, _, _) => j match {
-        case ExtractEquiJoinKeys(_, leftKeys, rightKeys, _, _, left, right, _) =>
-          val b = leftKeys.indexWhere(_.references.exists(_.name == BUCKET))
-          val pruning = DynamicPruningSubquery(leftKeys(b), right, rightKeys, Seq(b),
-            onlyInBroadcast = true)
-          j.copy(left = left.transformUp { case r: LogicalRelation => Filter(pruning, r) },
-            hint = JoinHint(None, Some(HintInfo(Some(BROADCAST)))))
-        case _ => j
-      }
-    })
+    if (route.form == Range &&
+      ParquetReadShim.frame(spark, index).limit(cap + 1).count() > cap) return None
+    val store = splice(spark, storePath, columns ++ storePk, route)
+    def attr(p: LogicalPlan, n: String): Attribute = p.output.find(_.name == n).get
+    val keys = storePk.map(k => (attr(store, k), attr(index, k)))
+    if (keys.exists { case (s, i) => s.dataType != i.dataType }) return None
+    val pruning = storeMeta.bucketCols.getOrElse(storePk).map { b =>
+      DynamicPruningSubquery(attr(store, b), index, keys.map(_._2),
+        Seq(storePk.indexOf(b)), onlyInBroadcast = true)
+    }
+    Some(Join(Filter(pruning.reduce(And), store), index, LeftSemi,
+      Some(keys.map { case (s, i) => EqualTo(s, i) }.reduce(And)),
+      JoinHint(None, Some(HintInfo(Some(BROADCAST))))))
   }
 
   private def rewrite(projList: Seq[NamedExpression], cond: Expression,
@@ -291,20 +289,20 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
       storeMeta <- TargetMeta.read(conf, new Path(storePath))
       storePk <- storeMeta.pkCols
       idxMeta <- TargetMeta.read(conf, new Path(route.indexDir))
-      index <- indexSide(spark, route, idxMeta)
-      refs = outAttrs.map(_.name) ++ kept.flatMap(_.references.map(_.name))
+      refs = (outAttrs.map(_.name) ++ kept.flatMap(_.references.map(_.name))).distinct
       // covered (q282; Phoenix's covered query): every projected and
       // filtered column lives on the index, so the index side IS the answer
       // and nothing touches the store. The layout offset `_graft_pos` is
       // NEVER covered: the index's positions are its own, not the store's.
-      covered = refs.forall(n => n != CdcApplier.POS && index.columns.contains(n))
-      served <- if (covered) Some(index.queryExecution.analyzed)
-        else storeSide(spark, route, storePath, storeMeta, storePk, index)
+      idxCols = graft.sources.GraftTable.tableSchema(spark, route.indexDir).fieldNames.toSet
+      covered = refs.forall(n => n != CdcApplier.POS && idxCols(n))
+      index <- indexSide(spark, route, idxMeta, if (covered) refs else storePk)
+      served <- if (covered) Some(index)
+        else storeSide(spark, route, storePath, storeMeta, storePk, refs, index)
       byName = served.output.map(a => a.name -> a).toMap
       if refs.forall(byName.contains)
     } yield Project(outAttrs.map(o => Alias(byName(o.name), o.name)(exprId = o.exprId)),
-      Filter(kept.map(_.transform { case a: AttributeReference => byName(a.name) })
-        .reduce(And), served))
+      Filter(kept.map(rebind(_, byName)).reduce(And), served))
   }
 
   /** [[rewrite]] with the rule's decline-on-ANY-failure contract: the body
@@ -331,7 +329,7 @@ object GraftIndexRoute extends Rule[LogicalPlan] {
     var landed = false
     def consult(p: LogicalPlan, projList: Seq[NamedExpression],
         cond: Expression, rel: DataSourceV2ScanRelation): LogicalPlan =
-      scanPath(rel).flatMap { sp =>
+      scanPath(rel).filter(_ => rel.getTagValue(Spliced).isEmpty).flatMap { sp =>
         if (!indexes.keySet().stream().anyMatch(_._1 == sp)) None
         else {
           consulted = true

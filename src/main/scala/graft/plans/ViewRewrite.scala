@@ -26,9 +26,11 @@ import graft.cdc.CdcApplier
   * parquet scan of the registered base path)` — one grouping column, one
   * COUNT(*), no filters (a filtered aggregate is NOT the view's content).
   * Anything else passes through untouched. The rewritten subtree is the
-  * view target's snapshot (tombstones filtered, latest state — the same
-  * read every other surface uses), with the original output `ExprId`s
-  * re-bound so parents above the aggregate are untouched.
+  * view target's current state (tombstones filtered, latest per key — the
+  * same read every other surface uses), with the original output `ExprId`s
+  * re-bound so parents above the aggregate are untouched. Each view read
+  * is the connector's one scan of the view store pruned to the columns it
+  * serves ([[CdcApplier.scanRelation]]), resolved inside its reader.
   *
   * Freshness is the registrar's contract, exactly as in every warehouse
   * MV system: registering `(basePath, groupCol) -> viewDir` asserts the
@@ -138,8 +140,7 @@ object GraftViewRewrite extends Rule[LogicalPlan] {
         case _ => None
       }
     } yield {
-      val viewPlan = CdcApplier.liveDir(SparkSession.active, viewDir)
-        .select(g.name, "cnt").queryExecution.analyzed
+      val viewPlan = CdcApplier.scanRelation(SparkSession.active, viewDir, Seq(g.name, "cnt"), Nil)
       val Seq(vg, vc) = viewPlan.output
       // re-bind the original ExprIds so everything ABOVE the aggregate
       // resolves unchanged
@@ -233,9 +234,8 @@ object GraftViewRewrite extends Rule[LogicalPlan] {
       val (_, viewDir, exact) = hit
       val qNames = groups.map(_.name).distinct
       if (exact) {
-        val viewPlan = CdcApplier.liveDir(SparkSession.active, viewDir)
-          .select((qNames ++ Seq("cnt", "sum", "mn", "mx", "avg")).map(org.apache.spark.sql.functions.col): _*)
-          .queryExecution.analyzed
+        val viewPlan = CdcApplier.scanRelation(SparkSession.active, viewDir,
+          qNames ++ Seq("cnt", "sum", "mn", "mx", "avg"), Nil)
         val byName: Map[String, Attribute] =
           viewPlan.output.map(a => a.name -> a).toMap
         val served = slots.map(_.get).map {
@@ -255,9 +255,8 @@ object GraftViewRewrite extends Rule[LogicalPlan] {
         // re-derives as the exact total over the total count in ONE double
         // division, the view's own discipline. Work is view-groups-sized;
         // the base never scans.
-        val viewPlan = CdcApplier.liveDir(SparkSession.active, viewDir)
-          .select((qNames ++ Seq("cnt", "sum", "mn", "mx")).map(org.apache.spark.sql.functions.col): _*)
-          .queryExecution.analyzed
+        val viewPlan = CdcApplier.scanRelation(SparkSession.active, viewDir,
+          qNames ++ Seq("cnt", "sum", "mn", "mx"), Nil)
         val byName: Map[String, Attribute] =
           viewPlan.output.map(a => a.name -> a).toMap
         def agg(fn: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction)
@@ -343,11 +342,14 @@ object GraftViewRewrite extends Rule[LogicalPlan] {
       _ <- if (keyNames == Set(jv.joinCol, jv.dimKey)) Some(()) else None
       _ <- if (output.map(_.name).distinct.length == output.length) Some(())
            else None
-      viewPlan = CdcApplier.liveDir(SparkSession.active, jv.viewDir)
-        .drop(CdcApplier.POS).queryExecution.analyzed
+      spark = SparkSession.active
+      viewCols = graft.sources.GraftTable.tableSchema(spark, jv.viewDir).fieldNames.toSet -
+        CdcApplier.POS
+      _ <- if (output.forall(o => viewCols(o.name) || o.name == jv.dimKey)) Some(())
+        else None
+      viewPlan = CdcApplier.scanRelation(spark, jv.viewDir,
+        output.map(o => if (viewCols(o.name)) o.name else jv.joinCol), Nil)
       byName: Map[String, Attribute] = viewPlan.output.map(a => a.name -> a).toMap
-      _ <- if (output.forall(o => byName.contains(o.name) || o.name == jv.dimKey))
-        Some(()) else None
     } yield Project(output.map { o =>
       val src = byName.getOrElse(o.name, byName(jv.joinCol))
       Alias(src, o.name)(exprId = o.exprId)

@@ -179,6 +179,9 @@ class GraftBatchScan(
   @volatile private var active: Seq[Int] = staticBuckets
   @volatile private var runtimeFilters: Array[Filter] = Array.empty
   def activeBuckets: Seq[Int] = active
+  /** Whether the current execution narrowed this scan with runtime
+    * filters — run-time pruning engaged, whatever it left. */
+  def runtimeFiltered: Boolean = runtimeFilters.nonEmpty
 
   /** What the last `planInputPartitions` actually planned — the seam the
     * q244 gate and specs assert pruning through. */
@@ -421,6 +424,20 @@ class GraftBatchScan(
   }
 }
 
+object GraftBatchScan {
+  /** The [[GraftBatchScan]]s a logical plan reads, each with its table
+    * directory as a scheme-less path. Execution runs these same scan
+    * objects, so their bucket state reads back after it. The seam the
+    * gates and specs check the optimizer rules' spliced reads through. */
+  def readsOf(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Seq[(String, GraftBatchScan)] = plan.collect {
+    case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+      (r.relation.table, r.scan)
+  }.collect {
+    case (t: GraftTable, s: GraftBatchScan) => (new Path(t.targetDir).toUri.getPath, s)
+  }
+}
+
 /** One bucket's read: per side, that side's files and the `_graft_pos` cut
   * its rows must pass, plus the bucket id as the partition key — the
   * [[org.apache.spark.sql.connector.read.HasPartitionKey]] carrier Spark's
@@ -547,7 +564,7 @@ class GraftResolvingReaderFactory(
     * a hashmap from the PK projection to the newest version's row (newest
     * `_graft_pos` wins; replay duplicates are value-identical, so the
     * first-seen tie winner is the same row — the rule
-    * [[graft.cdc.CdcApplier.live]]'s window applies too). Memory is the
+    * [[graft.cdc.CdcApplier.liveRead]]'s window applies too). Memory is the
     * bucket's RESOLVED working set. */
   private def latestPerKey(rows: Iterator[InternalRow], keyProj: UnsafeProjection)
       : Iterator[InternalRow] = {

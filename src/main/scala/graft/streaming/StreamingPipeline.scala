@@ -551,8 +551,9 @@ object StreamingPipeline {
       * The pin is on FILE SIGNATURES, not positions: each table's live
       * data files, listed straight from the filesystem
       * ([[liveDataFiles]]), must hash to the signature the marker recorded
-      * for its table, and its snapshot is a live read ([[CdcApplier.liveRead]])
-      * of exactly those files — so the snapshot's `inputFiles` is that set,
+      * for its table, and its snapshot is a live read ([[CdcApplier.liveRead]],
+      * the one V1 read left: a connector scan lists its buckets itself and
+      * cannot be handed a file set) of exactly those files — so the snapshot's `inputFiles` is that set,
       * and a caller re-verifies it against the marker after materializing.
       * Position/marker checks alone are not airtight — two q115-hunted
       * races get through them: (1) data swaps BEFORE the high-water file

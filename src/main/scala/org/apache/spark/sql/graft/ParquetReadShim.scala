@@ -4,11 +4,13 @@ import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan}
-import org.apache.spark.sql.execution.datasources.{FilePartition, InMemoryFileIndex, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, FilePartition, InMemoryFileIndex, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.Filter
@@ -27,8 +29,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * pushed filters. Only the PARTITION PLANNING stays graft-side: one input
   * partition per bucket directory, because a bucket is key-complete and
   * that is what makes reader-local merge-on-read resolution sound. The
-  * applier's own reads frame a built scan directly ([[scanFrame]]:
-  * `Dataset.ofRows` is `private[sql]`).
+  * applier's own reads and the optimizer rules' spliced reads wrap a
+  * built scan directly ([[scanRelation]], [[scanFrame]]: `Dataset.ofRows`
+  * is `private[sql]`).
   */
 object ParquetReadShim {
   /** Spark's parquet reader factory for (dataSchema → readDataSchema) with
@@ -48,18 +51,31 @@ object ParquetReadShim {
       CaseInsensitiveStringMap.empty()).createReaderFactory()
   }
 
-  /** A frame over an already-built scan: the scan's own
-    * `DataSourceV2ScanRelation` leaf, planned by Spark's V2 strategy into
-    * a `BatchScanExec` (no RDD wrapper hides it from the plan). The graft
-    * applier's version reads ride this; serving reads take the ordinary
-    * `DataFrameReader` route, whose pushdown builds the scan. */
-  def scanFrame(spark: SparkSession, table: Table, scan: Scan): DataFrame = {
+  /** An already-built scan's own `DataSourceV2ScanRelation` leaf — the
+    * node `V2ScanRelationPushDown` would have produced — planned by
+    * Spark's V2 strategy into a `BatchScanExec` (no RDD wrapper hides it
+    * from the plan). The graft applier's version reads and the subtrees
+    * the optimizer rules splice in ride this; serving reads take the
+    * ordinary `DataFrameReader` route, whose pushdown builds the scan. */
+  def scanRelation(table: Table, scan: Scan): DataSourceV2ScanRelation = {
     val output = DataTypeUtils.toAttributes(scan.readSchema())
-    val relation = DataSourceV2Relation(
-      table, output, None, None, CaseInsensitiveStringMap.empty())
-    Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      DataSourceV2ScanRelation(relation, scan, output))
+    DataSourceV2ScanRelation(
+      DataSourceV2Relation(table, output, None, None, CaseInsensitiveStringMap.empty()),
+      scan, output)
   }
+
+  /** The data-source form of a Catalyst predicate, when it has one — the
+    * translation V2 pushdown applies (`translateFilter` is `protected[sql]`). */
+  def translateFilter(e: Expression): Option[Filter] =
+    DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = false)
+
+  /** A frame over a resolved logical plan. */
+  def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A frame over an already-built scan ([[scanRelation]]). */
+  def scanFrame(spark: SparkSession, table: Table, scan: Scan): DataFrame =
+    frame(spark, scanRelation(table, scan))
 
   /** One FilePartition over one bucket directory's files. */
   def bucketPartition(index: Int, files: Seq[FileStatus]): InputPartition =

@@ -217,6 +217,44 @@ class OptR15Spec extends AnyFunSuite {
     assert(m.bucketMaxPos.contains(expect))
   }
 
+  test("mor publish folds its watermarks from the footers and runs no read-back query") {
+    // the happy path never reaches the distributed max(_graft_pos)
+    // fallback: every query the publish runs is captured, and none is the
+    // per-bucket position aggregate over the files it just wrote
+    val store = Files.createTempDirectory("graft_optr15f").toString + "/store"
+    val data = spark.range(1, 41).select($"id".as("k"), ($"id" % 7).as("v"))
+    CdcApplier.applyBatchMor(spark, ChangeFeed.inserts(data, $"k" * 10), store, opts)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        seen.add(qe.analyzed)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        seen.add(qe.analyzed)
+    }
+    org.apache.spark.sql.graft.ListenerDrain(spark)
+    spark.listenerManager.register(listener)
+    try {
+      CdcApplier.applyBatchMor(spark,
+        ChangeFeed.updates(data.filter($"k" % 3 === 0), Map("v" -> ($"v" + 1)),
+          $"k" * 10 + 5), store, opts)
+      org.apache.spark.sql.graft.ListenerDrain(spark)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val plans = seen.asScala.toSeq
+    assert(plans.nonEmpty, "the listener must see the publish's own queries")
+    val readBacks = plans.filter(_.exists {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
+        a.groupingExpressions.exists(_.references.exists(_.name == CdcApplier.BUCKET)) &&
+          a.aggregateExpressions.exists(_.toString.contains(s"max(${CdcApplier.POS}"))
+      case _ => false
+    })
+    assert(readBacks.isEmpty, s"the footer fast path ran the read-back: $readBacks")
+    assert(metaOf(store).maxPos.contains(400L))
+  }
+
   test("index seed slices still resume and converge after the grouped apply") {
     val store = newStore(30)
     val r1 = IndexLifecycle.createIndex(spark, store, "v", maxBuckets = 1)

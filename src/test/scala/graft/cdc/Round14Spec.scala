@@ -174,15 +174,10 @@ class Round14Spec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  /** The executed file scans whose root is `dir`, AQE stages included. */
-  private def scansOf(df: DataFrame, dir: String) = {
-    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    val root = new Path(dir).toUri.getPath
-    helper.collect(df.queryExecution.executedPlan) {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec
-          if f.relation.location.rootPaths.map(_.toUri.getPath) == Seq(root) => f
-    }
-  }
+  /** The graft scans of the table at `dir` that `df` executes. */
+  private def scansOf(df: DataFrame, dir: String) =
+    graft.sources.GraftBatchScan.readsOf(df.queryExecution.optimizedPlan)
+      .collect { case (d, scan) if d == new Path(dir).toUri.getPath => scan }
 
   /** Stored buckets holding the given store keys. */
   private def bucketsOf(store: String, keys: Seq[Long]): Long =
@@ -210,7 +205,7 @@ class Round14Spec extends AnyFunSuite {
       val n = CdcApplier.bucketIds(fsOf(store), new Path(store)).size
       assert(k > 0 && k < n, s"the fixture must match a strict bucket subset: $k/$n")
       assert(storeScans.size == 1, s"one store scan: $storeScans")
-      assert(storeScans.head.metrics("numPartitions").value == k,
+      assert(storeScans.head.lastPlannedBuckets.size == k,
         "the store scan must prune to the matched keys' buckets at run time")
     } else assert(storeScans.isEmpty, "a covered route never reads the store")
     unroute()
